@@ -299,6 +299,10 @@ def _jvm_gc(spark) -> None:
 
 
 def main() -> None:
+    # a process that runs main() more than once must not carry an earlier
+    # run's draws into this run's artifact
+    for draws in PROBE_OBS.values():
+        draws.clear()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -568,19 +572,20 @@ def main() -> None:
             )
             qdrift = max(qdrift, 1.0)
             query_retried = {}
-            for name in list(timings) if not cpus_mismatch else []:
-                pa = prev_q.get(name)
-                if not pa or max(pa, timings[name]) < 1.0:
-                    continue
-                if timings[name] / pa / qdrift > 1.5:
-                    obs = _time_query(name)
-                    query_retried[name] = round(obs[0], 3)
-                    if obs[0] < timings[name]:
-                        timings[name] = round(obs[0], 3)
-                        query_spread[name] = [
-                            round(obs[0], 3),
-                            round(obs[-1], 3),
-                        ]
+            if not cpus_mismatch:
+                for name in list(timings):
+                    pa = prev_q.get(name)
+                    if not pa or max(pa, timings[name]) < 1.0:
+                        continue
+                    if timings[name] / pa / qdrift > 1.5:
+                        obs = _time_query(name)
+                        query_retried[name] = round(obs[0], 3)
+                        if obs[0] < timings[name]:
+                            timings[name] = round(obs[0], 3)
+                            query_spread[name] = [
+                                round(obs[0], 3),
+                                round(obs[-1], 3),
+                            ]
             if query_retried:
                 print(
                     json.dumps(
@@ -611,29 +616,30 @@ def main() -> None:
             # stabilizes — every member gets at most one retry, so this
             # terminates in ≤ a handful of passes.
             retried = {}
-            for _ in range(5) if not cpus_mismatch else []:
-                fresh = [
-                    o
-                    for o in compare_report.get("offenders", [])
-                    if o["member"] not in retried
-                ]
-                if not fresh:
-                    break
-                for o in fresh:
-                    suite, name = o["member"].split("/", 1)
-                    obs = _time_member(
-                        spark, sf_dir, name, member_reps, warmup
-                    )
-                    members[suite][name] = round(obs[len(obs) // 2], 3)
-                    member_spread[suite][name] = [
-                        round(obs[0], 3),
-                        round(obs[-1], 3),
+            if not cpus_mismatch:
+                for _ in range(5):
+                    fresh = [
+                        o
+                        for o in compare_report.get("offenders", [])
+                        if o["member"] not in retried
                     ]
-                    retried[o["member"]] = members[suite][name]
-                compare_report = _bc.compare(
-                    prev,
-                    {"members": members, "member_spread": member_spread},
-                )
+                    if not fresh:
+                        break
+                    for o in fresh:
+                        suite, name = o["member"].split("/", 1)
+                        obs = _time_member(
+                            spark, sf_dir, name, member_reps, warmup
+                        )
+                        members[suite][name] = round(obs[len(obs) // 2], 3)
+                        member_spread[suite][name] = [
+                            round(obs[0], 3),
+                            round(obs[-1], 3),
+                        ]
+                        retried[o["member"]] = members[suite][name]
+                    compare_report = _bc.compare(
+                        prev,
+                        {"members": members, "member_spread": member_spread},
+                    )
             if retried:
                 compare_report["retried_members"] = retried
         except Exception as e:  # a broken/old artifact never sinks the bench

@@ -6,16 +6,25 @@ Efficient Text Classification") — as single-node C++ called from the
 driver, exchanging models through the shared filesystem
 (reference 02_merchcat_ml.py:64-83, utils/merchcat_utils.py:30-54 —
 SURVEY.md §2.11 M1). This engine expresses the same model family as a
-distributed MLlib Pipeline:
+distributed MLlib pipeline of five fitted stages:
 
-    RegexTokenizer → NGram(2..n) → concat → HashingTF(bucket) →
-    StringIndexer(label) → LogisticRegression(multinomial) → IndexToString
+    RegexTokenizer → SQLTransformer(word + char n-grams, concat) →
+    HashingTF(bucket) → LogisticRegression(multinomial) → IndexToString
 
 fasttext's `bucket` (2,000,000 in the reference, 02_merchcat_ml.py:77)
-maps to HashingTF `numFeatures`; `wordNgrams` to the NGram range; the
-softmax layer to multinomial logistic regression. Parity is judged on
-metric equivalence (accuracy distribution), not per-prediction identity —
-the hash families differ (SURVEY.md §4.3).
+maps to HashingTF `numFeatures`; `wordNgrams` to the n-gram range, built
+with NGram's semantics from native higher-order functions in the one SQL
+stage; the softmax layer to multinomial logistic regression.
+
+The StringIndexer that maps labels to LR's class indices is fitted and
+applied to the training frame only. Its labels ride in IndexToString, so
+scoring needs no label column: a row whose label is null or was not a
+training class is scored like any other, never dropped. The tokenizer
+stays a RegexTokenizer: its Java `toLowerCase` differs from SQL `lower()`
+on some non-ASCII letters, so an SQL tokenizer would change the features.
+
+Parity is judged on metric equivalence (accuracy distribution), not
+per-prediction identity — the hash families differ (SURVEY.md §4.3).
 
 Scoring is `PipelineModel.transform` — pure JVM, distributed, no pyfunc
 spark_udf round-trip and no shared-filesystem model hack
@@ -26,12 +35,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml import PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import (
     HashingTF,
     IndexToString,
-    NGram,
     RegexTokenizer,
     SQLTransformer,
     StringIndexer,
@@ -81,34 +89,28 @@ class NarrativeClassifier:
             toLowercase=True,
         )
         gram_cols = ["_tokens"]
-        grams = []
         for n in range(2, self.ngram_max + 1):
-            out = f"_grams_{n}"
-            grams.append(NGram(n=n, inputCol="_tokens", outputCol=out))
-            gram_cols.append(out)
+            # NGram(n) semantics: every window of n consecutive tokens
+            # joined by ' ', none when the row has fewer than n tokens
+            gram_cols.append(
+                f"CASE WHEN size(_tokens) >= {n} THEN transform(sequence(1, "
+                f"size(_tokens) - {n - 1}), i -> array_join(slice(_tokens, "
+                f"i, {n}), ' ')) ELSE array() END"
+            )
         if self.char_ngram_max:
             if not (1 <= self.char_ngram_min <= self.char_ngram_max):
                 raise ValueError(
                     "char_ngram range must satisfy 1 <= min <= max"
                 )
-            # one SQLTransformer per subword width — plain codegen HOFs
-            # over the token array, so the fitted PipelineModel stays a
-            # stock MLlib pipeline (serializable, JVM-side scoring). A
-            # token shorter than the padded width contributes its whole
-            # '<token>' once (fasttext keeps short subwords the same way).
+            # one expression per subword width. A token shorter than the
+            # padded width contributes its whole '<token>' once (fasttext
+            # keeps short subwords the same way).
             for n in range(self.char_ngram_min, self.char_ngram_max + 1):
-                out = f"_cgrams_{n}"
-                grams.append(
-                    SQLTransformer(
-                        statement=(
-                            "SELECT *, flatten(transform(_tokens, t -> "
-                            "transform(sequence(1, greatest(length(t) + "
-                            f"{3 - n}, 1)), i -> substring(concat('<', t, "
-                            f"'>'), i, {n})))) AS {out} FROM __THIS__"
-                        )
-                    )
+                gram_cols.append(
+                    "flatten(transform(_tokens, t -> transform(sequence(1, "
+                    f"greatest(length(t) + {3 - n}, 1)), i -> substring("
+                    f"concat('<', t, '>'), i, {n}))))"
                 )
-                gram_cols.append(out)
         if self.extra_tokens_col:
             # NULL-proof: concat() returns NULL if ANY operand is NULL,
             # which would crash HashingTF downstream — a row with no
@@ -116,7 +118,10 @@ class NarrativeClassifier:
             gram_cols.append(
                 f"coalesce({self.extra_tokens_col}, array())"
             )
-        concat = SQLTransformer(
+        # every n-gram family in one statement of native higher-order
+        # functions, so the fitted PipelineModel stays a stock MLlib
+        # pipeline (serializable, JVM-side scoring)
+        grams = SQLTransformer(
             statement=(
                 "SELECT *, concat(" + ", ".join(gram_cols) + ") AS _all_grams "
                 "FROM __THIS__"
@@ -139,20 +144,22 @@ class NarrativeClassifier:
             regParam=self.reg_param,
             elasticNetParam=self.elastic_net,
         )
-        return tokenizer, grams, concat, tf, indexer, lr
+        return tokenizer, grams, tf, indexer, lr
 
     def fit(self, train: DataFrame) -> "NarrativeClassifierModel":
-        tokenizer, grams, concat, tf, indexer, lr = self._stages()
+        tokenizer, grams, tf, indexer, lr = self._stages()
+        # the indexer only labels the training frame: inside the scoring
+        # pipeline its handleInvalid="skip" would drop every row whose
+        # label is null or unseen
         indexer_model = indexer.fit(train)
+        featurize = PipelineModel(stages=[tokenizer, grams, tf])
+        lr_model = lr.fit(featurize.transform(indexer_model.transform(train)))
         decode = IndexToString(
             inputCol="_pred_idx",
             outputCol=self.prediction_col,
             labels=indexer_model.labels,
         )
-        pipeline = Pipeline(
-            stages=[tokenizer, *grams, concat, tf, indexer_model, lr, decode]
-        )
-        model = pipeline.fit(train)
+        model = PipelineModel(stages=[*featurize.stages, lr_model, decode])
         _strip_training_summaries(model)
         return NarrativeClassifierModel(model, self)
 
@@ -182,6 +189,8 @@ def _strip_training_summaries(pipeline_model: PipelineModel) -> None:
             jobj.setSummary(jvm.scala.Option.empty())
 
 
+# `_label_idx`, `_grams_*` and `_cgrams_*` are emitted only by models
+# saved with the earlier seven-stage layout, which still load
 _INTERNAL_COLS = ("_tokens", "_all_grams", "_features", "_label_idx", "_pred_idx")
 
 

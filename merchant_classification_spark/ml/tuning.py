@@ -292,17 +292,18 @@ def tune_with_crossvalidator(
     Complements the engine's other tuning shapes (grid / driver-parallel
     / TPE / SparkTrials): CV re-uses folds instead of a held-out split —
     the right call when labeled data is scarce (the reference's rare
-    merchant classes, 01_merchcat_etl.py:138-153). The evaluator scores
-    the INDEX-space prediction so no decode stage runs inside the k×|grid|
-    inner fits; the decode transformer is attached once to the winner.
+    merchant classes, 01_merchcat_etl.py:138-153). The indexer stays in
+    the k×|grid| inner fits because the evaluator scores the INDEX-space
+    prediction; the winner is returned as `NarrativeClassifier.fit` builds
+    its model, without the indexer and with the decode stage attached.
     """
     from pyspark.ml import Pipeline, PipelineModel
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.feature import IndexToString
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    tokenizer, grams, concat, tf, indexer, lr = base._stages()
-    pipeline = Pipeline(stages=[tokenizer, *grams, concat, tf, indexer, lr])
+    tokenizer, grams, tf, indexer, lr = base._stages()
+    pipeline = Pipeline(stages=[tokenizer, grams, tf, indexer, lr])
     param_grid = (
         ParamGridBuilder()
         .addGrid(lr.regParam, list(reg_params))
@@ -321,20 +322,13 @@ def tune_with_crossvalidator(
         seed=seed,
     )
     cv_model = cv.fit(train)
-    best_pm = cv_model.bestModel
-    indexer_model = next(
-        s for s in best_pm.stages if s.__class__.__name__ == "StringIndexerModel"
-    )
+    *featurize, indexer_model, best_lr = cv_model.bestModel.stages
     decode = IndexToString(
         inputCol="_pred_idx",
         outputCol=base.prediction_col,
         labels=indexer_model.labels,
     )
-    full = PipelineModel(stages=list(best_pm.stages) + [decode])
-    best_lr = next(
-        s for s in best_pm.stages
-        if s.__class__.__name__ == "LogisticRegressionModel"
-    )
+    full = PipelineModel(stages=[*featurize, best_lr, decode])
     best_params = {
         "reg_param": best_lr.getRegParam(),
         "max_iter": best_lr.getMaxIter(),

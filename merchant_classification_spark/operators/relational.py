@@ -41,17 +41,26 @@ def accuracy_report(
     flag produces the identical result with ONE shuffle instead of two
     shuffles plus a join — the shape that survives 100 TB.
     """
-    flag = F.when(F.col(prediction_col) == F.col(label_col), 1).otherwise(0)
     group = group_col or label_col
+    return accuracy_by_group(df, label_col, prediction_col, group).orderBy(
+        F.col("accuracy").desc(), F.col(group)
+    )
+
+
+def accuracy_by_group(
+    df: DataFrame, label_col: str, prediction_col: str, group_col: str
+) -> DataFrame:
+    """`accuracy_report`'s rows unsorted: (group_col, predicted, total,
+    accuracy), one hash aggregate and no range sort."""
+    flag = F.when(F.col(prediction_col) == F.col(label_col), 1).otherwise(0)
     return (
         df.withColumn("predicted", flag)
-        .groupBy(group)
+        .groupBy(group_col)
         .agg(
             F.sum("predicted").alias("predicted"),
             F.count(F.lit(1)).alias("total"),
         )
         .withColumn("accuracy", F.col("predicted") / F.col("total"))
-        .orderBy(F.col("accuracy").desc(), F.col(group))
     )
 
 

@@ -62,7 +62,13 @@ def _folded_double_lit(nested, depth: int) -> Column:
         schema = "double"
         for _ in range(depth):
             schema = f"array<{schema}>"
-        return F.from_json(F.lit(json.dumps(nested)), schema)
+        # FAILFAST: a constant that does not match the schema errors when
+        # the optimizer folds it, instead of folding to a null
+        return F.from_json(
+            F.lit(json.dumps(nested, allow_nan=False)),
+            schema,
+            options={"mode": "FAILFAST"},
+        )
 
     def render(x) -> str:
         if isinstance(x, (list, tuple)):

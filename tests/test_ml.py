@@ -3,12 +3,21 @@ in-engine evaluation metrics; full ETL → train → score round trip."""
 
 import random
 
+import numpy as np
 import pytest
+from pyspark.ml import Pipeline
+from pyspark.ml.feature import NGram, SQLTransformer
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.ml.classifier import NarrativeClassifier
-from merchant_classification_spark.ml.evaluate import evaluate_per_class
+from merchant_classification_spark.ml.evaluate import (
+    QUANTILES,
+    evaluate_per_class,
+    percentile,
+)
+from merchant_classification_spark.operators.relational import accuracy_report
 from merchant_classification_spark.pipelines.etl import etl_pipeline
+from merchant_classification_spark.streaming.enrichment import enrich_stream
 
 MERCHANTS = {
     "starbucks": "starbucks coffee {n} london",
@@ -62,14 +71,17 @@ def test_evaluate_per_class(labeled):
 def test_model_save_load(labeled, tmp_path):
     from merchant_classification_spark.ml.classifier import NarrativeClassifierModel
 
-    clf = NarrativeClassifier(ngram_max=2, num_features=1 << 14, max_iter=10)
-    model = clf.fit(labeled)
-    path = str(tmp_path / "model")
-    model.save(path)
-    reloaded = NarrativeClassifierModel.load(path, clf)
-    a = model.transform(labeled).select("pr_merchant").collect()
-    b = reloaded.transform(labeled).select("pr_merchant").collect()
-    assert a == b
+    for i, grams in enumerate(
+        [dict(ngram_max=2), dict(ngram_max=3, char_ngram_min=2, char_ngram_max=4)]
+    ):
+        clf = NarrativeClassifier(num_features=1 << 14, max_iter=10, **grams)
+        model = clf.fit(labeled)
+        path = str(tmp_path / f"model{i}")
+        model.save(path)
+        reloaded = NarrativeClassifierModel.load(path, clf)
+        a = model.transform(labeled).select("pr_merchant").collect()
+        b = reloaded.transform(labeled).select("pr_merchant").collect()
+        assert a == b
 
 
 def test_etl_to_model_roundtrip(spark):
@@ -190,3 +202,153 @@ def test_extra_tokens_col_null_rows_survive(labeled, spark):
     )
     model = clf.fit(df)  # previously raised on the NULL rows
     assert model.transform(df).count() == 60
+
+
+def test_fitted_stages_are_scoring_only(labeled):
+    model = NarrativeClassifier(num_features=1 << 12, max_iter=5).fit(labeled)
+    assert [type(s).__name__ for s in model.pipeline_model.stages] == [
+        "RegexTokenizer",
+        "SQLTransformer",
+        "HashingTF",
+        "LogisticRegressionModel",
+        "IndexToString",
+    ]
+
+
+def test_scoring_keeps_null_and_unseen_labels(labeled, spark):
+    """Scoring needs no label: a row whose label is null or was not a
+    training class gets a prediction like any other row, through
+    model.transform and through enrich_stream."""
+    model = NarrativeClassifier(num_features=1 << 14, max_iter=10).fit(labeled)
+    raw = spark.createDataFrame(
+        [
+            (None, "starbucks coffee 1234 london"),
+            ("corner shop", "amzn mktp 5678 lux"),
+            ("tesco", "tesco stores 4321 gbp"),
+        ],
+        "tr_merchant string, tr_description string",
+    )
+    cleaned = raw.withColumn("tr_description_clean", F.col("tr_description"))
+    for scored in (model.transform(cleaned), enrich_stream(raw, model=model)):
+        rows = scored.select("tr_merchant", "pr_merchant").collect()
+        assert [r.tr_merchant for r in rows] == [None, "corner shop", "tesco"]
+        assert all(r.pr_merchant is not None for r in rows)
+
+
+def _stock_gram_stages(clf):
+    """The n-gram chain as stock stages: one NGram per word width, one
+    SQLTransformer per subword width, then a concat stage."""
+    stages, cols = [], ["_tokens"]
+    for n in range(2, clf.ngram_max + 1):
+        stages.append(NGram(n=n, inputCol="_tokens", outputCol=f"_grams_{n}"))
+        cols.append(f"_grams_{n}")
+    for n in range(clf.char_ngram_min, clf.char_ngram_max + 1):
+        stages.append(
+            SQLTransformer(
+                statement=(
+                    "SELECT *, flatten(transform(_tokens, t -> transform("
+                    f"sequence(1, greatest(length(t) + {3 - n}, 1)), i -> "
+                    f"substring(concat('<', t, '>'), i, {n})))) AS _cgrams_{n} "
+                    "FROM __THIS__"
+                )
+            )
+        )
+        cols.append(f"_cgrams_{n}")
+    cols.append(f"coalesce({clf.extra_tokens_col}, array())")
+    stages.append(
+        SQLTransformer(
+            statement=f"SELECT *, concat({', '.join(cols)}) AS _all_grams FROM __THIS__"
+        )
+    )
+    return stages
+
+
+GRAMS_CLF = NarrativeClassifier(
+    ngram_max=3,
+    char_ngram_min=2,
+    char_ngram_max=4,
+    num_features=1 << 12,
+    max_iter=10,
+    extra_tokens_col="side",
+)
+
+
+def test_fused_grams_equal_stock_chain(spark):
+    texts = [
+        "",
+        "   ",
+        "single",
+        "two Words",
+        "a bb ccc dddd eeeee ffffff",
+        "Ⱟ Ꟁ 𐕰 ΟΔΟΣ café  naïve\tStraße\nİstanbul",
+    ]
+    sides = [None, ["x"], None, [], ["tag a", "b"], None]
+    df = spark.createDataFrame(
+        [(i, t, s) for i, (t, s) in enumerate(zip(texts, sides))],
+        "id int, tr_description_clean string, side array<string>",
+    )
+    tokenizer, grams, _, _, _ = GRAMS_CLF._stages()
+    fused = grams.transform(tokenizer.transform(df))
+    stock = Pipeline(stages=[tokenizer, *_stock_gram_stages(GRAMS_CLF)]).fit(df)
+    expected = stock.transform(df)
+    got = {r.id: r._all_grams for r in fused.select("id", "_all_grams").collect()}
+    want = {r.id: r._all_grams for r in expected.select("id", "_all_grams").collect()}
+    assert got == want
+    assert got[0] == [] and got[1] == ["x"]
+
+
+def test_lr_coefficients_equal_stock_pipeline(labeled):
+    """The five-stage model's LR is fitted on exactly the features and
+    labels the stock-stage pipeline (NGram chain, StringIndexer inside)
+    fits on: coefficients and intercepts are bit-identical."""
+    even = F.length("tr_description_clean") % 2 == 0
+    df = labeled.withColumn("side", F.when(even, F.array(F.lit("even"))))
+    model = GRAMS_CLF.fit(df)
+    tokenizer, _, tf, indexer, lr = GRAMS_CLF._stages()
+    stock = Pipeline(
+        stages=[tokenizer, *_stock_gram_stages(GRAMS_CLF), tf, indexer, lr]
+    ).fit(df)
+    got, want = model.pipeline_model.stages[3], stock.stages[-1]
+    for attr in ("coefficientMatrix", "interceptVector"):
+        assert np.array_equal(
+            getattr(got, attr).toArray(), getattr(want, attr).toArray()
+        )
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 7, 30])
+def test_percentile_matches_spark(spark, n):
+    """The driver-side quantiles are Spark's `percentile`, bit for bit,
+    ties included."""
+    rng = random.Random(n)
+    vals = [rng.randint(0, 6) / 7 for _ in range(n)]
+    ps = [p for _, p in QUANTILES] + [0.0, 0.1, 1 / 3, 0.9, 1.0]
+    row = (
+        spark.createDataFrame([(v,) for v in vals], "x double")
+        .agg(F.expr(f"percentile(x, array({', '.join(f'{p!r}D' for p in ps)}))"))
+        .first()
+    )
+    assert [percentile(vals, p) for p in ps] == list(row[0])
+
+
+def test_evaluate_per_class_matches_accuracy_report(spark):
+    """per_class is accuracy_report's frame (columns, types, row order,
+    null label first among ties); the summary matches Spark's avg and
+    percentile over it."""
+    rows = (
+        [(3, 3)] * 4 + [(1, 1)] * 2 + [(2, 2), (2, 1), (2, 1)]
+        + [(None, 1), (4, 1), (5, 5), (5, None)]
+    )
+    scored = spark.createDataFrame(rows, "label int, pred int")
+    per_class, summary = evaluate_per_class(scored, "label", "pred")
+    report = accuracy_report(scored, "label", "pred")
+    assert per_class.schema == report.schema
+    assert per_class.collect() == report.collect()
+    assert [r.label for r in per_class.collect()] == [1, 3, 5, 2, None, 4]
+    want = report.agg(
+        F.avg("accuracy"),
+        F.expr("percentile(accuracy, array(0.05, 0.25, 0.5, 0.75, 0.95))"),
+    ).first()
+    assert abs(summary["avg_acc"] - want[0]) <= 1e-12
+    assert [summary[name] for name, _ in QUANTILES] == list(want[1])
+    with pytest.raises(ValueError, match="no rows"):
+        evaluate_per_class(scored.limit(0), "label", "pred")

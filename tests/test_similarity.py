@@ -398,6 +398,22 @@ def test_folded_double_lit_nonfinite_falls_back_to_parsed_form(spark):
     assert "from_json" not in nf._jdf.queryExecution().analyzed().toString()
 
 
+def test_folded_double_lit_malformed_constant_raises(spark):
+    """A constant whose nesting does not match `depth` must fail when the
+    plan is optimized, not fold to a null array (from_json's default
+    PERMISSIVE mode would)."""
+    from py4j.protocol import Py4JJavaError
+
+    from merchant_classification_spark.operators.similarity import (
+        _folded_double_lit,
+    )
+
+    for nested, depth in (([[1.0, 2.0]], 1), ([1.0, 2.0], 2)):
+        df = spark.range(1).select(_folded_double_lit(nested, depth).alias("x"))
+        with pytest.raises(Py4JJavaError, match="MALFORMED_RECORD_IN_PARSING"):
+            df.collect()
+
+
 def test_folded_double_lit_constant_folds_in_optimized_plan(spark):
     """The whole point: the optimizer must fold the from_json call to a
     plain array Literal so execution never parses JSON per row."""

@@ -4,6 +4,8 @@ import json
 import os
 import random
 
+from pyspark.sql import functions as F
+
 from merchant_classification_spark.config import EngineConfig
 from merchant_classification_spark.ml.classifier import NarrativeClassifier
 from merchant_classification_spark.pipelines.train import train_merchant_classifier
@@ -35,14 +37,25 @@ def test_full_lifecycle(spark, tmp_path):
         seed=3,
     )
     clf = NarrativeClassifier(ngram_max=2, num_features=1 << 14, max_iter=20)
+    # a merchant below count_threshold: the ETL drops it from training
+    rare = spark.createDataFrame(
+        [("corner shop", f"corner shop {i} ldn", 1.0) for i in range(10)],
+        ["tr_merchant", "tr_description", "tr_amount"],
+    )
+    raw = _raw(spark).unionByName(rare)
     result = train_merchant_classifier(
-        _raw(spark),
+        raw,
         config=cfg,
         classifier=clf,
         export_corpus=True,
     )
     assert result.metrics["avg_acc"] > 0.9
     assert result.per_class.count() == len(MERCHANTS)
+    # ...yet the model scores its rows too, like every other row
+    from merchant_classification_spark.pipelines.etl import clean_transactions
+
+    scored = result.model.transform(clean_transactions(raw))
+    assert scored.where(F.col("pr_merchant").isNotNull()).count() == raw.count()
     # corpus artifact exists and is fasttext-formatted
     with open(result.corpus_path) as f:
         first = f.readline()
@@ -54,7 +67,6 @@ def test_full_lifecycle(spark, tmp_path):
     assert os.path.exists(os.path.join(cfg.model_path, "registry_merchcat_test.json"))
     # model dir is loadable; scoring raw data goes through the cleaner
     from merchant_classification_spark.ml.classifier import NarrativeClassifierModel
-    from merchant_classification_spark.pipelines.etl import clean_transactions
 
     reloaded = NarrativeClassifierModel.load(
         os.path.join(cfg.model_path, "merchcat_test_model"), clf

@@ -125,6 +125,15 @@ def test_crossvalidator_tuning(split_data):
     assert len(result.trials) == 2
     assert result.best_params["reg_param"] in (0.0, 0.5)
     assert result.best_accuracy == max(t["accuracy"] for t in result.trials)
+    # the winner is returned as NarrativeClassifier.fit builds a model:
+    # the indexer stays out of the scoring pipeline
+    assert [type(s).__name__ for s in model.pipeline_model.stages] == [
+        "RegexTokenizer",
+        "SQLTransformer",
+        "HashingTF",
+        "LogisticRegressionModel",
+        "IndexToString",
+    ]
     # the returned model scores in LABEL space (decode stage attached)
     scored = model.transform(train)
     acc = (
