@@ -707,19 +707,19 @@ def q_multimodal_decode(spark, sf_dir):
 
 
 def q_minhash_neardup(spark, sf_dir):
-    # portable md5 scheme (functions/portable_hash.py): signature, banding,
+    # portable md5 hashing (functions/portable_hash.py): signature, banding,
     # and verify all have exact DuckDB twins, so the WHOLE pipeline —
     # including which pairs LSH surfaces as candidates — is oracle-graded.
     from merchant_classification_spark.operators.dedup import minhash_dedup_pairs
 
     return minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents", split=True), "doc_id", "text", threshold=0.6, scheme="md5"
+        _t(spark, sf_dir, "documents", split=True), "doc_id", "text", threshold=0.6
     ).orderBy("id_a", "id_b")
 
 
 def q_source_dup_matrix(spark, sf_dir):
     # cross-source duplication matrix over the SAME verified pair table
-    # minhash_neardup grades (portable md5 scheme, threshold 0.6):
+    # minhash_neardup grades (portable md5 hashing, threshold 0.6):
     # which sources bleed into which — pair counts + order-insensitive
     # min/max similarity per unordered source pair
     # (operators/dedup.py dup_pair_source_matrix).
@@ -729,9 +729,7 @@ def q_source_dup_matrix(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents", split=True)
-    pairs = minhash_dedup_pairs(
-        docs, "doc_id", "text", threshold=0.6, scheme="md5"
-    )
+    pairs = minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.6)
     return dup_pair_source_matrix(pairs, docs, "doc_id", "source")
 
 
@@ -741,7 +739,7 @@ def q_simhash_neardup(spark, sf_dir):
     from merchant_classification_spark.operators.dedup import simhash_dedup_pairs
 
     return simhash_dedup_pairs(
-        _t(spark, sf_dir, "documents", split=True), "doc_id", "text", max_hamming=6, scheme="md5"
+        _t(spark, sf_dir, "documents", split=True), "doc_id", "text", max_hamming=6
     ).orderBy("id_a", "id_b")
 
 
@@ -4585,7 +4583,7 @@ for _k in ("doc_winnow", "winnow_pairs"):
 
 def _minhash_oracle_sql() -> str:
     """DuckDB replay of the FULL portable MinHash-LSH pipeline
-    (operators/dedup.py minhash_dedup_pairs, scheme='md5'): 60-bit md5
+    (operators/dedup.py minhash_dedup_pairs): 60-bit md5
     base hashes, universal-hash permutations mod 2^31-1 with the same
     constants (functions/portable_hash.minhash_perms), ':'-joined band
     keys, and the exact-Jaccard verify — bit-for-bit, candidates
@@ -4734,7 +4732,7 @@ ORACLES["stratified_hash_sample"] = f"""
 """
 
 # DuckDB replay of simhash_portable + 4x15-bit banding + Hamming verify
-# (operators/dedup.py simhash_dedup_pairs, scheme='md5'), bit-for-bit
+# (operators/dedup.py simhash_dedup_pairs), bit-for-bit
 ORACLES["simhash_neardup"] = f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
     hh AS (SELECT doc_id,

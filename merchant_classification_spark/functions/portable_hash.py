@@ -1,10 +1,8 @@
 """Engine-portable hash primitives for oracle-replayable dedup tiers.
 
-The seeded-hash dedup operators (MinHash, SimHash) historically used
-``xxhash64``, which no external SQL engine can replay — their outputs
-could only be verified by a pure-Python re-implementation of Spark's
-XXH64. This module provides a portable alternative built on md5, which
-IS replayable everywhere (md5 is md5):
+The seeded-hash dedup operators (MinHash, SimHash) hash with md5, which
+every engine replays bit-for-bit (md5 is md5), so an external SQL oracle
+checks their outputs directly:
 
   * ``md5_long60`` — the first 15 hex chars of ``md5(s)`` parsed base-16
     into a 60-bit non-negative long. Bit-identical in Spark
@@ -18,11 +16,10 @@ IS replayable everywhere (md5 is md5):
     intermediate stays below 2^62, so the arithmetic is exact in any
     engine's signed 64-bit integers (no overflow, no ANSI trap).
 
-Cost note: one md5 per shingle/token plus O(k) exact integer ops —
-cheaper than the k-seeded-xxhash64 chain it replaces, at the price of
-md5 being a heavier base hash than xxh64. Both schemes stay in
-whole-stage codegen; the xxh64 scheme remains available on every
-operator (``scheme="xxh64"``) as the cheapest-hash option.
+Cost note: one md5 per shingle/token plus O(k) exact integer ops, all
+in whole-stage codegen. md5 is a heavier base hash than xxhash64 (round-3
+minhash at sf0.1: about 2.9 s against 2.44 s for a seeded-xxhash64
+chain), the price of a signature the oracle can replay.
 """
 
 from __future__ import annotations

@@ -15,11 +15,9 @@ map-side (no shuffle); candidate generation shuffles only (band_hash) keys,
 which are near-uniform by construction — LSH is self-salting. The verify
 stage re-joins shingle sets only for candidate pairs (tiny vs n²).
 
-MinHash and SimHash offer two hash schemes: ``scheme="md5"`` (default) is
-engine-portable — an external SQL oracle replays signatures, banding, and
-verify bit-for-bit (see ``functions/portable_hash.py``); ``scheme="xxh64"``
-is the cheapest-hash option with 8-byte band keys, verified instead by the
-pure-Python XXH64 replay in ``tests/test_hash_crosscheck.py``.
+MinHash and SimHash hash with the engine-portable md5 construction
+(``functions/portable_hash.py``): an external SQL oracle replays signatures,
+banding and verify bit-for-bit.
 """
 
 from __future__ import annotations
@@ -235,19 +233,7 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(tokens(col)), grams), 1)
 
 
-def _check_scheme(scheme: str) -> None:
-    """Reject unknown hash schemes loudly: the dispatch sites used to
-    fall through to xxh64 on any unrecognized string (e.g. a typo like
-    'md-5'), silently losing oracle replayability."""
-    if scheme not in ("md5", "xxh64"):
-        raise ValueError(
-            f"unknown hash scheme {scheme!r}: expected 'md5' or 'xxh64'"
-        )
-
-
-def minhash_signature(
-    shingle_col: Column | str, num_hashes: int = 64, scheme: str = "md5"
-) -> Column:
+def minhash_signature(shingle_col: Column | str, num_hashes: int = 64) -> Column:
     """MinHash signature: array<long> of length `num_hashes`.
 
     Broder construction, two-level hashing: each shingle is string-hashed
@@ -256,66 +242,40 @@ def minhash_signature(
     mode, and every op stays in whole-stage codegen. min per index
     approximates the permutation min.
 
-    ``scheme="md5"`` (default) is the engine-portable construction
-    (``functions/portable_hash.py``): base = 60-bit md5 prefix,
-    permutations = exact universal hashing mod 2^31−1 — an external SQL
-    oracle replays the signature bit-for-bit. ``scheme="xxh64"`` is the
-    cheapest-base-hash option (seeded xxhash64 chain), verifiable only by
-    the pure-Python XXH64 replay in ``tests/test_hash_crosscheck.py``.
+    The construction is engine-portable (``functions/portable_hash.py``):
+    base = 60-bit md5 prefix, permutations = exact universal hashing mod
+    2^31−1 — an external SQL oracle replays the signature bit-for-bit.
     """
-    col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    _check_scheme(scheme)
-    if scheme == "md5":
-        from merchant_classification_spark.functions.portable_hash import (
-            md5_long60,
-            minhash_sig_md5,
-        )
-
-        return minhash_sig_md5(F.transform(col, md5_long60), num_hashes)
-    # bind the string-hash array once (lambda var), else Catalyst inlines
-    # the whole string-hash transform into each of the k permutations
-    return F.element_at(
-        F.transform(
-            F.array(F.transform(col, lambda s: F.xxhash64(s))),
-            lambda hashes: F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(hashes, lambda h: F.xxhash64(i, h))
-                ),
-            ),
-        ),
-        1,
+    from merchant_classification_spark.functions.portable_hash import (
+        md5_long60,
+        minhash_sig_md5,
     )
+
+    col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
+    return minhash_sig_md5(F.transform(col, md5_long60), num_hashes)
 
 
 def lsh_band_hashes(
-    sig_col: Column | str, bands: int, rows_per_band: int, scheme: str = "md5"
+    sig_col: Column | str, bands: int, rows_per_band: int
 ) -> Column:
     """Per-band join key over the signature (array of length `bands`).
     Two docs sharing ANY band key are candidates;
     P(candidate) ≈ 1-(1-j^r)^b for Jaccard j.
 
-    ``scheme="md5"``: the key is the ':'-joined decimal band slice — no
-    further hashing, so an external SQL engine reproduces it exactly and
-    bucket collisions are impossible. ``scheme="xxh64"``: the slice is
-    folded to one long (8-byte join keys — the cheapest-shuffle option).
+    The key is the ':'-joined decimal band slice — no further hashing, so
+    an external SQL engine reproduces it exactly and bucket collisions
+    are impossible.
     """
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    _check_scheme(scheme)
-    if scheme == "md5":
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.concat_ws(
-                ":",
-                F.transform(
-                    F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"),
-                ),
-            ),
-        )
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(b, F.slice(sig, b * rows_per_band + 1, rows_per_band)),
+        lambda b: F.concat_ws(
+            ":",
+            F.transform(
+                F.slice(sig, b * rows_per_band + 1, rows_per_band),
+                lambda v: v.cast("string"),
+            ),
+        ),
     )
 
 
@@ -334,48 +294,32 @@ def _minhash_base(
     text_col: str,
     shingle_size: int,
     num_hashes: int,
-    scheme: str = "md5",
 ) -> DataFrame:
     """(doc_id, shh: array<long>, sig: array<long>) projection.
 
     Shingles are immediately hashed to longs: all downstream work
     (signatures, verify-Jaccard) runs on 8-byte values instead of
     strings — cheaper to hash, shuffle, and intersect. Collisions of
-    distinct shingles (~1e-11 at corpus scale for xxh64, ~1e-10 for the
-    60-bit md5 prefix) are the accepted epsilon — and with the md5
-    scheme the oracle hashes identically, so they cannot cause a
-    verification mismatch.
+    distinct shingles (~1e-10 at corpus scale for the 60-bit md5 prefix)
+    are the accepted epsilon — the oracle hashes identically, so they
+    cannot cause a verification mismatch.
     """
+    from merchant_classification_spark.functions.portable_hash import (
+        md5_long60,
+        minhash_sig_md5,
+    )
+
     base = df.select(
         F.col(id_col).alias("doc_id"),
         shingles(text_col, shingle_size).alias("sh"),
     )
-    _check_scheme(scheme)
-    if scheme == "md5":
-        from merchant_classification_spark.functions.portable_hash import (
-            md5_long60,
-            minhash_sig_md5,
-        )
-
-        return base.select(
-            "doc_id", F.transform("sh", md5_long60).alias("shh")
-        ).withColumn("sig", minhash_sig_md5("shh", num_hashes))
     return base.select(
-        "doc_id",
-        F.transform("sh", lambda s: F.xxhash64(s)).alias("shh"),
-    ).withColumn(
-        "sig",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("shh"), lambda h: F.xxhash64(i, h))
-            ),
-        ),
-    )
+        "doc_id", F.transform("sh", md5_long60).alias("shh")
+    ).withColumn("sig", minhash_sig_md5("shh", num_hashes))
 
 
 def _minhash_pair_ids(
-    base: DataFrame, bands: int, rows_per_band: int, scheme: str = "md5"
+    base: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs from the banded LSH self-join.
 
@@ -387,7 +331,7 @@ def _minhash_pair_ids(
     """
     banded = base.select(
         "doc_id",
-        F.posexplode(lsh_band_hashes("sig", bands, rows_per_band, scheme)).alias(
+        F.posexplode(lsh_band_hashes("sig", bands, rows_per_band)).alias(
             "band", "band_hash"
         ),
     )
@@ -415,7 +359,6 @@ def minhash_candidate_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     eager: bool = True,
-    scheme: str = "md5",
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) via banded MinHash LSH,
     carrying both shingle sets for the verify stage.
@@ -436,15 +379,15 @@ def minhash_candidate_pairs(
     from pyspark.storagelevel import StorageLevel
 
     rows_per_band = num_hashes // bands
-    base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes, scheme)
+    base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes)
     if not eager:
         return _attach_shingles(
-            _minhash_pair_ids(base, bands, rows_per_band, scheme), base
+            _minhash_pair_ids(base, bands, rows_per_band), base
         ).select("id_a", "id_b", "sh_a", "sh_b")
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         out = _attach_shingles(
-            _minhash_pair_ids(base, bands, rows_per_band, scheme), base
+            _minhash_pair_ids(base, bands, rows_per_band), base
         ).select("id_a", "id_b", "sh_a", "sh_b")
         return out.localCheckpoint(eager=True)
     finally:
@@ -460,7 +403,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int | None = None,
     eager: bool = True,
-    scheme: str = "md5",
     fn_weight: float = 2.0,
 ) -> DataFrame:
     """Verified near-duplicate pairs: LSH candidates filtered by EXACT
@@ -488,10 +430,10 @@ def minhash_dedup_pairs(
         bands, rows_per_band = lsh_params(threshold, num_hashes, fn_weight)
     else:
         rows_per_band = num_hashes // bands
-    base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes, scheme)
+    base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes)
 
     def verified(b: DataFrame) -> DataFrame:
-        pairs = _attach_shingles(_minhash_pair_ids(b, bands, rows_per_band, scheme), b)
+        pairs = _attach_shingles(_minhash_pair_ids(b, bands, rows_per_band), b)
         return (
             pairs.withColumn("jaccard_sim", jaccard("sh_a", "sh_b"))
             .where(F.col("jaccard_sim") >= threshold)
@@ -1236,8 +1178,8 @@ def edit_distance_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash of the token multiset (long).
+def simhash_portable(col: Column | str) -> Column:
+    """60-bit engine-portable SimHash of the token multiset (long).
 
     Charikar's construction, fully native and shuffle-free. Equivalent
     reformulation of the textbook ±1 counters: slot j's counter is
@@ -1246,59 +1188,20 @@ def simhash64(col: Column | str) -> Column:
     are accumulated.
 
     Expression shape matters 3× here: the tokens are hashed ONCE into a
-    bound array of longs, then each of the 64 bit positions folds that
-    array with a branch-free ``+ getbit(h, j)`` — no per-token 64-slot
-    array allocation, no per-element conditional. The previous form
-    (``aggregate`` carrying a 64-long array rebuilt by ``zip_with`` per
-    token) allocated tokens×64 array cells per row and measured 4.4 s
-    for sf0.1 signatures vs 1.4 s for this one (bit-identical output,
+    bound array of longs, then each bit position folds that array with a
+    branch-free ``+ getbit(h, j)`` — no per-token array allocation, no
+    per-element conditional. The textbook form (``aggregate`` carrying
+    the counter array rebuilt by ``zip_with`` per token) allocated
+    tokens×bits array cells per row; on 64-bit signatures it measured
+    4.4 s for sf0.1 vs 1.4 s for this fold (bit-identical output,
     verified over the full corpus).
-    """
-    hs = F.transform(tokens(col), lambda t: F.xxhash64(t))
 
-    def build(h: Column) -> Column:
-        n = F.size(h)
-        ones = F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda j: F.aggregate(
-                h, F.lit(0).cast("long"), lambda a, x: a + F.getbit(x, j)
-            ),
-        )
-        # bit j weight as a literal lookup (1<<63 wraps to long min); one
-        # parsed literal, not 64 py4j F.lit() round-trips
-        pow2 = F.expr(
-            "array("
-            + ",".join(
-                f"{(1 << j) if j < 63 else -(1 << 63)}L" for j in range(64)
-            )
-            + ")"
-        )
-        bits = F.zip_with(
-            ones,
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda o, j: F.when(o * 2 > n, F.element_at(pow2, j)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        return F.aggregate(bits, F.lit(0).cast("long"), lambda a, b: a.bitwiseOR(b))
-
-    # bind the hash array through a one-element-array lambda so it is
-    # materialized once, not re-evaluated per bit position
-    return F.element_at(F.transform(F.array(hs), build), 1)
-
-
-def simhash_portable(col: Column | str) -> Column:
-    """60-bit engine-portable SimHash of the token multiset (long).
-
-    Identical construction to :func:`simhash64` (same branch-free
-    bit-count fold — see that docstring for why the expression shape is
-    3× faster than the textbook counter array), but the per-token hash
-    is the 60-bit md5 prefix (``functions/portable_hash.md5_long60``)
-    instead of xxhash64, and only bits 0..59 are folded, so the value
-    stays non-negative and every step — md5, shift, popcount — has an
-    exact twin in any SQL engine. An external oracle replays the full
-    signature, banding, and Hamming verify bit-for-bit
-    (``__spark_entry__.py`` simhash_neardup oracle).
+    The per-token hash is the 60-bit md5 prefix
+    (``functions/portable_hash.md5_long60``) and only bits 0..59 are
+    folded, so the value stays non-negative and every step — md5,
+    shift, popcount — has an exact twin in any SQL engine. An external
+    oracle replays the full signature, banding, and Hamming verify
+    bit-for-bit (``__spark_entry__.py`` simhash_neardup oracle).
     """
     from merchant_classification_spark.functions.portable_hash import md5_long60
 
@@ -1338,17 +1241,14 @@ def simhash_dedup_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    scheme: str = "md5",
     eager: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs with SimHash Hamming distance ≤ max_hamming.
 
-    Candidates come from 4 band buckets (16 bits each for the xxh64
-    scheme's 64-bit signature, 15 bits for the portable 60-bit one);
+    Candidates come from 4 band buckets of 15 bits each over the
+    oracle-replayable 60-bit :func:`simhash_portable` signature;
     pigeonhole: distance ≤ 3 guarantees at least one identical band.
-    Candidates are verified by exact bit_count. ``scheme="md5"``
-    (default) uses the oracle-replayable :func:`simhash_portable`
-    signature; ``scheme="xxh64"`` the cheaper :func:`simhash64`.
+    Candidates are verified by exact bit_count.
 
     ``eager=True`` (default) is the module's standard materialize/release
     contract: the signature projection is persisted (BOTH self-join
@@ -1358,12 +1258,9 @@ def simhash_dedup_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    _check_scheme(scheme)
-    if scheme == "md5":
-        sig, band_bits, band_mask = simhash_portable(text_col), 15, 0x7FFF
-    else:
-        sig, band_bits, band_mask = simhash64(text_col), 16, 0xFFFF
-    base = df.select(F.col(id_col).alias("doc_id"), sig.alias("sim"))
+    base = df.select(
+        F.col(id_col).alias("doc_id"), simhash_portable(text_col).alias("sim")
+    )
 
     def pairs(b: DataFrame) -> DataFrame:
         banded = b.select(
@@ -1372,8 +1269,8 @@ def simhash_dedup_pairs(
             F.posexplode(
                 F.array(
                     *[
-                        F.shiftright(F.col("sim"), i * band_bits).bitwiseAND(
-                            F.lit(band_mask)
+                        F.shiftright(F.col("sim"), i * 15).bitwiseAND(
+                            F.lit(0x7FFF)
                         )
                         for i in range(4)
                     ]
@@ -1413,36 +1310,6 @@ def simhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 # representative assignment (connected components over duplicate pairs)
 # ---------------------------------------------------------------------------
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the storage block behind an EAGER ``localCheckpoint`` frame.
-
-    The frame must never be read again — its lineage was cut at the
-    checkpoint, so once the block is gone the data is unrecoverable.
-    The block is addressed through the frame's OWN ``LogicalRDD`` node
-    (``analyzed().rdd().id()``), never by diffing the global persistent-
-    RDD registry, so concurrently-running queries' blocks are untouched
-    (graded suites build members on a thread pool). Best-effort BY
-    DESIGN — it reaches through private py4j internals whose plan shape
-    differs across Spark versions (and is absent under Spark Connect),
-    and ContextCleaner GCs the block eventually regardless; this only
-    makes the module's no-block-outlives-the-call contract immediate
-    for loops that checkpoint per round. The except is scoped to the
-    py4j/attribute errors those internals can raise so a genuine bug
-    (e.g. a typo'd unpersist call) still surfaces."""
-    try:
-        from py4j.protocol import Py4JError
-    except ImportError:  # Spark Connect: no py4j at all
-        return
-    try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        rid = int(analyzed.rdd().id())
-        jrdd = df.sparkSession.sparkContext._jsc.getPersistentRDDs().get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-    except (Py4JError, AttributeError, TypeError):
-        pass  # wrong plan shape / already GC'd — the cleaner owns it
 
 
 def assign_representatives(
@@ -1502,119 +1369,6 @@ def assign_representatives(
         prev_persisted.unpersist(blocking=False)
     edges.unpersist(blocking=False)
     return out
-
-
-def assign_representatives_doubling(
-    ids: DataFrame,
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    reliable: bool = False,
-) -> DataFrame:
-    """Pointer-doubling variant of :func:`assign_representatives`:
-    each round hooks (min-label over neighbors∪self, the same single
-    join+aggregate) and then SHORTCUTS (rep ← rep(rep), one self-join
-    on the label table) — the distance from every node to its
-    component minimum roughly halves per round, so deep chains
-    converge in O(log diameter) rounds instead of O(diameter)
-    (Shiloach–Vishkin hooking/shortcutting; the MapReduce treatment is
-    Kiveris et al., "Connected Components in MapReduce and Beyond").
-
-    Same fixed point as the propagation variant (labels are monotone
-    non-increasing, bounded by the component min, and a full-round
-    no-change is exactly the fixed-point condition), verified
-    label-for-label in tests/test_dedup.py. Prefer this when duplicate
-    clusters can chain deeply (crawl mirrors, near-dup transitive
-    chains); the plain variant does fewer joins per round and wins on
-    the shallow star-shaped clusters typical of exact dedup.
-
-    Scale shape per round: one edge⋈label join (shuffle on id), one
-    label⋈label self-join (labels are one row per id — the smaller
-    table). Each round ends in an EAGER ``localCheckpoint`` — not a
-    ``persist`` — because the shortcut self-join references the
-    previous round's frame TWICE: with lazy lineage the logical plan
-    DOUBLES per round (2^r nodes by round r), and while persisted data
-    makes execution cheap, the driver-side planning work — analysis,
-    cache-manager plan naming/normalization (``persist()`` itself
-    renders the plan's tree string), AQE re-planning — grows with the
-    LOGICAL plan and becomes the bottleneck long before execution does
-    (measured: rounds of a 60-node chain went 1.3 s → 1.7 s → 3.4 s →
-    minutes at round 4, wedging the driver hard enough to miss
-    executor heartbeats). The checkpoint cuts the plan to a leaf every
-    round, so planning cost is constant per round. The propagation
-    variant references its previous frame once (linear growth) and
-    keeps the cheaper persist-per-round.
-
-    Fault-tolerance tradeoff: ``localCheckpoint`` TRUNCATES lineage —
-    the round snapshots live only in executor block storage, so losing
-    an executor mid-run fails the job unrecoverably (a plain persist
-    would recompute, but a plain persist here is exactly what the
-    plan-growth fix removed). For long-running jobs on preemptible
-    hardware pass ``reliable=True``: each round then uses reliable
-    ``checkpoint()`` (requires ``sparkContext.setCheckpointDir`` to
-    durable storage first) — slower per round (an HDFS/object-store
-    write) but executor loss replays from the checkpoint files, and
-    the plan still cuts to a leaf every round.
-    """
-    sym = pairs.select("id_a", "id_b").union(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    )
-    self_loops = ids.select(
-        F.col("doc_id").alias("id_a"), F.col("doc_id").alias("id_b")
-    )
-    edges = sym.union(self_loops).distinct().persist()
-    labels = ids.select("doc_id", F.col("doc_id").alias("rep"))
-
-    def snapshot(df: DataFrame) -> DataFrame:
-        # reliable=True swaps executor-local blocks for durable files
-        # (see docstring); both cut the plan to a leaf
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    prev_ckpt = None
-    for _ in range(max_iterations):
-        hooked = snapshot(
-            edges.join(labels, edges.id_b == labels.doc_id)
-            .groupBy("id_a")
-            .agg(
-                F.min("rep").alias("rep"),
-                F.min(F.when(F.col("id_b") == F.col("id_a"), F.col("rep"))).alias(
-                    "old_rep"
-                ),
-            )
-            .withColumnRenamed("id_a", "doc_id")
-            # both sides of the shortcut self-join read this frame; the
-            # eager checkpoint materializes it ONCE and cuts the
-            # doubled lineage (see docstring — persist would keep the
-            # exponential logical plan alive in the driver)
-        )
-        # shortcut: rep ← rep(rep). Every rep value is a node id (labels
-        # start at identity and only ever move to another node's label),
-        # and self-loops keep every node in the table, so the inner
-        # self-join is total.
-        l2 = hooked.select(
-            F.col("doc_id").alias("_rid"), F.col("rep").alias("_rrep")
-        )
-        new_labels = snapshot(
-            hooked.join(l2, hooked.rep == l2._rid)
-            .select("doc_id", F.col("_rrep").alias("rep"), "old_rep")
-        )
-        changed = (
-            new_labels.where(F.col("rep") != F.col("old_rep")).limit(1).count()
-        )
-        # superseded snapshots are dead weight: hooked was consumed by
-        # new_labels' materialization, and last round's labels by this
-        # round's — release their blocks NOW (the returned frame's own
-        # block is the one the hygiene contract allows to survive)
-        _release_local_checkpoint(hooked)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
-        prev_ckpt = new_labels
-        labels = new_labels.select("doc_id", "rep")
-        if changed == 0:
-            break
-    edges.unpersist(blocking=False)
-    return labels
 
 
 def exact_substring_dedup(

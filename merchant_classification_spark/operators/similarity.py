@@ -41,7 +41,7 @@ def _folded_double_lit(nested, depth: int) -> Column:
     build cost of the ANN members (round-11 §13 measured it; round-12
     probe: parse 2 ms, select-with-parsed-literal 295 ms,
     select-with-from_json 91 ms, execution identical at 0.42 s, outputs
-    bit-equal; `tools/ann_literal_probe.py`).
+    bit-equal).
 
     Bit-exactness: ``json.dumps`` emits the shortest round-trip decimal
     (same digits as ``repr``) and Jackson's parseDouble is correctly
@@ -187,7 +187,7 @@ def _multi_table_signatures(
     rides as a from_json constant (``_folded_double_lit``), so each
     Dataset op embedding it analyzes ONE string node instead of 4096
     literal nodes (~0.30 s of eager analysis per select at the ann_lsh
-    dial, measured in tools/ann_literal_probe.py)."""
+    dial)."""
     v = to_double_array(vec)
     all_planes = [
         _random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(tables)
@@ -418,26 +418,11 @@ def _deterministic_kmeans(
 
 
 def _cents_lit(centroids: list[list[float]]) -> Column:
-    """One folded literal ``array<array<double>>`` for a centroid set —
-    shared by the distance fold and the residual subtraction so the
-    plan carries a single literal tree, not one per use site. Round 12:
-    rides as a from_json constant (``_folded_double_lit``) so Dataset
-    ops embedding it analyze one string node, not k·dim literal
+    """One folded literal ``array<array<double>>`` for a centroid set.
+    Round 12: rides as a from_json constant (``_folded_double_lit``) so
+    Dataset ops embedding it analyze one string node, not k·dim literal
     nodes."""
     return _folded_double_lit(centroids, 2)
-
-
-def residual_vec(
-    vec: Column | str, cell: Column, coarse: list[list[float]]
-) -> Column:
-    """Element-wise residual ``v − coarse[cell]`` (cell 1-based) — each
-    element ONE IEEE subtraction, so an oracle computing the same
-    ``v[i] - coarse_lit[cell][i]`` replays it exactly."""
-    return F.zip_with(
-        to_double_array(vec),
-        F.element_at(_cents_lit(coarse), cell),
-        lambda a, b: a - b,
-    )
 
 
 def centroid_sq_dists(
@@ -937,32 +922,6 @@ def _fit_pq_codebooks(
     ]
 
 
-def fit_residuals(
-    fit: list[list[float]], coarse: list[list[float]]
-) -> list[list[float]]:
-    """Residuals ``v − coarse[assign(v)]`` of the fit sample — the
-    training input for RESIDUAL PQ codebooks (Jégou et al. 2011 §IV.A:
-    quantize the coarse-quantization error, not the raw vector, so the
-    codebooks spend their bits on the within-cell distribution).
-    Assignment replays :func:`_deterministic_kmeans`'s rule — first
-    minimum squared L2 — in pure Python, so an oracle rerunning this
-    function on the same sample derives identical codebooks."""
-    out = []
-    for v in fit:
-        best = None
-        bi = 0
-        for j, c in enumerate(coarse):
-            d = 0.0
-            for i in range(len(c)):
-                t = v[i] - c[i]
-                d += t * t
-            if best is None or d < best:
-                best, bi = d, j
-        cc = coarse[bi]
-        out.append([v[i] - cc[i] for i in range(len(v))])
-    return out
-
-
 def pq_codes(vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
     """PQ encoding: array<int> of the 1-BASED nearest sub-centroid per
     subspace (first-min ties, the :func:`_argmin_cell` contract). This
@@ -1051,7 +1010,6 @@ def pq_topk_portable(
     max_iter: int = 10,
     refine_factor: int | None = 4,
     encoder: str = "native",
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     query_id: str = "query_id",
@@ -1078,21 +1036,10 @@ def pq_topk_portable(
     pool. ``refine_factor=None`` returns the raw ADC ranking
     (query_id, vec_id, adc_d2, rank).
 
-    ``residual=False`` (default) quantizes the raw vector — one fewer
-    moving part in the replay. ``residual=True`` quantizes
-    ``x − coarse_centroid`` (Jégou §IV.A): the codebooks spend their
-    bits on the within-cell distribution, which lifts ADC fidelity
-    when cells are TIGHT. A/B'd at the graded dial on the grading
-    embeddings (round 10, sf0.01, 16 queries, k=10, probe 12, refine
-    12): raw 0.8625 avg / 0.80 min recall@10, residual 0.8750 avg /
-    0.70 min — residual trades a small average gain for a worse
-    floor, and ADC-only (refine=None) shows why: 0.30 vs 0.28 avg —
-    these synthetic vectors are weakly clustered, so the coarse
-    quantizer soaks up little variance and the residual codebooks
-    have nothing extra to model. Raw stays the shipped/graded
-    default; flip the flag for corpora with real cluster structure
-    (where residual is the textbook win) and re-A/B — the whole
-    surface (fit/encode/arrow/search/serving) honors it.
+    Codes quantize the raw vector, not the residual ``x − coarse``
+    (Jégou §IV.A): residual codebooks lost the round-10 A/B at the
+    graded dial (sf0.01, 16 queries, k=10, probe 12, refine 12), min
+    recall@10 0.80 raw vs 0.70 residual.
 
     100 TB shape — what PQ buys over plain IVF: after the map-only
     encode, the SCAN SIDE of the search carries (cell, n_subspaces
@@ -1132,7 +1079,6 @@ def pq_topk_portable(
         n_codes=n_codes,
         fit_target=fit_target,
         max_iter=max_iter,
-        residual=residual,
         data_id=data_id,
         data_vec=data_vec,
         n_rows_hint=n_rows_hint,
@@ -1144,7 +1090,6 @@ def pq_topk_portable(
         data,
         coarse,
         books,
-        residual=residual,
         data_id=data_id,
         data_vec=data_vec,
     )
@@ -1157,7 +1102,6 @@ def pq_topk_portable(
         k=k,
         n_probe=n_probe,
         refine_factor=refine_factor,
-        residual=residual,
         data_id=data_id,
         data_vec=data_vec,
         query_id=query_id,
@@ -1172,7 +1116,6 @@ def pq_fit(
     n_codes: int = 16,
     fit_target: int = 256,
     max_iter: int = 10,
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     n_rows_hint: int | None = None,
@@ -1180,20 +1123,12 @@ def pq_fit(
     """Fit stage of the IVF-PQ index: one bounded deterministic stride
     sample → (coarse centroids, per-subspace codebooks). Pure driver
     values — persist them next to the codes table (they are the index
-    metadata a later :func:`pq_search` needs).
-
-    ``residual=True`` trains the codebooks on the coarse-quantization
-    residuals ``v − coarse[cell(v)]`` instead of the raw vectors
-    (:func:`fit_residuals`) — the codebooks then model the WITHIN-cell
-    distribution, which is where the code budget matters once the
-    coarse quantizer has soaked up the between-cell variance. The flag
-    must match across fit / encode / search."""
+    metadata a later :func:`pq_search` needs)."""
     fit = deterministic_fit_sample(
         data, fit_target, data_id, data_vec, n_rows=n_rows_hint
     )
     coarse = _deterministic_kmeans(fit, n_centroids, max_iter)
-    book_input = fit_residuals(fit, coarse) if residual else fit
-    books = _fit_pq_codebooks(book_input, n_subspaces, n_codes, max_iter)
+    books = _fit_pq_codebooks(fit, n_subspaces, n_codes, max_iter)
     return coarse, books
 
 
@@ -1201,7 +1136,6 @@ def pq_encode(
     data: DataFrame,
     coarse: list[list[float]],
     books: list[list[list[float]]],
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
 ) -> DataFrame:
@@ -1209,11 +1143,7 @@ def pq_encode(
     the compressed index rows (vec_id, cell, codes) — raw vectors are
     dropped here, which is what makes the persisted index ~32× smaller
     than the fp32 column at the default shape. Write this to parquet to
-    amortize the corpus scan across query workloads.
-
-    ``residual=True`` codes the residual ``v − coarse[cell]`` instead
-    of the raw vector (still map-only — the residual is one zip_with
-    subtraction against the coarse literal); must match the fit."""
+    amortize the corpus scan across query workloads."""
     d = data.select(
         F.col(data_id).alias("vec_id"), to_double_array(data_vec).alias("dv")
     )
@@ -1222,13 +1152,8 @@ def pq_encode(
         "dv",
         _argmin_cell(centroid_sq_dists(F.col("dv"), coarse)).alias("cell"),
     )
-    code_input = (
-        residual_vec(F.col("dv"), F.col("cell"), coarse)
-        if residual
-        else F.col("dv")
-    )
     return d.select(
-        "vec_id", "cell", pq_codes(code_input, books).alias("codes")
+        "vec_id", "cell", pq_codes(F.col("dv"), books).alias("codes")
     )
 
 
@@ -1241,7 +1166,6 @@ def pq_search(
     k: int = 10,
     n_probe: int = 4,
     refine_factor: int | None = 4,
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     query_id: str = "query_id",
@@ -1252,14 +1176,7 @@ def pq_search(
     vectors ONLY for the refine fetch — a broadcast-candidate map-side
     semi-join touching |queries|·k·refine_factor ids; with
     ``refine_factor=None`` the raw table is never scanned at all.
-    Same output contract as :func:`pq_topk_portable`.
-
-    ``residual=True`` (must match the index build): the LUT measures
-    the query RESIDUAL ``q − coarse[cell]`` against the codebooks, so
-    it is built once per (query, PROBED CELL) row instead of once per
-    query — n_probe · n_codes · dim work per query instead of
-    n_codes · dim, still trivial against the candidate scan. ADC and
-    the refine stage are unchanged."""
+    Same output contract as :func:`pq_topk_portable`."""
     n_subspaces = len(books)
     assigned = index.select("vec_id", "cell", "codes")
 
@@ -1296,13 +1213,8 @@ def pq_search(
     ).select(
         "query_id", "qv", F.col("_p._d2").alias("_d2"), F.col("_p.cell").alias("cell")
     )
-    lut_input = (
-        residual_vec(F.col("qv"), F.col("cell"), coarse)
-        if residual
-        else F.col("qv")
-    )
     probes = qd.select(
-        "query_id", pq_lut(lut_input, books).alias("lut"), "cell"
+        "query_id", pq_lut(F.col("qv"), books).alias("lut"), "cell"
     )
 
     scored = (
@@ -1483,7 +1395,6 @@ def pq_encode_arrow(
     data: DataFrame,
     coarse: list[list[float]],
     books: list[list[list[float]]],
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
 ) -> DataFrame:
@@ -1542,13 +1453,9 @@ def pq_encode_arrow(
                 dtype=np.float64,
             )
             cell = _first_argmin(X, C, 0)
-            # residual mode codes x − coarse[cell]: one elementwise IEEE
-            # subtraction per dimension, the same single op as the
-            # native zip_with — bit-parity preserved
-            Xc = X - np.stack(C)[cell - 1] if residual else X
             codes = np.stack(
                 [
-                    _first_argmin(Xc, B[m], m * ds)
+                    _first_argmin(X, B[m], m * ds)
                     for m in range(n_sub)
                 ],
                 axis=1,
@@ -1607,7 +1514,6 @@ def pq_index_append(
     books: list[list[list[float]]],
     index_path: str,
     batch_id: int,
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     encoder: str = "arrow",
@@ -1637,7 +1543,6 @@ def pq_index_append(
             new_data,
             coarse,
             books,
-            residual=residual,
             data_id=data_id,
             data_vec=data_vec,
         ),
@@ -1653,113 +1558,3 @@ def read_pq_index(spark, index_path: str) -> DataFrame:
     provenance, not index data). Also accepts a legacy flat layout
     (no partition dirs): the select is the same either way."""
     return spark.read.parquet(index_path).select("vec_id", "cell", "codes")
-
-
-# ---------------------------------------------------------------------------
-# OPQ-style learned rotation (round-11 A/B): parametric OPQ via PCA +
-# balanced eigenvalue allocation (Ge et al., CVPR 2013, "Optimized
-# Product Quantization" §4 — the closed-form variant: rotate into the
-# PCA basis, then permute components so every subspace gets an equal
-# SHARE of the variance product, which is the independence+balance
-# assumption under which PQ distortion is minimized). Deterministic
-# and literal-replayable: the rotation is fitted on the SAME bounded
-# deterministic stride sample as the quantizers and returned as plain
-# driver-side lists, with eigenvector signs canonicalized.
-# ---------------------------------------------------------------------------
-
-
-def fit_opq_rotation(
-    data: DataFrame,
-    n_subspaces: int,
-    fit_target: int = 256,
-    data_id: str = "vec_id",
-    data_vec: str = "embedding",
-    n_rows_hint: int | None = None,
-) -> list[list[float]]:
-    """Fit a dim×dim orthonormal rotation R (rows = output basis):
-    eigendecompose the fit-sample covariance, canonicalize eigenvector
-    signs (largest-|component| entry positive — numpy's eigh is
-    sign-ambiguous), then allocate components to the ``n_subspaces``
-    blocks greedily by descending eigenvalue onto the block with the
-    smallest current log-variance product (first block on ties) —
-    Ge et al.'s eigenvalue allocation. Apply as ``y = R @ v`` to both
-    corpus and queries before pq fit/encode/search; L2 is
-    rotation-invariant, so exact baselines and refine rescoring are
-    unchanged in meaning."""
-    import numpy as np
-
-    fit = deterministic_fit_sample(
-        data, fit_target, data_id, data_vec, n_rows=n_rows_hint
-    )
-    X = np.asarray(fit, dtype=np.float64)
-    dim = X.shape[1]
-    if dim % n_subspaces != 0:
-        raise ValueError(f"dim {dim} not divisible by {n_subspaces}")
-    Xc = X - X.mean(axis=0)
-    cov = (Xc.T @ Xc) / max(len(X) - 1, 1)
-    w, V = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(-w, kind="stable")
-    w, V = w[order], V[:, order]
-    for j in range(dim):  # sign canonicalization: first max-|x| entry > 0
-        col = V[:, j]
-        a = int(np.argmax(np.abs(col)))
-        if col[a] < 0:
-            V[:, j] = -col
-    per = dim // n_subspaces
-    # greedy balanced allocation of log-eigenvalues across blocks
-    import math as _m
-
-    eps = 1e-12
-    loads = [0.0] * n_subspaces
-    slots = [per] * n_subspaces
-    assign: list[list[int]] = [[] for _ in range(n_subspaces)]
-    for j in range(dim):  # descending eigenvalue order
-        best = min(
-            (b for b in range(n_subspaces) if slots[b] > 0),
-            key=lambda b: (loads[b], b),
-        )
-        assign[best].append(j)
-        loads[best] += _m.log(max(float(w[j]), eps))
-        slots[best] -= 1
-    rows: list[list[float]] = []
-    for b in range(n_subspaces):
-        for j in assign[b]:
-            rows.append([float(x) for x in V[:, j]])
-    return rows
-
-
-def rotate_vectors(
-    df: DataFrame,
-    rotation: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Apply ``y = R @ v`` to a vector column via an Arrow-batched
-    matmul (mapInPandas) — the corpus-encode posture; a graded oracle
-    path would pin the per-component dot products to a fixed fold
-    order instead (not needed while the rotation is an A/B-only tier:
-    the round-11 A/B kept RAW as the default — see SCALING.md)."""
-    import numpy as np
-    import pandas as pd
-
-    out = out_col or vec_col
-    R = np.asarray(rotation, dtype=np.float64)
-    others = [c for c in df.columns if c != vec_col]
-    schema = ", ".join(
-        [f"{c} {df.schema[c].dataType.simpleString()}" for c in others]
-        + [f"{out} array<double>"]
-    )
-
-    def body(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            Y = X @ R.T
-            res = pdf[others].copy()
-            res[out] = [list(map(float, y)) for y in Y]
-            yield res
-
-    return df.mapInPandas(body, schema)

@@ -274,7 +274,6 @@ def start_index_ingest(
     coarse: list[list[float]],
     books: list[list[list[float]]],
     checkpoint: str,
-    residual: bool = False,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     encoder: str = "arrow",
@@ -317,7 +316,6 @@ def start_index_ingest(
             books,
             index_path,
             batch_id=int(batch_id),
-            residual=residual,
             data_id=data_id,
             data_vec=data_vec,
             encoder=encoder,

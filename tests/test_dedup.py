@@ -12,8 +12,8 @@ from merchant_classification_spark.operators.dedup import (
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     shingles,
-    simhash64,
     simhash_dedup_pairs,
+    simhash_portable,
 )
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -81,7 +81,7 @@ def test_ngram_jaccard_ground_truth(docs):
 def test_simhash_near_duplicates(docs):
     sims = {
         r.doc_id: r.s
-        for r in docs.select("doc_id", simhash64("text").alias("s")).collect()
+        for r in docs.select("doc_id", simhash_portable("text").alias("s")).collect()
     }
     assert sims[0] == sims[1]
     pairs = {
@@ -90,6 +90,16 @@ def test_simhash_near_duplicates(docs):
     }
     assert (0, 1) in pairs and (0, 2) in pairs
     assert (0, 3) not in pairs
+
+
+def test_near_dup_pairs_on_empty_frame(spark):
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    minhash = minhash_dedup_pairs(empty, "doc_id", "text")
+    assert minhash.columns == ["id_a", "id_b", "jaccard_sim"]
+    assert minhash.count() == 0
+    simhash = simhash_dedup_pairs(empty, "doc_id", "text")
+    assert simhash.columns == ["id_a", "id_b", "hamming"]
+    assert simhash.count() == 0
 
 
 def test_assign_representatives_chain(spark):
@@ -436,88 +446,6 @@ def test_winnow_arrow_kernel_empty_partitions_and_string_ids(spark):
     out = winnow_fingerprint_rows(df2, "doc_id", "text", kernel="arrow")
     assert out.schema["doc_id"].dataType.simpleString() == "string"
     assert out.count() == 7
-
-
-def test_unknown_hash_scheme_raises():
-    """Scheme dispatch must fail loudly on typos instead of silently
-    falling back to the non-portable xxh64 construction."""
-    import pytest
-
-    from merchant_classification_spark.operators.dedup import (
-        lsh_band_hashes,
-        minhash_signature,
-    )
-
-    with pytest.raises(ValueError, match="unknown hash scheme"):
-        minhash_signature("sh", scheme="md-5")
-    with pytest.raises(ValueError, match="unknown hash scheme"):
-        lsh_band_hashes("sig", 4, 16, scheme="MD5")
-
-
-def test_unknown_hash_scheme_raises_pipelines(spark):
-    import pytest
-
-    from merchant_classification_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        simhash_dedup_pairs,
-    )
-
-    df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="unknown hash scheme"):
-        minhash_dedup_pairs(df, "doc_id", "text", scheme="xxhash")
-    with pytest.raises(ValueError, match="unknown hash scheme"):
-        simhash_dedup_pairs(df, "doc_id", "text", scheme="sha1")
-
-
-def test_assign_representatives_doubling_matches_propagation(spark):
-    """A/B: pointer-doubling produces label-for-label the same fixed
-    point as plain propagation, and converges in O(log d) rounds where
-    propagation needs O(d) — a 60-node chain resolves under a 7-round
-    budget with doubling (coverage ≥ 2^7 > 60) but NOT with propagation
-    (7 rounds reach ≤ 7 hops)."""
-    import random
-
-    from merchant_classification_spark.operators.dedup import (
-        assign_representatives_doubling,
-    )
-
-    # random sparse graph: identical labels between the two variants
-    rng = random.Random(5)
-    n = 60
-    ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(40)]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = {
-        r.doc_id: r.rep
-        for r in assign_representatives(ids, pairs, max_iterations=50).collect()
-    }
-    b = {
-        r.doc_id: r.rep
-        for r in assign_representatives_doubling(ids, pairs).collect()
-    }
-    assert a == b and len(a) == n
-
-    # deep chain: doubling converges within 7 rounds, propagation can't
-    m = 60
-    cids = spark.createDataFrame([(i,) for i in range(m)], ["doc_id"])
-    cpairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(m - 1)], ["id_a", "id_b"]
-    )
-    deep = {
-        r.doc_id: r.rep
-        for r in assign_representatives_doubling(
-            cids, cpairs, max_iterations=7
-        ).collect()
-    }
-    assert set(deep.values()) == {0}
-    shallow = {
-        r.doc_id: r.rep
-        for r in assign_representatives(
-            cids, cpairs, max_iterations=7
-        ).collect()
-    }
-    assert set(shallow.values()) != {0}  # O(d) variant not converged yet
 
 
 def _naive_substring_dedup(rows, k):

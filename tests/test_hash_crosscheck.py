@@ -1,16 +1,11 @@
 """Independent full-output cross-checks for the hash-based dedup tiers.
 
-Since round 4 the driver-graded `minhash_neardup` / `simhash_neardup`
-queries run the engine-portable md5 scheme (functions/portable_hash.py) and
-are oracle-checked end-to-end in DuckDB. This module keeps BOTH schemes
-honest with exact independent recomputations in pure Python:
-
-  * xxh64 scheme (the compact-key scale option, no SQL twin): a
-    pure-Python implementation of Spark's XXH64 primitives (seed
-    semantics included), verified against Spark's own ``xxhash64`` on
-    fuzz samples, then used to replay the complete pipelines.
-  * md5 scheme: hashlib-based replay of the 60-bit md5-prefix hashes,
-    universal-hash permutations, banding, and verify.
+The driver-graded `minhash_neardup` / `simhash_neardup` queries hash with
+the engine-portable md5 construction (functions/portable_hash.py) and are
+oracle-checked end-to-end in DuckDB. This module checks the same operators
+against an exact independent recomputation in pure Python: a hashlib-based
+replay of the 60-bit md5-prefix hashes, universal-hash permutations,
+banding, and verify.
 
 Each test compares the FULL output pair set (ids and similarity values,
 bit-exact) against the Spark operator. See COVERAGE.md.
@@ -18,10 +13,7 @@ bit-exact) against the Spark operator. See COVERAGE.md.
 
 from __future__ import annotations
 
-import random
 import re
-
-from pyspark.sql import functions as F
 
 from merchant_classification_spark.operators.dedup import (
     minhash_dedup_pairs,
@@ -30,112 +22,7 @@ from merchant_classification_spark.operators.dedup import (
 from merchant_classification_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
-# Pure-Python XXH64 matching Spark's org.apache.spark.unsafe.hash.XXH64
-# (public algorithm; constants from the xxHash spec)
-# ---------------------------------------------------------------------------
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M = (1 << 64) - 1
-SEED = 42  # Spark's xxhash64 default seed
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _fmix(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
-
-
-def xxh64_int(i: int, seed: int) -> int:
-    h = (seed + _P5 + 4) & _M
-    h ^= ((i & 0xFFFFFFFF) * _P1) & _M
-    h = (_rotl(h, 23) * _P2 + _P3) & _M
-    return _fmix(h)
-
-
-def xxh64_long(v: int, seed: int) -> int:
-    h = (seed + _P5 + 8) & _M
-    h ^= (_rotl((v & _M) * _P2 & _M, 31) * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
-    return _fmix(h)
-
-
-def xxh64_bytes(data: bytes, seed: int) -> int:
-    n = len(data)
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M
-        v2 = (seed + _P2) & _M
-        v3 = seed & _M
-        v4 = (seed - _P1) & _M
-        i = 0
-        while i <= n - 32:
-            v1 =(_rotl((v1 + int.from_bytes(data[i : i + 8], "little") * _P2) & _M, 31) * _P1) & _M
-            v2 = (_rotl((v2 + int.from_bytes(data[i + 8 : i + 16], "little") * _P2) & _M, 31) * _P1) & _M
-            v3 = (_rotl((v3 + int.from_bytes(data[i + 16 : i + 24], "little") * _P2) & _M, 31) * _P1) & _M
-            v4 = (_rotl((v4 + int.from_bytes(data[i + 24 : i + 32], "little") * _P2) & _M, 31) * _P1) & _M
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M
-        for v in (v1, v2, v3, v4):
-            h ^= (_rotl((v * _P2) & _M, 31) * _P1) & _M
-            h = (h * _P1 + _P4) & _M
-    else:
-        h = (seed + _P5) & _M
-        i = 0
-    h = (h + n) & _M
-    while i <= n - 8:
-        k = (_rotl((int.from_bytes(data[i : i + 8], "little") * _P2) & _M, 31) * _P1) & _M
-        h ^= k
-        h = (_rotl(h, 27) * _P1 + _P4) & _M
-        i += 8
-    if i <= n - 4:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _P1) & _M
-        h = (_rotl(h, 23) * _P2 + _P3) & _M
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _M
-        h = (_rotl(h, 11) * _P1) & _M
-        i += 1
-    return _fmix(h)
-
-
-def _signed(u: int) -> int:
-    return u - (1 << 64) if u >= 1 << 63 else u
-
-
-def _unsigned(s: int) -> int:
-    return s & _M
-
-
-def py_xxhash64_str(s: str) -> int:
-    """Spark's xxhash64(string_col) as a signed long."""
-    return _signed(xxh64_bytes(s.encode("utf-8"), SEED))
-
-
-def py_xxhash64_int_long(i: int, h: int) -> int:
-    """Spark's xxhash64(int_col, long_col): running-seed fold."""
-    return _signed(xxh64_long(_unsigned(h), xxh64_int(i, SEED)))
-
-
-def py_xxhash64_int_longarray(b: int, arr: list[int]) -> int:
-    """Spark's xxhash64(int_col, array<long>_col): fold over elements."""
-    h = xxh64_int(b, SEED)
-    for v in arr:
-        h = xxh64_long(_unsigned(v), h)
-    return _signed(h)
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python replicas of the tokenize/shingle/signature pipeline
+# Pure-Python replicas of the tokenize/shingle/hash pipeline
 # ---------------------------------------------------------------------------
 
 
@@ -154,165 +41,6 @@ def py_shingles(text: str | None, n: int = 3) -> list[str]:
             seen.add(s)
             out.append(s)
     return out
-
-
-def py_minhash_sig(shingle_hashes: list[int], num_hashes: int = 64) -> list[int]:
-    return [
-        min(py_xxhash64_int_long(i, h) for h in shingle_hashes)
-        for i in range(num_hashes)
-    ]
-
-
-def py_simhash64(text: str | None) -> int:
-    counters = [0] * 64
-    for tok in py_tokens(text):
-        hu = _unsigned(py_xxhash64_str(tok))
-        for j in range(64):
-            counters[j] += 1 if (hu >> j) & 1 else -1
-    u = 0
-    for j in range(64):
-        if counters[j] > 0:
-            u |= 1 << j
-    return _signed(u)
-
-
-# ---------------------------------------------------------------------------
-# tests
-# ---------------------------------------------------------------------------
-
-
-def test_xxh64_primitives_match_spark(spark):
-    """Fuzz-parity of the Python XXH64 against Spark's xxhash64 for the
-    exact argument shapes the dedup operators use."""
-    rng = random.Random(7)
-    strings = [
-        "",
-        "a",
-        "hello world",
-        "abcdefgh",  # exactly 8 bytes
-        "abcdefghijklmnopqrstuvwxyz012345",  # exactly 32 bytes
-        "naïve café – ünïcode ✓",
-    ] + [
-        "".join(rng.choice("abcdefghij xyz'0189é") for _ in range(rng.randint(1, 80)))
-        for _ in range(40)
-    ]
-    sdf = spark.createDataFrame([(s,) for s in strings], ["s"]).select(
-        "s", F.xxhash64("s").alias("h")
-    )
-    for r in sdf.collect():
-        assert py_xxhash64_str(r.s) == r.h, f"string hash mismatch on {r.s!r}"
-
-    pairs = [
-        (rng.randint(0, 63), rng.randint(-(1 << 63), (1 << 63) - 1))
-        for _ in range(40)
-    ]
-    sdf2 = spark.createDataFrame(pairs, ["i", "h"]).select(
-        "i", "h", F.xxhash64(F.col("i").cast("int"), "h").alias("out")
-    )
-    for r in sdf2.collect():
-        assert py_xxhash64_int_long(r.i, r.h) == r.out
-
-    arrs = [
-        (rng.randint(0, 15), [rng.randint(-(1 << 63), (1 << 63) - 1) for _ in range(4)])
-        for _ in range(20)
-    ]
-    sdf3 = spark.createDataFrame(arrs, ["b", "arr"]).select(
-        "b", "arr", F.xxhash64(F.col("b").cast("int"), "arr").alias("out")
-    )
-    for r in sdf3.collect():
-        assert py_xxhash64_int_longarray(r.b, list(r.arr)) == r.out
-
-
-def test_minhash_neardup_full_output_crosscheck(spark, sf_dir):
-    """Replay the ENTIRE MinHash-LSH pipeline (shingle → signature → bands
-    → bucket candidates → exact-Jaccard verify) in pure Python and compare
-    the full pair set, jaccard values bit-exact, against the operator."""
-    threshold, shingle_size, num_hashes, bands = 0.6, 3, 64, 16
-    rows_per_band = num_hashes // bands
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-
-    shh = {
-        r.doc_id: [py_xxhash64_str(s) for s in py_shingles(r.text, shingle_size)]
-        for r in docs
-    }
-    sigs = {d: py_minhash_sig(h, num_hashes) for d, h in shh.items()}
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for d, sig in sigs.items():
-        for b in range(bands):
-            bh = py_xxhash64_int_longarray(
-                b, sig[b * rows_per_band : (b + 1) * rows_per_band]
-            )
-            buckets.setdefault((b, bh), []).append(d)
-    cands = set()
-    for ids in buckets.values():
-        for i, a in enumerate(ids):
-            for b_ in ids[i + 1 :]:
-                cands.add((min(a, b_), max(a, b_)))
-    expected = set()
-    for a, b_ in cands:
-        sa, sb = set(shh[a]), set(shh[b_])
-        union = len(sa | sb)
-        j = len(sa & sb) / union if union else 0.0
-        if j >= threshold:
-            expected.add((a, b_, j))
-
-    got = {
-        (r.id_a, r.id_b, r.jaccard_sim)
-        for r in minhash_dedup_pairs(
-            spark.createDataFrame([(r.doc_id, r.text) for r in docs], ["doc_id", "text"]),
-            "doc_id",
-            "text",
-            threshold=threshold,
-            shingle_size=shingle_size,
-            num_hashes=num_hashes,
-            bands=bands,
-            scheme="xxh64",
-        ).collect()
-    }
-    assert got == expected
-    assert expected, "corpus must actually contain near-duplicates"
-
-
-def test_simhash_neardup_full_output_crosscheck(spark, sf_dir):
-    """Replay SimHash signature + 16-bit pigeonhole banding + Hamming
-    verify in pure Python; compare the full pair set with distances."""
-    max_hamming = 6
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    sims = {r.doc_id: py_simhash64(r.text) for r in docs}
-
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for d, s in sims.items():
-        u = _unsigned(s)
-        for b in range(4):
-            buckets.setdefault((b, (u >> (b * 16)) & 0xFFFF), []).append(d)
-    cands = set()
-    for ids in buckets.values():
-        for i, a in enumerate(ids):
-            for b_ in ids[i + 1 :]:
-                cands.add((min(a, b_), max(a, b_)))
-    expected = set()
-    for a, b_ in cands:
-        ham = bin(_unsigned(sims[a]) ^ _unsigned(sims[b_])).count("1")
-        if ham <= max_hamming:
-            expected.add((a, b_, ham))
-
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_dedup_pairs(
-            spark.createDataFrame([(r.doc_id, r.text) for r in docs], ["doc_id", "text"]),
-            "doc_id",
-            "text",
-            max_hamming=max_hamming,
-            scheme="xxh64",
-        ).collect()
-    }
-    assert got == expected
-    assert expected, "corpus must actually contain near-duplicates"
-
-
-# ---------------------------------------------------------------------------
-# md5 (portable) scheme: hashlib-based replays
-# ---------------------------------------------------------------------------
 
 
 def py_md5_long60(s: str) -> int:
@@ -375,7 +103,6 @@ def test_md5_minhash_neardup_full_output_crosscheck(spark, sf_dir):
             shingle_size=shingle_size,
             num_hashes=num_hashes,
             bands=bands,
-            scheme="md5",
         ).collect()
     }
     assert got == expected
@@ -422,7 +149,6 @@ def test_md5_simhash_neardup_full_output_crosscheck(spark, sf_dir):
             "doc_id",
             "text",
             max_hamming=max_hamming,
-            scheme="md5",
         ).collect()
     }
     assert got == expected

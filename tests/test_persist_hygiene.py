@@ -127,26 +127,3 @@ def test_semantic_dedup_releases_all_persists(spark, tables):
     assert len(gained) <= 1, (
         f"semantic_dedup_portable leaked internal persists: {gained}"
     )
-
-
-def test_assign_representatives_doubling_releases_round_snapshots(spark, docs):
-    """The doubling loop checkpoints per round (it MUST — the shortcut
-    self-join doubles the logical plan per round otherwise, and the
-    driver-side planning cost goes exponential); superseded round
-    snapshots are released immediately, so only the returned frame's
-    own block survives."""
-    from merchant_classification_spark.operators.dedup import (
-        assign_representatives_doubling,
-    )
-
-    ids = docs.select("doc_id")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
-    )
-    before = persistent_rdd_ids(spark)
-    out = assign_representatives_doubling(ids, pairs)
-    assert out.count() == ids.count()
-    gained = persistent_rdd_ids(spark) - before
-    assert len(gained) <= 1, (
-        f"doubling loop leaked round snapshots: {gained}"
-    )

@@ -1,32 +1,24 @@
-"""Plan-SIZE regression guards for the iterative rep-assign operators
+"""Plan-SIZE regression guard for the iterative rep-assign operator
 (round-9 livelock class: a loop whose round references its previous
 frame twice DOUBLES the logical plan per round unless it checkpoints —
 execution stays cheap on cached data while driver-side planning goes
-exponential and wedges the session). The storage-block side is covered
-by tests/test_persist_hygiene.py; this guards the PLAN side, so a
-future edit swapping the per-round checkpoint back to persist fails
-loudly here instead of hanging a 100 TB job's driver.
+exponential and wedges the session). ``assign_representatives``
+references its previous frame once per round, so its plan grows
+linearly. The storage-block side is covered by
+tests/test_persist_hygiene.py; this guards the PLAN side, so a future
+edit that makes a round reuse its previous frame twice fails loudly
+here instead of hanging a 100 TB job's driver.
 
-The assertion anchors on the RETURNED frame's analyzed-plan string:
-with the checkpoint in place the last round's frame is a LogicalRDD
-leaf (a few hundred chars); the pre-fix shape drags 2^rounds copies of
-the join lineage along (measured tens of thousands of chars for the
-same input), so a generous fixed threshold separates the two by two
-orders of magnitude without being brittle about plan rendering."""
+The assertion anchors on the RETURNED frame's analyzed-plan string: a
+fixed threshold two orders of magnitude under the exponential regime
+separates the two shapes without being brittle about plan rendering."""
 
 from pyspark.sql import functions as F
 
-from merchant_classification_spark.operators.dedup import (
-    assign_representatives,
-    assign_representatives_doubling,
-)
-
-#: a path graph this long needs ~log2(n) doubling rounds (> 4), deep
-#: enough that the pre-fix exponential shape is unmistakable
-CHAIN = 48
+from merchant_classification_spark.operators.dedup import assign_representatives
 
 
-def _chain(spark, n=CHAIN):
+def _chain(spark, n):
     ids = spark.range(n).select(F.col("id").alias("doc_id"))
     pairs = (
         spark.range(n - 1)
@@ -41,26 +33,14 @@ def _plan_chars(df) -> int:
     return len(df._jdf.queryExecution().analyzed().toString())
 
 
-def test_doubling_plan_stays_leaf_sized(spark):
-    ids, pairs = _chain(spark)
-    labels = assign_representatives_doubling(ids, pairs)
-    # correctness first: one component, rep = 0 everywhere
-    assert {r["rep"] for r in labels.collect()} == {0}
-    # the checkpoint-per-round contract: the returned frame is a
-    # select over a LogicalRDD leaf, NOT the accumulated join lineage.
-    # Pre-fix this measured > 100k chars for the same chain.
-    assert _plan_chars(labels) < 4_000, _plan_chars(labels)
-
-
 def test_propagation_plan_stays_bounded(spark):
-    # a short chain: the propagation variant converges in O(diameter)
-    # rounds, so the deep doubling chain would need ~CHAIN rounds here
+    # a short chain: propagation converges in O(diameter) rounds
     ids, pairs = _chain(spark, n=10)
     labels = assign_representatives(ids, pairs, max_iterations=12)
     assert {r["rep"] for r in labels.collect()} == {0}
-    # the propagation variant references its previous frame ONCE per
-    # round (linear growth) and persists instead of checkpointing —
-    # bounded, but not leaf-sized. The threshold tolerates linear
-    # growth across the ~10 rounds this chain needs while sitting two
-    # orders of magnitude under the exponential regime.
+    # propagation references its previous frame ONCE per round (linear
+    # growth) and persists instead of checkpointing — bounded, but not
+    # leaf-sized. The threshold tolerates linear growth across the ~10
+    # rounds this chain needs while sitting two orders of magnitude
+    # under the exponential regime.
     assert _plan_chars(labels) < 400_000, _plan_chars(labels)

@@ -61,6 +61,29 @@ def test_codebook_fit_rejects_bad_split(fitted):
         _fit_pq_codebooks([], N_SUB, N_CODES)
 
 
+def test_pq_fit_empty_frame_raises(spark, vectors):
+    from merchant_classification_spark.operators.similarity import pq_fit
+
+    with pytest.raises(
+        ValueError, match="fit sample must be a non-empty list of vectors"
+    ):
+        pq_fit(vectors.limit(0), n_subspaces=N_SUB)
+
+
+def test_pq_fit_single_row_caps_centroids_and_codes(spark, vectors):
+    """One fit vector: k-means caps k at the sample size, so the index
+    has exactly one coarse cell and one code per subspace, each equal
+    to the vector itself (or its slice)."""
+    from merchant_classification_spark.operators.similarity import pq_fit
+
+    one = vectors.where(F.col("vec_id") == 0)
+    v = one.first()["embedding"]
+    coarse, books = pq_fit(one, n_centroids=4, n_subspaces=N_SUB, n_codes=4)
+    assert coarse == [list(v)]
+    ds = DIM // N_SUB
+    assert books == [[list(v[m * ds:(m + 1) * ds])] for m in range(N_SUB)]
+
+
 def _py_code(v, book):
     best, best_d = 1, None
     for j, c in enumerate(book):
@@ -320,126 +343,6 @@ def test_arrow_encoder_one_shot_matches_native(spark, vectors):
         pq_topk_portable(vectors, qs, encoder="fast")
 
 
-def test_residual_codes_match_python_replay(spark, vectors, fitted):
-    """Residual mode codes x - coarse[cell]: the Spark zip_with
-    subtraction + per-subspace argmin must match a plain-Python replay
-    of the same (first-min assignment, single-subtraction residual,
-    left-assoc distance fold) pipeline bit-for-bit."""
-    from merchant_classification_spark.operators.similarity import (
-        fit_residuals,
-        pq_encode,
-        pq_fit,
-    )
-
-    fit, _ = fitted
-    coarse, books = pq_fit(
-        vectors, n_centroids=8, n_subspaces=N_SUB, n_codes=N_CODES,
-        fit_target=128, residual=True,
-    )
-    # the residual codebooks differ from the raw ones (they model the
-    # within-cell distribution) — if they matched, the flag is dead
-    raw_books = _fit_pq_codebooks(fit, N_SUB, N_CODES)
-    assert books != raw_books
-    ds = DIM // N_SUB
-    got = pq_encode(vectors, coarse, books, residual=True).collect()
-    vecs = {r["vec_id"]: r["embedding"] for r in vectors.collect()}
-    for r in got[:60]:
-        v = vecs[r["vec_id"]]
-        cell = _py_code(v, coarse)
-        assert r["cell"] == cell
-        cc = coarse[cell - 1]
-        rv = [v[i] - cc[i] for i in range(DIM)]
-        want = [
-            _py_code(rv[m * ds:(m + 1) * ds], books[m])
-            for m in range(N_SUB)
-        ]
-        assert list(r["codes"]) == want, r["vec_id"]
-
-
-def test_residual_arrow_encode_bit_identical_to_native(spark, vectors):
-    from merchant_classification_spark.operators.similarity import (
-        pq_encode,
-        pq_encode_arrow,
-        pq_fit,
-    )
-
-    coarse, books = pq_fit(
-        vectors, n_centroids=8, n_subspaces=N_SUB, n_codes=N_CODES,
-        fit_target=128, residual=True,
-    )
-    native = {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in pq_encode(vectors, coarse, books, residual=True).collect()
-    }
-    arrow = {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in pq_encode_arrow(
-            vectors.repartition(5), coarse, books, residual=True
-        ).collect()
-    }
-    assert native == arrow
-    assert len(native) == 400
-
-
-def test_residual_persisted_index_matches_one_shot(spark, vectors, tmp_path):
-    from merchant_classification_spark.operators.similarity import (
-        pq_encode,
-        pq_fit,
-        pq_search,
-    )
-
-    qs = vectors.where(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    kwargs = dict(n_centroids=8, n_subspaces=N_SUB, n_codes=N_CODES,
-                  fit_target=128)
-    coarse, books = pq_fit(vectors, residual=True, **kwargs)
-    path = str(tmp_path / "pq_index_res")
-    pq_encode(vectors, coarse, books, residual=True).write.parquet(path)
-    index = spark.read.parquet(path)
-    via_index = pq_search(
-        index, vectors, coarse, books, qs,
-        k=5, n_probe=3, refine_factor=8, residual=True,
-    )
-    one_shot = pq_topk_portable(
-        vectors, qs, k=5, n_probe=3, refine_factor=8, residual=True,
-        **kwargs,
-    )
-    assert sorted(map(tuple, via_index.collect())) == sorted(
-        map(tuple, one_shot.collect())
-    )
-
-
-def test_residual_adc_ranking_beats_or_matches_raw(spark, vectors):
-    """The point of residual coding: WITHOUT the refine stage (pure ADC
-    ranking) the residual codebooks should recover at least the raw
-    codebooks' recall on clustered data — the coarse quantizer soaks up
-    between-cluster variance and the codes model what remains."""
-    from merchant_classification_spark.operators.similarity import (
-        with_recall_at_k,
-    )
-
-    qs = vectors.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    exact = brute_force_topk_l2(vectors, qs, k=5)
-    kwargs = dict(k=5, n_centroids=8, n_probe=4, n_subspaces=N_SUB,
-                  n_codes=N_CODES, fit_target=128, refine_factor=None)
-
-    def avg_recall(residual):
-        rec = with_recall_at_k(
-            pq_topk_portable(vectors, qs, residual=residual, **kwargs),
-            exact,
-        )
-        rows = rec.select("query_id", "recall_at_k").distinct().collect()
-        return sum(r["recall_at_k"] for r in rows) / len(rows)
-
-    raw, res = avg_recall(False), avg_recall(True)
-    assert res >= raw - 0.051, (raw, res)
-
-
 def test_index_append_row_identical_to_full_reencode(spark, vectors, fitted, tmp_path):
     """Incremental maintenance contract: init-encode batch 0 +
     pq_index_append of a delta batch 1, read back through
@@ -489,50 +392,3 @@ def test_index_append_row_identical_to_full_reencode(spark, vectors, fitted, tmp
 
     with pytest.raises(ValueError, match="unknown encoder"):
         pq_index_append(delta, coarse, books, index_path, 2, encoder="x")
-
-
-def test_opq_rotation_orthonormal_deterministic_balanced(spark, vectors):
-    """Parametric-OPQ rotation (fit_opq_rotation): orthonormal (so L2
-    and the exact baseline are invariant), deterministic across refits
-    (literal-replay discipline), variance balanced across subspace
-    blocks (the eigenvalue-allocation objective), and rotate_vectors'
-    Arrow matmul agrees with a driver-side numpy replay."""
-    import numpy as np
-
-    from merchant_classification_spark.operators.similarity import (
-        fit_opq_rotation,
-        rotate_vectors,
-    )
-
-    R1 = fit_opq_rotation(vectors, N_SUB, fit_target=128)
-    R2 = fit_opq_rotation(vectors, N_SUB, fit_target=128)
-    assert R1 == R2
-    R = np.asarray(R1)
-    assert R.shape == (DIM, DIM)
-    assert np.allclose(R @ R.T, np.eye(DIM), atol=1e-9)
-
-    # balanced allocation: block log-variance products within the
-    # spread of one component (greedy bound) of each other
-    X = np.array([r["embedding"] for r in vectors.collect()])
-    Y = X @ R.T
-    per = DIM // N_SUB
-    loads = [
-        float(np.sum(np.log(np.var(Y[:, b * per : (b + 1) * per], axis=0))))
-        for b in range(N_SUB)
-    ]
-    lv = np.log(np.maximum(np.sort(np.var(X @ R.T, axis=0))[::-1], 1e-12))
-    assert max(loads) - min(loads) <= float(lv[0] - lv[-1]) + 1e-9
-
-    got = {
-        r["vec_id"]: np.asarray(r["embedding"])
-        for r in rotate_vectors(
-            vectors.repartition(5), R1, "embedding"
-        ).collect()
-    }
-    ids = [r["vec_id"] for r in vectors.collect()]
-    for i, vid in enumerate(ids):
-        assert np.allclose(got[vid], (X[i] @ R.T), atol=1e-12)
-    # distances preserved: rotation-invariance of L2
-    d_raw = np.sum((X[0] - X[1]) ** 2)
-    d_rot = np.sum((got[ids[0]] - got[ids[1]]) ** 2)
-    assert abs(d_raw - d_rot) < 1e-9

@@ -6,6 +6,7 @@ import os
 import random
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.operators.similarity import (
@@ -200,10 +201,20 @@ def test_continuous_trigger_serves_batches_as_they_arrive(spark, tmp_path):
     )
     try:
         def rows_in(path):
+            # a failed sink surfaces its own error, not a timeout
+            if q.exception() is not None:
+                raise q.exception()
             try:
                 return spark.read.parquet(path).count()
-            except Exception:
-                return 0
+            except AnalysisException as e:
+                # no committed output yet: the path is missing, or the
+                # first write holds only its _temporary directory
+                if e.getCondition() in (
+                    "PATH_NOT_FOUND",
+                    "UNABLE_TO_INFER_SCHEMA",
+                ):
+                    return 0
+                raise
 
         deadline = time.time() + 60
         while rows_in(out) < 3 * 5 and time.time() < deadline:

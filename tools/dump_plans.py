@@ -4,8 +4,9 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> [member ...]
 
 Writes <out_dir>/<member>_<suffix>.txt for each named member (default:
 every BRANCH_QUERIES member). The plan is the formatted physical plan
-exactly as `df.explain("formatted")` prints it — the committed evidence
-for plan-shape claims in OPTIMIZATION_*.md.
+exactly as `df.explain("formatted")` prints it — the evidence for
+plan-shape claims in OPTIMIZATION_*.md. Run it at the parent and at the
+change with two suffixes (e.g. `before`, `after`) and diff the pairs.
 """
 
 from __future__ import annotations

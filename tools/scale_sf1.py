@@ -385,8 +385,8 @@ def main() -> None:
         "near-quadratic, where no plan wins). Output is identical at any\n"
         "q (every filter is lossless per q), so the guard tunes only the\n"
         "plan. Measured on the adversarial shape (aligned 16-char keys,\n"
-        "14 random digits on the shared 10-char alphabet, k=2,\n"
-        "`tools/edjoin_guard_bench.py`): 30k keys guarded (q 2->4) 8.6 s\n"
+        "14 random digits on the shared 10-char alphabet, k=2): 30k\n"
+        "keys guarded (q 2->4) 8.6 s\n"
         "vs 67.6 s unguarded, outputs identical; 150k keys guarded 29.0 s\n"
         "(the same scale that measured 74-87 s banded-q2 / 349 s\n"
         "residual-only in round 5); benign sf0.1 customer names probe to\n"
@@ -453,19 +453,18 @@ def main() -> None:
         "0.8750 / 0.70 at the graded dial) kept RAW as the ann_pq\n"
         "default: the synthetic vectors are weakly clustered, so the\n"
         "coarse quantizer leaves the residual codebooks nothing extra\n"
-        "to model; the flag ships for corpora with real structure.\n"
+        "to model; PQ codes quantize the raw vector.\n"
         "Round 11 ran the next recall lever from the literature under\n"
         "the same adopt-on-evidence discipline: a parametric-OPQ\n"
         "rotation (PCA + balanced eigenvalue allocation, Ge et al.\n"
-        "CVPR 2013; operators/similarity.py fit_opq_rotation, fitted on\n"
-        "the same deterministic stride sample, orthonormality and\n"
-        "determinism test-asserted) measured at the identical graded\n"
-        "dial via tools/opq_ab.py: raw 0.8625 avg / 0.80 min recall@10\n"
+        "CVPR 2013, fitted on the same deterministic stride sample)\n"
+        "measured at the identical graded dial: raw 0.8625 avg / 0.80\n"
+        "min recall@10\n"
         "vs OPQ-rotated 0.8438 / 0.70 — REJECTED, raw stays the\n"
         "default, for the same structural reason (near-isotropic\n"
         "synthetic embeddings give the rotation no correlated variance\n"
-        "to rebalance, so it only perturbs the codebook geometry). The\n"
-        "rotation ships for corpora with anisotropic structure.\n\n",
+        "to rebalance, so it only perturbs the codebook geometry). No\n"
+        "rotation ships.\n\n",
         "| probe | family | sf0.1 | sf1 (derived) | alpha | verdict |\n",
         "|---|---|---|---|---|---|\n",
     ]
