@@ -2,43 +2,28 @@
 config/configure_notebook.py — SURVEY.md §0).
 
 The reference loads a YAML of table paths / model name / executor count.
-Same shape here, as a typed dataclass: defaults work out of the box, a
-YAML file overrides when present (pyyaml optional — the engine has no
-hard dependency on it), env var SPARK_GRAFT_SF_DIR overrides the data
-root for the test corpus.
+Same shape here, as a typed dataclass holding only what the train
+pipeline reads: defaults work out of the box, and a YAML file overrides
+them when present (pyyaml optional — the engine has no hard dependency on
+it). Unknown YAML keys, such as the reference's table paths, are ignored.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
 class EngineConfig:
-    # data roots
-    data_dir: str = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-    )
-    table_format: str = "parquet"  # "delta" on clusters with delta jars
-
-    # transaction-pipeline paths (reference application.yaml:1-3)
-    transactions_raw: str = ""
-    transactions_fmt: str = ""
-    train_path: str = ""
-    test_path: str = ""
-
     # model (reference application.yaml:5-13)
     model_name: str = "merchcat"
     model_path: str = "/tmp/mcs_models"
+    #: concurrent grid-search trials (the reference's executors=20)
     tuning_parallelism: int = 20
 
     # sampling policy (reference 01_merchcat_etl.py:159, 02_merchcat_ml.py:541)
     sample_size: int = 5000
     count_threshold: int = 100
-    min_labels_per_class: int = 50
     test_fraction: float = 0.1
     seed: int = 42
 

@@ -1,7 +1,6 @@
 from merchant_classification_spark.functions.cleaning import (
     CLEANING_STEPS,
     clean_narrative,
-    clean_narrative_python,
 )
 from merchant_classification_spark.functions.fasttext_format import to_fasttext_line
 from merchant_classification_spark.functions.patterns import (
@@ -12,7 +11,6 @@ from merchant_classification_spark.functions.patterns import (
 __all__ = [
     "CLEANING_STEPS",
     "clean_narrative",
-    "clean_narrative_python",
     "to_fasttext_line",
     "DATETIME_PATTERN",
     "PRICE_PATTERN",

@@ -8,9 +8,8 @@ Catalyst constant-folds into a single whole-stage-codegen'd projection.
 The reference runs its date scrub as an Arrow pandas UDF because its
 pattern is Python-dialect-only; our pattern (see ``patterns.py``) is
 dialect-portable, so the whole chain stays JVM-side — no Python worker, no
-Arrow hop, ~10-100x cheaper per the usual UDF tax. A pandas-UDF fallback
-(``clean_narrative_python``) is kept for parity testing and as an escape
-hatch, plus a pure-Python ``clean_text`` used by tests as the oracle.
+Arrow hop, ~10-100x cheaper per the usual UDF tax. A pure-Python
+``clean_text`` is used by tests as the oracle.
 
 The steps are spelled for Java's backtracking engine, whose per-row cost
 is most of a scoring pass:
@@ -31,7 +30,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -69,7 +67,7 @@ def clean_narrative(col: Column | str, trim: bool = True) -> Column:
     return F.trim(out) if trim else out
 
 
-# --- Python path (oracle + escape hatch) ----------------------------------
+# --- Python path (oracle) -------------------------------------------------
 
 _COMPILED = [(re.compile(p, re.ASCII), r) for p, r in CLEANING_STEPS]
 
@@ -80,16 +78,3 @@ def clean_text(text: str, trim: bool = True) -> str:
     for pattern, repl in _COMPILED:
         out = pattern.sub(repl, out)
     return out.strip() if trim else out
-
-
-def clean_narrative_python(col: Column | str, trim: bool = True) -> Column:
-    """Arrow pandas-UDF fallback running the Python `re` engine.
-
-    Only for dialect-parity testing — the native path is the product.
-    """
-
-    @F.pandas_udf("string")
-    def _clean(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: clean_text(v, trim=trim))
-
-    return _clean(F.col(col) if isinstance(col, str) else col)

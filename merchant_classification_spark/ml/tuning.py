@@ -2,11 +2,19 @@
 
 The reference tunes fasttext with hyperopt TPE over SparkTrials
 (parallelism 20, 25→90 trials; reference 02_merchcat_ml.py:305-323,392-419
-— SURVEY.md §2.11 M3). The MLlib-native mapping is TrainValidationSplit /
-CrossValidator over a param grid with `parallelism=` — the same
-cluster-shape (each trial is an independent fit scheduled concurrently)
-without the external dependency. hyperopt, when installed, can drive the
-same objective; we gate it behind an import so the engine has no hard dep.
+— SURVEY.md §2.11 M3). Every trial here goes through ``_trial`` (fit the
+base classifier with the trial's params, score the held-out split), driven
+by one of two searches:
+
+  * ``tune_classifier`` — grid search, up to ``parallelism`` trials in
+    flight; the train pipeline passes ``EngineConfig.tuning_parallelism``;
+  * ``tune_classifier_tpe`` — hyperopt TPE, the reference's algorithm,
+    when hyperopt is installed (no hard dependency).
+
+SparkTrials ships each trial to an executor as one task: the shape for
+single-node libraries such as fasttext, whose objectives call hyperopt's
+own ``fmin(trials=SparkTrials(n))``. An MLlib fit launches Spark jobs
+itself, so it is driven from the driver, as here.
 """
 
 from __future__ import annotations
@@ -39,124 +47,70 @@ def grid(**axes: list) -> list[dict]:
     return out
 
 
-def tune_classifier(
-    train: DataFrame,
-    validation: DataFrame,
-    base: NarrativeClassifier,
-    param_grid: list[dict],
-) -> tuple[NarrativeClassifierModel, TuningResult]:
-    """Grid search: fit one model per param dict, pick by validation
-    accuracy (ties → first in grid order, so results are deterministic).
+def _trial(
+    train: DataFrame, val: DataFrame, base: NarrativeClassifier, params: dict
+) -> tuple[NarrativeClassifierModel, float]:
+    """Fit ``base`` with ``params`` overriding its fields; return the model
+    and its accuracy on ``val``. A null prediction or label is a miss."""
+    spec = NarrativeClassifier(**{**base.__dict__, **params})
+    model = spec.fit(train)
+    hit = F.col(spec.prediction_col) == F.col(spec.label_col)
+    acc = model.transform(val).agg(F.avg(F.when(hit, 1.0).otherwise(0.0)))
+    return model, float(acc.collect()[0][0])
 
-    Each trial is itself a distributed fit, mirroring the reference's
-    one-trial-per-node layout (spark.task.cpus=8 there); on a large
-    cluster wrap the loop in a thread pool for trial-level parallelism —
-    Spark schedulers interleave concurrent jobs safely.
-    """
-    best_model: NarrativeClassifierModel | None = None
-    best = TuningResult(best_params={}, best_accuracy=-1.0)
+
+def _persist_validation(validation: DataFrame) -> DataFrame:
+    """Persist the validation split once for all trials. An empty split
+    would score every trial 0.0 and crown the first, so it raises."""
     val = validation.persist()
-    try:
-        for params in param_grid:
-            spec = NarrativeClassifier(
-                **{
-                    **base.__dict__,
-                    **params,
-                }
-            )
-            model = spec.fit(train)
-            scored = model.transform(val)
-            acc_row = scored.agg(
-                F.avg(
-                    F.when(
-                        F.col(spec.prediction_col) == F.col(spec.label_col), 1.0
-                    ).otherwise(0.0)
-                ).alias("acc")
-            ).collect()[0]
-            acc = float(acc_row["acc"]) if acc_row["acc"] is not None else 0.0
-            best.trials.append({"params": params, "accuracy": acc})
-            if acc > best.best_accuracy:
-                best.best_accuracy = acc
-                best.best_params = params
-                best_model = model
-    finally:
+    if val.isEmpty():
         val.unpersist()
-    assert best_model is not None, "param_grid must be non-empty"
-    return best_model, best
+        raise ValueError("validation frame is empty: no trial can be scored")
+    return val
 
 
-def tune_classifier_parallel(
+def tune_classifier(
     train: DataFrame,
     validation: DataFrame,
     base: NarrativeClassifier,
     param_grid: list[dict],
     parallelism: int = 4,
 ) -> tuple[NarrativeClassifierModel, TuningResult]:
-    """Concurrent trials: each trial is an independent distributed fit
-    driven from its own driver thread, so up to ``parallelism`` Spark jobs
-    run at once — the cluster shape of the reference's hyperopt
-    SparkTrials(parallelism=20) (reference 02_merchcat_ml.py:305-323)
-    without the external dependency.
+    """Grid search: one trial per param dict, up to ``parallelism`` at
+    once, each an independent distributed fit from its own driver thread.
 
     Spark job scheduling is thread-safe (CrossValidator uses the same
     pattern); set ``spark.scheduler.mode=FAIR`` on a shared cluster so
-    concurrent trials split executors instead of queueing FIFO. The
-    winner is chosen by (accuracy, grid order) — identical to the serial
-    ``tune_classifier`` regardless of completion order. Each trial entry
-    records wall-clock start/end so overlap is observable.
+    concurrent trials split executors instead of queueing FIFO. The winner
+    is chosen by (accuracy, grid order), so ties go to the first grid
+    point whatever the completion order. Each trial records its wall-clock
+    ``started_at`` / ``ended_at`` (``time.monotonic``).
     """
-    spark = train.sparkSession
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", "tuning")
-    val = validation.persist()
-    val.count()  # materialize once before the threads race to use it
+    if not param_grid:
+        raise ValueError("param_grid must be non-empty")
+    val = _persist_validation(validation)
 
-    def run_trial(idx_params: tuple[int, dict]) -> dict:
-        idx, params = idx_params
+    def run(params: dict) -> tuple[NarrativeClassifierModel, dict]:
         t0 = time.monotonic()
-        spec = NarrativeClassifier(**{**base.__dict__, **params})
-        model = spec.fit(train)
-        acc_row = (
-            model.transform(val)
-            .agg(
-                F.avg(
-                    F.when(
-                        F.col(spec.prediction_col) == F.col(spec.label_col), 1.0
-                    ).otherwise(0.0)
-                ).alias("acc")
-            )
-            .collect()[0]
-        )
-        acc = float(acc_row["acc"]) if acc_row["acc"] is not None else 0.0
-        return {
-            "idx": idx,
+        model, acc = _trial(train, val, base, params)
+        return model, {
             "params": params,
             "accuracy": acc,
-            "model": model,
             "started_at": t0,
             "ended_at": time.monotonic(),
         }
 
     try:
         with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
-            results = list(pool.map(run_trial, enumerate(param_grid)))
+            results = list(pool.map(run, param_grid))  # grid order
     finally:
         val.unpersist()
-    assert results, "param_grid must be non-empty"
-    results.sort(key=lambda r: r["idx"])  # deterministic tie-break order
-    winner = max(results, key=lambda r: (r["accuracy"], -r["idx"]))
-    trials = [
-        {
-            "params": r["params"],
-            "accuracy": r["accuracy"],
-            "started_at": r["started_at"],
-            "ended_at": r["ended_at"],
-        }
-        for r in results
-    ]
-    return winner["model"], TuningResult(
+    best = max(range(len(results)), key=lambda i: (results[i][1]["accuracy"], -i))
+    model, winner = results[best]
+    return model, TuningResult(
         best_params=winner["params"],
         best_accuracy=winner["accuracy"],
-        trials=trials,
+        trials=[trial for _, trial in results],
     )
 
 
@@ -171,8 +125,8 @@ def tune_classifier_tpe(
     """Adaptive (TPE) search via hyperopt when installed — the reference's
     exact algorithm (02_merchcat_ml.py:392-419: hp.quniform/loguniform
     space, tpe.suggest, 25→90 evals). Optional dependency: raises
-    ImportError with a clear message if hyperopt is absent; the grid and
-    parallel-grid paths above have no external deps.
+    ImportError with a clear message if hyperopt is absent; the grid
+    search ``tune_classifier`` has no external deps.
 
     ``space`` maps param name → hyperopt expression (e.g.
     ``{"num_features": hp.choice(...), "max_iter": hp.quniform(...)}``).
@@ -182,11 +136,13 @@ def tune_classifier_tpe(
         from hyperopt import Trials, fmin, tpe
     except ImportError as e:  # pragma: no cover - exercised when installed
         raise ImportError(
-            "tune_classifier_tpe requires hyperopt; use tune_classifier / "
-            "tune_classifier_parallel for the dependency-free grid paths"
+            "tune_classifier_tpe requires hyperopt; use tune_classifier "
+            "for the dependency-free grid search"
         ) from e
+    if not space or max_evals < 1:
+        raise ValueError("space must be non-empty and max_evals at least 1")
 
-    val = validation.persist()
+    val = _persist_validation(validation)
     trials_log: list[dict] = []
     best_state: dict = {"acc": -1.0, "model": None, "params": None}
 
@@ -195,20 +151,7 @@ def tune_classifier_tpe(
             k: int(v) if isinstance(v, float) and float(v).is_integer() else v
             for k, v in params.items()
         }
-        spec = NarrativeClassifier(**{**base.__dict__, **clean})
-        model = spec.fit(train)
-        acc_row = (
-            model.transform(val)
-            .agg(
-                F.avg(
-                    F.when(
-                        F.col(spec.prediction_col) == F.col(spec.label_col), 1.0
-                    ).otherwise(0.0)
-                ).alias("acc")
-            )
-            .collect()[0]
-        )
-        acc = float(acc_row["acc"]) if acc_row["acc"] is not None else 0.0
+        model, acc = _trial(train, val, base, clean)
         trials_log.append({"params": clean, "accuracy": acc})
         if acc > best_state["acc"]:
             best_state.update(acc=acc, model=model, params=clean)
@@ -226,127 +169,8 @@ def tune_classifier_tpe(
         )
     finally:
         val.unpersist()
-    assert best_state["model"] is not None
     return best_state["model"], TuningResult(
         best_params=best_state["params"],
         best_accuracy=best_state["acc"],
         trials=trials_log,
     )
-
-
-def tune_with_spark_trials(
-    objective,
-    space: dict,
-    max_evals: int = 16,
-    parallelism: int = 2,
-    seed: int = 42,
-):
-    """Cluster-distributed TPE via hyperopt's ``SparkTrials`` (the
-    reference drives exactly this, 02_merchcat_ml.py:315): each trial is
-    shipped to an executor as one Spark task, which is the right shape for
-    SINGLE-NODE training libraries (fasttext/sklearn/xgboost-local — the
-    reference's fasttext case). Spark-native MLlib models must NOT nest
-    jobs inside executors, so the engine routes those through
-    ``tune_classifier_parallel`` (driver-side concurrent trials — the
-    same cluster utilization, legal job topology).
-
-    ``objective`` must be a self-contained picklable callable (no
-    DataFrame/SparkSession captures). Returns (best_params, trials).
-    Optional dependency: ImportError with guidance when hyperopt is
-    absent.
-    """
-    try:
-        import numpy as np
-        from hyperopt import SparkTrials, fmin, tpe
-    except ImportError as e:  # pragma: no cover - exercised when installed
-        raise ImportError(
-            "tune_with_spark_trials requires hyperopt; MLlib models tune "
-            "via tune_classifier / tune_classifier_parallel instead"
-        ) from e
-
-    trials = SparkTrials(parallelism=parallelism)
-    best = fmin(
-        fn=objective,
-        space=space,
-        algo=tpe.suggest,
-        max_evals=max_evals,
-        trials=trials,
-        rstate=np.random.default_rng(seed),
-        show_progressbar=False,
-    )
-    return best, trials
-
-
-def tune_with_crossvalidator(
-    train: DataFrame,
-    base: NarrativeClassifier,
-    reg_params: list[float] = (0.0, 0.01),
-    max_iters: list[int] = (20, 50),
-    num_folds: int = 3,
-    parallelism: int = 4,
-    seed: int = 42,
-) -> tuple[NarrativeClassifierModel, TuningResult]:
-    """MLlib-native k-fold tuning: ``CrossValidator`` over the engine's
-    classification pipeline with ``parallelism`` concurrent fits.
-
-    Complements the engine's other tuning shapes (grid / driver-parallel
-    / TPE / SparkTrials): CV re-uses folds instead of a held-out split —
-    the right call when labeled data is scarce (the reference's rare
-    merchant classes, 01_merchcat_etl.py:138-153). The indexer stays in
-    the k×|grid| inner fits because the evaluator scores the INDEX-space
-    prediction; the winner is returned as `NarrativeClassifier.fit` builds
-    its model, without the indexer and with the decode stage attached.
-    """
-    from pyspark.ml import Pipeline, PipelineModel
-    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-    from pyspark.ml.feature import IndexToString
-    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
-
-    tokenizer, grams, tf, indexer, lr = base._stages()
-    pipeline = Pipeline(stages=[tokenizer, grams, tf, indexer, lr])
-    param_grid = (
-        ParamGridBuilder()
-        .addGrid(lr.regParam, list(reg_params))
-        .addGrid(lr.maxIter, list(max_iters))
-        .build()
-    )
-    evaluator = MulticlassClassificationEvaluator(
-        labelCol="_label_idx", predictionCol="_pred_idx", metricName="accuracy"
-    )
-    cv = CrossValidator(
-        estimator=pipeline,
-        estimatorParamMaps=param_grid,
-        evaluator=evaluator,
-        numFolds=num_folds,
-        parallelism=parallelism,
-        seed=seed,
-    )
-    cv_model = cv.fit(train)
-    *featurize, indexer_model, best_lr = cv_model.bestModel.stages
-    decode = IndexToString(
-        inputCol="_pred_idx",
-        outputCol=base.prediction_col,
-        labels=indexer_model.labels,
-    )
-    full = PipelineModel(stages=[*featurize, best_lr, decode])
-    best_params = {
-        "reg_param": best_lr.getRegParam(),
-        "max_iter": best_lr.getMaxIter(),
-    }
-    best_idx = max(range(len(param_grid)), key=lambda i: cv_model.avgMetrics[i])
-    result = TuningResult(
-        best_params=best_params,
-        best_accuracy=float(cv_model.avgMetrics[best_idx]),
-        trials=[
-            {
-                "params": {
-                    "reg_param": pm[lr.regParam],
-                    "max_iter": pm[lr.maxIter],
-                },
-                "accuracy": float(m),
-            }
-            for pm, m in zip(param_grid, cv_model.avgMetrics)
-        ],
-    )
-    spec = NarrativeClassifier(**{**base.__dict__, **best_params})
-    return NarrativeClassifierModel(full, spec), result

@@ -233,28 +233,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(tokens(col)), grams), 1)
 
 
-def minhash_signature(shingle_col: Column | str, num_hashes: int = 64) -> Column:
-    """MinHash signature: array<long> of length `num_hashes`.
-
-    Broder construction, two-level hashing: each shingle is string-hashed
-    ONCE, then the k "permutations" transform that base value — k× cheaper
-    than re-hashing strings per permutation, overflow-free under ANSI
-    mode, and every op stays in whole-stage codegen. min per index
-    approximates the permutation min.
-
-    The construction is engine-portable (``functions/portable_hash.py``):
-    base = 60-bit md5 prefix, permutations = exact universal hashing mod
-    2^31−1 — an external SQL oracle replays the signature bit-for-bit.
-    """
-    from merchant_classification_spark.functions.portable_hash import (
-        md5_long60,
-        minhash_sig_md5,
-    )
-
-    col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    return minhash_sig_md5(F.transform(col, md5_long60), num_hashes)
-
-
 def lsh_band_hashes(
     sig_col: Column | str, bands: int, rows_per_band: int
 ) -> Column:
@@ -303,6 +281,10 @@ def _minhash_base(
     distinct shingles (~1e-10 at corpus scale for the 60-bit md5 prefix)
     are the accepted epsilon — the oracle hashes identically, so they
     cannot cause a verification mismatch.
+
+    The signature is Broder's construction, two-level: each shingle is
+    hashed once, then the k "permutations" (exact universal hashing mod
+    2^31−1) transform that base value and each index keeps the min.
     """
     from merchant_classification_spark.functions.portable_hash import (
         md5_long60,

@@ -47,8 +47,8 @@ def _folded_double_lit(nested, depth: int) -> Column:
     (same digits as ``repr``) and Jackson's parseDouble is correctly
     rounded like the SQL parser's — pinned bitwise in
     ``tests/test_similarity.py``. Non-finite doubles have no JSON
-    rendering, so those fall back to the old parsed-array form
-    unchanged."""
+    rendering (and the parsed form cannot spell them either), so they
+    raise ``ValueError``."""
     import json
 
     def _flat(x):
@@ -58,24 +58,18 @@ def _folded_double_lit(nested, depth: int) -> Column:
         else:
             yield x
 
-    if all(math.isfinite(v) for v in _flat(nested)):
-        schema = "double"
-        for _ in range(depth):
-            schema = f"array<{schema}>"
-        # FAILFAST: a constant that does not match the schema errors when
-        # the optimizer folds it, instead of folding to a null
-        return F.from_json(
-            F.lit(json.dumps(nested, allow_nan=False)),
-            schema,
-            options={"mode": "FAILFAST"},
-        )
-
-    def render(x) -> str:
-        if isinstance(x, (list, tuple)):
-            return "array(" + ",".join(render(y) for y in x) + ")"
-        return f"{x!r}D"
-
-    return F.expr(render(nested))
+    if not all(math.isfinite(v) for v in _flat(nested)):
+        raise ValueError("folded constant has non-finite values")
+    schema = "double"
+    for _ in range(depth):
+        schema = f"array<{schema}>"
+    # FAILFAST: a constant that does not match the schema errors when
+    # the optimizer folds it, instead of folding to a null
+    return F.from_json(
+        F.lit(json.dumps(nested, allow_nan=False)),
+        schema,
+        options={"mode": "FAILFAST"},
+    )
 
 
 def brute_force_topk(
@@ -417,14 +411,6 @@ def _deterministic_kmeans(
     return [[float(x) for x in c] for c in C]
 
 
-def _cents_lit(centroids: list[list[float]]) -> Column:
-    """One folded literal ``array<array<double>>`` for a centroid set.
-    Round 12: rides as a from_json constant (``_folded_double_lit``) so
-    Dataset ops embedding it analyze one string node, not k·dim literal
-    nodes."""
-    return _folded_double_lit(centroids, 2)
-
-
 def centroid_sq_dists(
     vec: Column | str, centroids: list[list[float]]
 ) -> Column:
@@ -433,13 +419,14 @@ def centroid_sq_dists(
     ``((0 + t₁) + t₂) + …`` with tᵢ = (v[i]−c[i])² — the ONE expression
     order the SQL oracle mirrors, so the doubles match bit-for-bit.
 
-    Centroids are one parsed literal array<array<double>> walked by a
-    single reused lambda (same codegen shape as
+    Centroids are one folded literal array<array<double>>
+    (``_folded_double_lit``: one string node to analyze, not k·dim
+    literal nodes) walked by a single reused lambda (same codegen shape as
     :func:`hyperplane_signature` — O(1) lambdas regardless of k·dim,
     where unrolled per-centroid expressions were seconds of Janino).
     """
     v = to_double_array(vec)
-    cents_lit = _cents_lit(centroids)
+    cents_lit = _folded_double_lit(centroids, 2)
 
     def dl(vb: Column) -> Column:
         return F.transform(

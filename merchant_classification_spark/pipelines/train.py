@@ -49,8 +49,10 @@ def train_merchant_classifier(
 ) -> TrainResult:
     """End-to-end: raw transactions in, registered evaluated model out.
 
-    * `param_grid` — run grid tuning on the held-out split and keep the
-      best trial (reference M3); otherwise a single fit.
+    * `param_grid` — run grid tuning on the held-out split, with
+      `config.tuning_parallelism` trials at once (the reference's
+      SparkTrials parallelism, application.yaml:6), and keep the best
+      trial (reference M3); otherwise a single fit.
     * `export_corpus` — also write the fasttext-format training file
       (reference's TrainingFile artifact, utils/fasttext_utils.py).
     """
@@ -73,7 +75,9 @@ def train_merchant_classifier(
 
     trials: list[dict] = []
     if param_grid:
-        model, tuning = tune_classifier(train, test, clf, param_grid)
+        model, tuning = tune_classifier(
+            train, test, clf, param_grid, parallelism=cfg.tuning_parallelism
+        )
         trials = tuning.trials
     else:
         model = clf.fit(train)

@@ -1,7 +1,6 @@
 from merchant_classification_spark.plans.explain import (
     assert_no_python_eval,
     count_exchanges,
-    formatted_plan,
     has_broadcast_join,
     pushed_filters,
 )
@@ -9,7 +8,6 @@ from merchant_classification_spark.plans.explain import (
 __all__ = [
     "assert_no_python_eval",
     "count_exchanges",
-    "formatted_plan",
     "has_broadcast_join",
     "pushed_filters",
 ]

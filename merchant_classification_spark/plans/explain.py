@@ -17,11 +17,6 @@ import re
 from pyspark.sql import DataFrame
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """The executed physical plan as text (post-AQE where applicable)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode

@@ -1,6 +1,4 @@
-import os
-
-from merchant_classification_spark.config import EngineConfig, load_config
+from merchant_classification_spark.config import load_config
 
 
 def test_defaults():
@@ -13,13 +11,13 @@ def test_defaults():
 
 def test_yaml_override(tmp_path):
     p = tmp_path / "app.yaml"
-    p.write_text("model_name: custom\nsample_size: 123\nunknown_key: ignored\n")
+    # train_path: a reference application.yaml key EngineConfig does not carry
+    p.write_text(
+        "model_name: custom\nsample_size: 123\nunknown_key: ignored\n"
+        "train_path: /data/train\n"
+    )
     cfg = load_config(str(p))
     assert cfg.model_name == "custom"
     assert cfg.sample_size == 123
     assert not hasattr(cfg, "unknown_key")
-
-
-def test_env_data_dir(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/tmp/somewhere")
-    assert EngineConfig().data_dir == "/tmp/somewhere"
+    assert not hasattr(cfg, "train_path")

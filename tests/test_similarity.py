@@ -4,7 +4,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.operators.similarity import (
@@ -376,26 +375,24 @@ def test_folded_double_lit_bit_identical_to_parsed_array(spark):
     assert [len(r) for r in row["a"]] == [len(r) for r in row["b"]]
 
 
-def test_folded_double_lit_nonfinite_falls_back_to_parsed_form(spark):
-    """Non-finite doubles have no JSON rendering: the helper must route
-    them to the legacy parsed-array renderer (observable: the plan has
-    no from_json node)."""
+def test_folded_double_lit_nonfinite_raises(spark):
+    """Non-finite doubles have no JSON rendering, and the parsed SQL form
+    cannot spell them either (``nanD`` is an unresolved column): the
+    helper raises a named error when the plan is built."""
     from merchant_classification_spark.operators.similarity import (
         _folded_double_lit,
+        centroid_sq_dists,
     )
 
     fin = spark.range(1).select(_folded_double_lit([[1.0, 2.0]], 2).alias("x"))
     assert "from_json" in fin._jdf.queryExecution().analyzed().toString()
 
-    # the legacy renderer cannot express inf either (it never occurs in
-    # fitted planes/centroids); the contract is just "don't emit JSON"
-    try:
-        nf = spark.range(1).select(
-            _folded_double_lit([[1.0, float("nan")]], 2).alias("x")
-        )
-    except (ParseException, AnalysisException):
-        return  # parsed-form parse error is acceptable for non-finite
-    assert "from_json" not in nf._jdf.queryExecution().analyzed().toString()
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            _folded_double_lit([[1.0, bad]], 2)
+    # NaN centroids (a k-means fit over NaN vectors) reach it this way
+    with pytest.raises(ValueError, match="non-finite"):
+        centroid_sq_dists("v", [[0.0, float("nan")]])
 
 
 def test_folded_double_lit_malformed_constant_raises(spark):

@@ -4,6 +4,7 @@ import json
 import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.config import EngineConfig
@@ -76,17 +77,53 @@ def test_full_lifecycle(spark, tmp_path):
 
 
 def test_lifecycle_with_tuning(spark, tmp_path):
-    cfg = EngineConfig(
-        model_path=str(tmp_path), model_name="merchcat_tuned", sample_size=100,
-        count_threshold=50, seed=5,
-    )
     clf = NarrativeClassifier(ngram_max=1, num_features=1 << 12, max_iter=10)
-    result = train_merchant_classifier(
-        _raw(spark, n=100),
-        config=cfg,
-        classifier=clf,
-        param_grid=[{"ngram_max": 1}, {"ngram_max": 2}],
-        register=False,
+    grid = [{"ngram_max": 1}, {"ngram_max": 2}]
+    runs = []
+    for parallelism in (20, 1):  # the reference's default, then serial
+        cfg = EngineConfig(
+            model_path=str(tmp_path / str(parallelism)),
+            model_name="merchcat_tuned", sample_size=100, count_threshold=50,
+            seed=5, tuning_parallelism=parallelism,
+        )
+        runs.append(
+            train_merchant_classifier(
+                _raw(spark, n=100),
+                config=cfg,
+                classifier=clf,
+                param_grid=grid,
+                register=False,
+            )
+        )
+    for result in runs:
+        assert len(result.trials) == 2
+        assert result.metrics["avg_acc"] > 0.8
+    # the config's parallelism reaches the grid search: one at a time, no
+    # two trials' [started_at, ended_at) intervals overlap
+    serial = runs[1].trials
+    intervals = sorted((t["started_at"], t["ended_at"]) for t in serial)
+    assert all(
+        a_end <= b_start for (_, a_end), (b_start, _) in zip(intervals, intervals[1:])
+    ), intervals
+    assert [(t["params"], t["accuracy"]) for t in serial] == [
+        (t["params"], t["accuracy"]) for t in runs[0].trials
+    ]
+    assert runs[1].metrics == runs[0].metrics
+
+
+def test_lifecycle_with_tuning_no_class_kept(spark, tmp_path):
+    """count_threshold above every class leaves an empty held-out split:
+    tuning raises a named error instead of crowning the first grid point."""
+    cfg = EngineConfig(
+        model_path=str(tmp_path), model_name="merchcat_none", sample_size=100,
+        count_threshold=1000, seed=5,
     )
-    assert len(result.trials) == 2
-    assert result.metrics["avg_acc"] > 0.8
+    clf = NarrativeClassifier(ngram_max=1, num_features=1 << 12, max_iter=5)
+    with pytest.raises(ValueError, match="validation frame is empty"):
+        train_merchant_classifier(
+            _raw(spark, n=100),
+            config=cfg,
+            classifier=clf,
+            param_grid=[{"ngram_max": 1}],
+            register=False,
+        )

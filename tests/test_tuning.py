@@ -12,7 +12,6 @@ from merchant_classification_spark.ml.tracking import RunTracker
 from merchant_classification_spark.ml.tuning import (
     grid,
     tune_classifier,
-    tune_classifier_parallel,
     tune_classifier_tpe,
 )
 
@@ -37,30 +36,51 @@ def split_data(spark):
     return train, val
 
 
+def _replay_accuracy(train, val, base, params):
+    """One trial, serially: fit with ``params`` and score ``val``, a null
+    prediction or label counting as a miss."""
+    spec = NarrativeClassifier(**{**base.__dict__, **params})
+    scored = spec.fit(train).transform(val)
+    return scored.agg(
+        F.avg(
+            F.when(F.col("pr_merchant") == F.col("tr_merchant"), 1.0).otherwise(0.0)
+        )
+    ).first()[0]
+
+
 def test_tune_classifier(split_data):
+    """The grid search scores each grid point and picks the winner exactly
+    as a serial replay does: best accuracy, ties to the first grid point."""
     train, val = split_data
     base = NarrativeClassifier(num_features=1 << 12, max_iter=10)
-    model, result = tune_classifier(
-        train, val, base, grid(ngram_max=[1, 2])
-    )
-    assert len(result.trials) == 2
-    assert result.best_accuracy >= max(t["accuracy"] for t in result.trials) - 1e-12
+    g = grid(ngram_max=[1, 2], reg_param=[0.0, 0.01])
+    model, result = tune_classifier(train, val, base, g, parallelism=1)
+
+    replay = [_replay_accuracy(train, val, base, p) for p in g]
+    assert [t["params"] for t in result.trials] == g  # grid order preserved
+    assert [t["accuracy"] for t in result.trials] == replay
+    best = max(range(len(g)), key=lambda i: (replay[i], -i))
+    assert result.best_params == g[best]
+    assert result.best_accuracy == replay[best]
     assert "pr_merchant" in model.transform(val).columns
 
 
 def test_tune_classifier_parallel_overlaps_and_agrees(split_data):
-    """The parallel path must (a) actually run trials concurrently —
-    asserted by wall-clock interval overlap — and (b) pick the same best
-    params as the serial grid search."""
+    """With ``parallelism > 1`` the grid search must (a) actually run
+    trials concurrently — asserted by wall-clock interval overlap — and
+    (b) score and pick exactly as the one-at-a-time run does."""
     train, val = split_data
     base = NarrativeClassifier(num_features=1 << 12, max_iter=10)
     g = grid(ngram_max=[1, 2], reg_param=[0.0, 0.01])
-    _, serial = tune_classifier(train, val, base, g)
-    model, par = tune_classifier_parallel(train, val, base, g, parallelism=4)
+    _, serial = tune_classifier(train, val, base, g, parallelism=1)
+    model, par = tune_classifier(train, val, base, g, parallelism=4)
 
     assert par.best_params == serial.best_params
     assert par.best_accuracy == serial.best_accuracy
     assert [t["params"] for t in par.trials] == g  # grid order preserved
+    assert [t["accuracy"] for t in par.trials] == [
+        t["accuracy"] for t in serial.trials
+    ]
     # concurrency proof: some pair of trials' [start, end) intervals overlap
     intervals = [(t["started_at"], t["ended_at"]) for t in par.trials]
     overlapping = any(
@@ -70,6 +90,18 @@ def test_tune_classifier_parallel_overlaps_and_agrees(split_data):
     )
     assert overlapping, f"no two trials overlapped: {intervals}"
     assert "pr_merchant" in model.transform(val).columns
+
+
+def test_tune_classifier_rejects_degenerate_input(split_data):
+    """An empty grid or an empty validation frame raises a named error:
+    neither can crown a winner (an empty validation frame would score
+    every trial 0.0 and pick the first)."""
+    train, val = split_data
+    base = NarrativeClassifier(num_features=1 << 12, max_iter=5)
+    with pytest.raises(ValueError, match="param_grid must be non-empty"):
+        tune_classifier(train, val, base, [])
+    with pytest.raises(ValueError, match="validation frame is empty"):
+        tune_classifier(train, val.limit(0), base, grid(ngram_max=[1]))
 
 
 def test_tune_classifier_tpe_gated(split_data):
@@ -85,6 +117,8 @@ def test_tune_classifier_tpe_gated(split_data):
         return
     from hyperopt import hp
 
+    with pytest.raises(ValueError, match="space must be non-empty"):
+        tune_classifier_tpe(train, val, base, space={}, max_evals=2)
     model, result = tune_classifier_tpe(
         train,
         val,
@@ -110,34 +144,3 @@ def test_run_tracker_local(tmp_path):
     assert runs[0]["signature"] == sig
     reg = json.load(open(tmp_path / "registry_merchant_model.json"))
     assert reg["path"] == "/tmp/m" and reg["signature"] == sig
-
-
-def test_crossvalidator_tuning(split_data):
-    from merchant_classification_spark.ml.tuning import tune_with_crossvalidator
-
-    train, _ = split_data
-    base = NarrativeClassifier(ngram_max=1, num_features=1 << 12, max_iter=10)
-    model, result = tune_with_crossvalidator(
-        train, base, reg_params=[0.0, 0.5], max_iters=[10], num_folds=2,
-        parallelism=2,
-    )
-    # 2x1 grid, each scored over 2 folds
-    assert len(result.trials) == 2
-    assert result.best_params["reg_param"] in (0.0, 0.5)
-    assert result.best_accuracy == max(t["accuracy"] for t in result.trials)
-    # the winner is returned as NarrativeClassifier.fit builds a model:
-    # the indexer stays out of the scoring pipeline
-    assert [type(s).__name__ for s in model.pipeline_model.stages] == [
-        "RegexTokenizer",
-        "SQLTransformer",
-        "HashingTF",
-        "LogisticRegressionModel",
-        "IndexToString",
-    ]
-    # the returned model scores in LABEL space (decode stage attached)
-    scored = model.transform(train)
-    acc = (
-        scored.where(F.col("pr_merchant") == F.col("tr_merchant")).count()
-        / train.count()
-    )
-    assert acc > 0.8

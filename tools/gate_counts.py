@@ -3,12 +3,8 @@ truth (`__spark_entry__.SUITES` / `ROWS_ONLY`), so COVERAGE.md and
 README.md can paste identical numbers instead of hand-maintaining them
 (round-5 verdict flagged a 130-vs-131 doc drift).
 
-Round 10 extends the same discipline to the README HEADLINE bullet:
-round 9 shipped a stale wall-time line (96.7 s / 147 probes vs the
-final committed 102.3 s / 148) because the headline was hand-written
-while only the COUNTS were tool-generated. The tool now also renders
-the status-section headline from the committed `bench_results.json` —
-paste its `headline:` line verbatim into the round-status bullet.
+It also renders a one-line headline (total wall time, probes,
+streaming rate) from `bench_results.json` when that artifact exists.
 
 Usage:  python tools/gate_counts.py
 Prints one human counts line, the headline line (when a bench artifact
@@ -46,8 +42,8 @@ def counts() -> dict:
 
 
 def headline(bench_path: str | None = None) -> str | None:
-    """The round-status headline bullet, rendered from the committed
-    bench artifact + the live gate counts — one source, zero drift."""
+    """The headline line, rendered from the bench artifact + the live
+    gate counts."""
     if bench_path is None:
         bench_path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -59,38 +55,6 @@ def headline(bench_path: str | None = None) -> str | None:
     except (OSError, ValueError):
         return None
     return _render_headline(bench)
-
-
-def headline_candidates() -> list[str]:
-    """Every rendering of the headline bullet that is legitimately
-    current: the working-tree `bench_results.json` AND the committed
-    (HEAD) copy. Round 10's sole red test read only the working tree,
-    which the DRIVER's post-commit bench run always overwrites — so the
-    pin failed in exactly the session that matters. A README headline
-    matching EITHER artifact is honest: pre-commit the tree is newer
-    than HEAD; post-driver-bench HEAD is the one README was pasted
-    from."""
-    import subprocess
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: list[str] = []
-    h = headline()
-    if h is not None:
-        out.append(h)
-    try:
-        blob = subprocess.run(
-            ["git", "-C", root, "show", "HEAD:bench_results.json"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if blob.returncode == 0:
-            line = _render_headline(json.loads(blob.stdout))
-            if line is not None and line not in out:
-                out.append(line)
-    except (OSError, ValueError, subprocess.SubprocessError):
-        pass
-    return out
 
 
 def _render_headline(bench: dict) -> str | None:
