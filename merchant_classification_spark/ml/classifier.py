@@ -29,12 +29,23 @@ per-prediction identity — the hash families differ (SURVEY.md §4.3).
 Scoring is `PipelineModel.transform` — pure JVM, distributed, no pyfunc
 spark_udf round-trip and no shared-filesystem model hack
 (replaces 02_merchcat_ml.py:506-513 — SURVEY.md §2.11 M7).
+
+`NarrativeClassifierModel.save` writes the stock `PipelineModel`
+directory layout from the driver with no Spark job (the stock writer
+runs one single-task job per file: 7 for a few KB of JSON and one
+parquet row). Metadata comes from the public JVM Param API, the LR
+`data` row from pyarrow with PySpark's `VectorUDT`/`MatrixUDT`
+encodings, and each file is created through the session's Hadoop
+`FileSystem`; stock `PipelineModel.load` reads it unchanged.
 """
 
 from __future__ import annotations
 
+import json
+import time
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.ml import PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import (
@@ -44,7 +55,9 @@ from pyspark.ml.feature import (
     SQLTransformer,
     StringIndexer,
 )
+from pyspark.ml.linalg import MatrixUDT, VectorUDT
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
 
 @dataclass
@@ -152,6 +165,10 @@ class NarrativeClassifier:
         # pipeline its handleInvalid="skip" would drop every row whose
         # label is null or unseen
         indexer_model = indexer.fit(train)
+        if not indexer_model.labels:
+            raise ValueError(
+                f"no training rows with a label in {self.label_col!r}"
+            )
         featurize = PipelineModel(stages=[tokenizer, grams, tf])
         lr_model = lr.fit(featurize.transform(indexer_model.transform(train)))
         decode = IndexToString(
@@ -176,8 +193,6 @@ def _strip_training_summaries(pipeline_model: PipelineModel) -> None:
     want training diagnostics use ml/evaluate.py, which recomputes them
     from DataFrames.
     """
-    from pyspark import SparkContext
-
     jvm = SparkContext._active_spark_context._jvm
     for stage in pipeline_model.stages:
         jobj = getattr(stage, "_java_obj", None)
@@ -214,8 +229,127 @@ class NarrativeClassifierModel:
         return out.drop(*drop)
 
     def save(self, path: str) -> None:
-        self.pipeline_model.write().overwrite().save(path)
+        """Write the stock `PipelineModel` layout to `path`, replacing it,
+        from the driver with no Spark job:
+
+            metadata/part-00000                    pipeline: stageUids
+            stages/{i}_{uid}/metadata/part-00000   one per stage
+            stages/{i}_{uid}/data/part-00000.snappy.parquet   LR only
+
+        with `{i}` zero-padded to the digits of the stage count. Stock
+        `PipelineModel.load` and `NarrativeClassifierModel.load` read it.
+        RegexTokenizer, SQLTransformer, HashingTF, IndexToString and the
+        legacy NGram are metadata-only; the LogisticRegressionModel adds
+        its `data` row. Any other stage (a seven-stage model's
+        StringIndexerModel: it loads and scores, but is not re-saved)
+        raises `ValueError` before anything is written.
+        """
+        stages = self.pipeline_model.stages
+        classes = [stage._java_obj.getClass().getName() for stage in stages]
+        for cls in classes:
+            if cls.rsplit(".", 1)[1] not in _WRITABLE_STAGES:
+                raise ValueError(f"cannot save a pipeline stage of class {cls}")
+        sc = SparkContext._active_spark_context
+        uids = json.dumps([stage.uid for stage in stages], separators=(",", ":"))
+        files = {
+            "metadata/part-00000": _metadata_line(
+                sc, "org.apache.spark.ml.PipelineModel", self.pipeline_model.uid,
+                f'{{"stageUids":{uids}}}', "{}",
+            )
+        }
+        width = len(str(len(stages)))
+        for i, (stage, cls) in enumerate(zip(stages, classes)):
+            stage_dir = f"stages/{i:0{width}d}_{stage.uid}"
+            stage._transfer_params_to_java()
+            files[f"{stage_dir}/metadata/part-00000"] = _metadata_line(
+                sc, cls, stage.uid, *_param_maps(stage._java_obj)
+            )
+            if cls.endswith(".LogisticRegressionModel"):
+                files[f"{stage_dir}/data/part-00000.snappy.parquet"] = (
+                    _lr_data_parquet(stage)
+                )
+        fs_path = sc._jvm.org.apache.hadoop.fs.Path
+        root = fs_path(path)
+        fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs.delete(root, True)
+        for rel, data in files.items():
+            out = fs.create(fs_path(root, rel))
+            try:
+                out.write(data)
+            finally:
+                out.close()
 
     @classmethod
     def load(cls, path: str, spec: NarrativeClassifier | None = None):
         return cls(PipelineModel.load(path), spec or NarrativeClassifier())
+
+
+# stages `save` can write, by Java class name; only the LR model has data
+_WRITABLE_STAGES = {
+    "RegexTokenizer", "SQLTransformer", "HashingTF", "IndexToString", "NGram",
+    "LogisticRegressionModel",
+}
+
+# LogisticRegressionModel's `data` row, as its stock writer declares it
+_LR_DATA_SCHEMA = StructType(
+    [
+        StructField("numClasses", IntegerType(), False),
+        StructField("numFeatures", IntegerType(), False),
+        StructField("interceptVector", VectorUDT(), True),
+        StructField("coefficientMatrix", MatrixUDT(), True),
+        StructField("isMultinomial", BooleanType(), False),
+    ]
+)
+
+
+def _metadata_line(sc, cls: str, uid: str, params: str, defaults: str) -> bytes:
+    """One stock metadata file: a compact JSON line. `params` and
+    `defaults` are JSON objects already rendered."""
+    head = json.dumps(
+        {"class": cls, "timestamp": int(time.time() * 1000),
+         "sparkVersion": sc.version, "uid": uid},
+        separators=(",", ":"),
+    )
+    line = f'{head[:-1]},"paramMap":{params},"defaultParamMap":{defaults}}}'
+    return (line + "\n").encode()
+
+
+def _param_maps(jobj) -> tuple[str, str]:
+    """The Java stage's set and default params as two JSON objects, each
+    value rendered by its own `Param.jsonEncode`."""
+    explicit, defaults = [], []
+    for param in jobj.params():
+        name = json.dumps(param.name())
+        if jobj.isSet(param):
+            explicit.append(f"{name}:{param.jsonEncode(jobj.getOrDefault(param))}")
+        if jobj.hasDefault(param):
+            value = jobj.getDefault(param).get()
+            defaults.append(f"{name}:{param.jsonEncode(value)}")
+    return "{" + ",".join(explicit) + "}", "{" + ",".join(defaults) + "}"
+
+
+def _lr_data_parquet(lr_model) -> bytes:
+    """The LogisticRegressionModel's one `data` row as snappy parquet
+    bytes. The Catalyst schema rides in the footer under Spark's row
+    metadata key, so `spark.read.parquet` sees the vector and matrix
+    UDT columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    num_classes = lr_model.numClasses
+    row = {
+        "numClasses": num_classes,
+        "numFeatures": lr_model.numFeatures,
+        "interceptVector": VectorUDT().serialize(lr_model.interceptVector),
+        "coefficientMatrix": MatrixUDT().serialize(lr_model.coefficientMatrix),
+        "isMultinomial": lr_model.getFamily() == "multinomial" or num_classes > 2,
+    }
+    table = pa.Table.from_pylist(
+        [row], schema=to_arrow_schema(_LR_DATA_SCHEMA)
+    ).replace_schema_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": _LR_DATA_SCHEMA.json()}
+    )
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="snappy")
+    return buf.getvalue().to_pybytes()

@@ -1,6 +1,9 @@
 """ML pipeline tests: train on synthetic narratives, verify accuracy and
 in-engine evaluation metrics; full ETL → train → score round trip."""
 
+import glob
+import json
+import os
 import random
 
 import numpy as np
@@ -68,20 +71,122 @@ def test_evaluate_per_class(labeled):
     assert summary["q_05"] <= summary["q_50"] <= summary["q_95"]
 
 
-def test_model_save_load(labeled, tmp_path):
+def _saved_files(path):
+    """{directory relative to `path`: its one part file} of a saved model."""
+    out = {}
+    for part in glob.glob(os.path.join(path, "**", "part-*"), recursive=True):
+        rel = os.path.relpath(os.path.dirname(part), path)
+        assert rel not in out, f"two part files in {rel}"
+        out[rel] = part
+    return out
+
+
+def _scores(pipeline_model, df):
+    cols = ["pr_merchant", "rawPrediction", "probability"]
+    return pipeline_model.transform(df).select(*cols).collect()
+
+
+def test_model_save_load(spark, labeled, tmp_path):
+    """`save` writes the stock writer's layout from the driver with no
+    Spark job: the same directories, the same metadata but for its
+    timestamp, the same LR `data` row. Both copies load through either
+    loader and score bit-identically, so models saved by the stock writer
+    still load and score. Held against the running Spark's own writer, so
+    a Spark upgrade that changes the layout fails here."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.linalg import MatrixUDT, VectorUDT
+
     from merchant_classification_spark.ml.classifier import NarrativeClassifierModel
 
-    for i, grams in enumerate(
-        [dict(ngram_max=2), dict(ngram_max=3, char_ngram_min=2, char_ngram_max=4)]
-    ):
-        clf = NarrativeClassifier(num_features=1 << 14, max_iter=10, **grams)
-        model = clf.fit(labeled)
-        path = str(tmp_path / f"model{i}")
-        model.save(path)
-        reloaded = NarrativeClassifierModel.load(path, clf)
-        a = model.transform(labeled).select("pr_merchant").collect()
-        b = reloaded.transform(labeled).select("pr_merchant").collect()
-        assert a == b
+    sc = spark.sparkContext
+    fitted = NarrativeClassifier(num_features=1 << 14, max_iter=10).fit(labeled)
+    legacy_stages = list(fitted.pipeline_model.stages)
+    # the earlier layout's stock NGram stage, fed into the concat stage
+    legacy_stages[1:2] = [
+        NGram(n=2, inputCol="_tokens", outputCol="_grams_2"),
+        SQLTransformer(
+            statement="SELECT *, concat(_tokens, _grams_2) AS _all_grams FROM __THIS__"
+        ),
+    ]
+    models = {
+        "words": fitted,
+        "subwords": NarrativeClassifier(
+            num_features=1 << 14, max_iter=10, ngram_max=3, char_ngram_min=2,
+            char_ngram_max=4,
+        ).fit(labeled),
+        "ngram_stage": NarrativeClassifierModel(
+            PipelineModel(stages=legacy_stages), fitted.spec
+        ),
+    }
+    for name, model in models.items():
+        stock, path = str(tmp_path / f"{name}_stock"), str(tmp_path / name)
+        # `save` first: the stock writer pushes the Python-side params of
+        # each stage to its Java object, which `save` must do itself
+        sc.setJobGroup("model-save", "model.save")
+        try:
+            model.save(path)
+            assert list(sc.statusTracker().getJobIdsForGroup("model-save")) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        model.pipeline_model.write().save(stock)
+        want, got = _saved_files(stock), _saved_files(path)
+        assert sorted(got) == sorted(want)
+        assert sum(d.endswith("/data") for d in got) == 1
+        for rel in want:
+            if rel.endswith("metadata"):
+                with open(want[rel]) as a, open(got[rel]) as b:
+                    a, b = json.loads(a.read()), json.loads(b.read())
+                assert a.pop("timestamp") > 0 and b.pop("timestamp") > 0
+                assert a == b, rel
+            else:
+                a = spark.read.parquet(os.path.join(stock, rel))
+                b = spark.read.parquet(os.path.join(path, rel))
+                assert a.schema == b.schema
+                (a,), (b,) = a.collect(), b.collect()
+                assert a == b
+                # the stored form too: dense or sparse, isTransposed
+                for col, udt in (("interceptVector", VectorUDT()),
+                                 ("coefficientMatrix", MatrixUDT())):
+                    assert udt.serialize(a[col]) == udt.serialize(b[col])
+        expected = _scores(model.pipeline_model, labeled)
+        for saved in (stock, path):
+            reloaded = NarrativeClassifierModel.load(saved, model.spec)
+            assert _scores(reloaded.pipeline_model, labeled) == expected
+            assert _scores(PipelineModel.load(saved), labeled) == expected
+
+    # overwrite: the second model's stages replace the first model's
+    path = str(tmp_path / "overwritten")
+    models["subwords"].save(path)
+    models["ngram_stage"].save(path)
+    assert sorted(os.listdir(os.path.join(path, "stages"))) == sorted(
+        os.listdir(str(tmp_path / "ngram_stage_stock" / "stages"))
+    )
+    reloaded = NarrativeClassifierModel.load(path)
+    assert _scores(reloaded.pipeline_model, labeled) == _scores(
+        models["ngram_stage"].pipeline_model, labeled
+    )
+
+
+def test_model_save_rejects_unwritable_stage(labeled, tmp_path):
+    """A seven-stage model's fitted StringIndexerModel loads and scores,
+    but `save` does not write it: a named error, and nothing on disk."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.feature import StringIndexer
+
+    from merchant_classification_spark.ml.classifier import NarrativeClassifierModel
+
+    model = NarrativeClassifier(num_features=1 << 12, max_iter=5).fit(labeled)
+    indexer = StringIndexer(
+        inputCol="tr_merchant", outputCol="_label_idx", handleInvalid="skip"
+    ).fit(labeled)
+    stages = model.pipeline_model.stages
+    legacy = NarrativeClassifierModel(
+        PipelineModel(stages=[*stages[:3], indexer, *stages[3:]]), model.spec
+    )
+    path = str(tmp_path / "legacy")
+    with pytest.raises(ValueError, match="StringIndexerModel"):
+        legacy.save(path)
+    assert not os.path.exists(path)
 
 
 def test_etl_to_model_roundtrip(spark):

@@ -127,3 +127,18 @@ def test_lifecycle_with_tuning_no_class_kept(spark, tmp_path):
             param_grid=[{"ngram_max": 1}],
             register=False,
         )
+
+
+def test_lifecycle_no_class_kept(spark, tmp_path):
+    """count_threshold above every class without a grid: the fit raises a
+    named error before the LR fit sees an empty frame."""
+    cfg = EngineConfig(
+        model_path=str(tmp_path), model_name="merchcat_empty", sample_size=100,
+        count_threshold=1000, seed=5,
+    )
+    clf = NarrativeClassifier(ngram_max=1, num_features=1 << 12, max_iter=5)
+    with pytest.raises(ValueError, match="no training rows with a label"):
+        train_merchant_classifier(
+            _raw(spark, n=100), config=cfg, classifier=clf, register=False
+        )
+    assert not os.path.exists(os.path.join(str(tmp_path), "merchcat_empty_model"))
