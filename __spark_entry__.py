@@ -826,9 +826,8 @@ def q_ann_ivf(spark, sf_dir):
     the recall@k annotation against the exact twin are all pure
     expressions the DuckDB oracle replays bit-for-bit (the oracle runs
     the SAME fit on the SAME sample and inlines identical centroid
-    literals). The MLlib-KMeans ivf_topk stays as the library tier
-    (tests/test_similarity.py); n_probe sized for recall ≥ 0.8 on the
-    weakly clustered synthetic vectors.
+    literals). n_probe sized for recall ≥ 0.8 on the weakly clustered
+    synthetic vectors.
     """
     from merchant_classification_spark.operators.similarity import (
         brute_force_topk,
@@ -906,11 +905,10 @@ def q_ann_pq(spark, sf_dir):
     synthetic vectors — measured 0.86 avg / 0.80 min at sf0.01
     (A/B: probe=8/refine=4 gave 0.54 avg; the ceiling is cell
     coverage, so widening the probe beats widening the codebook here).
-    The corpus encode runs the Arrow kernel (pq_encode_arrow) — the
-    winnowing-kernel rule: bit-identical output (test-asserted), A/B
-    measured 0.31 s vs 1.35 s for the native HOF encode at sf0.1, so
-    the grading is unchanged and the member sheds its biggest
-    constant. Query-side LUT/ADC/refine stay native expressions.
+    The corpus encode runs the Arrow kernel (pq_encode) — the
+    winnowing-kernel rule: it replays the oracle's fold bit-for-bit
+    (test-asserted), A/B measured 0.31 s vs 1.35 s for a native HOF
+    encode at sf0.1. Query-side LUT/ADC/refine stay native expressions.
     """
     from merchant_classification_spark.operators.similarity import (
         brute_force_topk_l2,
@@ -933,7 +931,6 @@ def q_ann_pq(spark, sf_dir):
         fit_target=IVF_FIT_TARGET,
         max_iter=IVF_ITERS,
         refine_factor=PQ_REFINE,
-        encoder="arrow",
     )
     exact = brute_force_topk_l2(emb, qs, k=ANN_K)
     return with_recall_at_k(approx, exact).orderBy("query_id", "rank")
@@ -3431,8 +3428,7 @@ def q_data_quality(spark, sf_dir):
 
 def q_heavy_hitters(spark, sf_dir):
     # exact heavy hitters (operators/sketches.py): one hash aggregate +
-    # scalar total; the graded exact tier for the freqItems/CMS
-    # approximate paths (pytest-checked against it)
+    # scalar total
     from merchant_classification_spark.operators.sketches import (
         heavy_hitters_exact,
     )

@@ -189,7 +189,7 @@ def _streaming_ann_serve_rate(
     from pyspark.sql import functions as F
 
     from merchant_classification_spark.operators.similarity import (
-        pq_encode_arrow,
+        pq_encode,
         pq_fit,
     )
     from merchant_classification_spark.streaming.ann import (
@@ -206,7 +206,7 @@ def _streaming_ann_serve_rate(
             emb, n_centroids=16, n_subspaces=8, n_codes=16, fit_target=256
         )
         index_path = os.path.join(base, "index")
-        pq_encode_arrow(emb, coarse, books).write.mode("overwrite").parquet(
+        pq_encode(emb, coarse, books).write.mode("overwrite").parquet(
             index_path
         )
         qsrc = os.path.join(base, "queries")

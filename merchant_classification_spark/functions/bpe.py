@@ -29,12 +29,9 @@ under the same engine discipline as the perplexity/DSIR/BM25 screens:
 Vocabulary-capped semantics: words OUTSIDE the fitted vocabulary are
 counted at character granularity (``length(word)`` tokens — exactly what
 BPE yields for a word none of whose merges apply), and reported in
-``n_oov``. At 100 TB the cap rises with the corpus head, or the fit
-runs two-level via :func:`corpus_word_freq_two_level` — per-partition
-top-k candidates (in-memory, no full-vocabulary shuffle) unioned and
-exactly recounted — whose output matches the global fit whenever the
-true head survives the per-shard cap (tests assert identity on the
-graded corpus). Measured coverage of the cap lives in SCALING.md
+``n_oov``. At 100 TB the cap rises with the corpus head; the word
+count is one distributed ``groupBy(word)``, so only its collected head
+is bounded by the cap. Measured coverage of the cap lives in SCALING.md
 ("BPE cap coverage"); applying merge rules to tail words in-engine
 would need per-row Python, which the graded path deliberately avoids.
 """
@@ -50,7 +47,6 @@ __all__ = [
     "fit_bpe",
     "encode_word",
     "corpus_word_freq",
-    "corpus_word_freq_two_level",
     "bpe_token_counts",
     "bpe_segment",
     "save_bpe",
@@ -202,97 +198,6 @@ def corpus_word_freq(
         .limit(max_vocab_words)
         .collect()
     )
-    return {r["word"]: int(r["freq"]) for r in rows}
-
-
-def corpus_word_freq_two_level(
-    df: DataFrame,
-    text_col: str,
-    max_vocab_words: int = 4096,
-    per_shard_factor: int = 8,
-    exact_recount: bool = True,
-    candidate_head_factor: int = 2,
-) -> dict[str, int]:
-    """Two-level variant of :func:`corpus_word_freq` for corpora whose
-    distinct-word table is itself too large to shuffle comfortably.
-
-    :func:`corpus_word_freq`'s single ``groupBy(word)`` is already
-    distributed, but its shuffle carries one row per (map partition,
-    distinct word) — at web-corpus scale that is the dominant cost of
-    the fit. This variant never shuffles the full word table:
-
-      1. **per-shard top-k, in place**: each input partition counts its
-         own words in memory (one Arrow-batched ``mapInPandas`` pass,
-         state bounded by the partition's distinct words) and emits only
-         its top ``max_vocab_words × per_shard_factor`` rows, ties broken
-         (freq desc, word asc) — so the only shuffled rows are
-         ``partitions × k`` candidates;
-      2. **union + re-cap**: candidate partials re-aggregate and the top
-         ``candidate_head_factor × max_vocab_words`` words become the
-         candidate head;
-      3. **exact recount** (default): one more corpus pass counts ONLY
-         candidate words (broadcast semi-join — map-side partial agg
-         bounded by candidates), so every returned frequency is exact,
-         not a sum of per-shard survivors.
-
-    The result equals the global fit whenever every true top-cap word
-    BOTH appears in at least one shard's top-k AND ranks inside the
-    ``candidate_head_factor × max_vocab_words`` candidate head under the
-    (possibly undercounted) survivor sums of step 2 — surviving one
-    shard's cap is necessary but not sufficient, since a true head word
-    surviving in only one shard can be outranked and dropped before the
-    exact recount. Zipf-shaped corpora satisfy both at the default
-    margins (asserted by tests on the graded corpus, including under
-    adversarial repartitioning); widen ``candidate_head_factor`` when
-    the head is flat or shards are tiny.
-    ``exact_recount=False`` skips the second pass and
-    returns the (possibly undercounted) survivor sums — the cheaper mode
-    when the fit only needs the head's identity, not exact counts.
-    """
-    if max_vocab_words <= 0:
-        raise ValueError("max_vocab_words must be positive")
-    if per_shard_factor < 1:
-        raise ValueError("per_shard_factor must be >= 1")
-    if candidate_head_factor < 1:
-        raise ValueError("candidate_head_factor must be >= 1")
-    k = max_vocab_words * per_shard_factor
-    words = df.select(F.explode(tokens(text_col)).alias("word"))
-
-    def _topk_per_partition(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        c: Counter = Counter()
-        for pdf in batches:
-            c.update(pdf["word"])
-        if not c:
-            return
-        items = sorted(c.items(), key=lambda t: (-t[1], t[0]))[:k]
-        yield pd.DataFrame(
-            {"word": [w for w, _ in items], "freq": [f for _, f in items]}
-        )
-
-    cand = words.mapInPandas(_topk_per_partition, "word string, freq long")
-    agg = cand.groupBy("word").agg(F.sum("freq").alias("freq"))
-    if exact_recount:
-        head = agg.orderBy(F.col("freq").desc(), F.col("word").asc()).limit(
-            candidate_head_factor * max_vocab_words
-        )
-        rows = (
-            words.join(F.broadcast(head.select("word")), "word", "left_semi")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .orderBy(F.col("freq").desc(), F.col("word").asc())
-            .limit(max_vocab_words)
-            .collect()
-        )
-    else:
-        rows = (
-            agg.orderBy(F.col("freq").desc(), F.col("word").asc())
-            .limit(max_vocab_words)
-            .collect()
-        )
     return {r["word"]: int(r["freq"]) for r in rows}
 
 

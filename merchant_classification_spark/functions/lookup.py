@@ -76,11 +76,10 @@ def sql_double_lit(x: float) -> str:
     return r + "D"
 
 
-#: literal_table falls back to createDataFrame above this many rows
-#: ($SPARK_GRAFT_LITERAL_TABLE_MAX overrides): a bounded dimension
-#: table belongs in the plan as a folded literal, an unbounded one does
-#: not (the SQL text would grow without limit and the RDD path's
-#: distribution machinery is the right shape there anyway).
+#: literal_table falls back to createDataFrame above this many rows: a
+#: bounded dimension table belongs in the plan as a folded literal, an
+#: unbounded one does not (the SQL text would grow without limit and the
+#: RDD path's distribution machinery is the right shape there anyway).
 _LITERAL_TABLE_MAX_ROWS = 20_000
 
 
@@ -119,14 +118,12 @@ def literal_table(spark, rows, schema: str):
     non-null in every cell — these are fitted model/dimension tables,
     never observational data.
 
-    Tables larger than ``$SPARK_GRAFT_LITERAL_TABLE_MAX`` (default
-    20 000) rows — or empty ones — take the ``createDataFrame`` path
+    Tables larger than ``_LITERAL_TABLE_MAX_ROWS`` (20 000) rows — or
+    empty ones — take the ``createDataFrame`` path
     unchanged: the literal form exists for BOUNDED fitted tables; at
     unbounded cardinality the RDD path's distribution machinery is the
     right shape.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     rows = list(rows)
@@ -134,12 +131,7 @@ def literal_table(spark, rows, schema: str):
     for part in schema.split(","):
         name, typ = part.strip().split(None, 1)
         cols.append((name, typ.strip().lower()))
-    max_rows = int(
-        os.environ.get(
-            "SPARK_GRAFT_LITERAL_TABLE_MAX", str(_LITERAL_TABLE_MAX_ROWS)
-        )
-    )
-    if not rows or len(rows) > max_rows:
+    if not rows or len(rows) > _LITERAL_TABLE_MAX_ROWS:
         return spark.createDataFrame(rows, schema)
     structs = ",".join(
         "named_struct("

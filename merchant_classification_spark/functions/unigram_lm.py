@@ -13,9 +13,8 @@ oracle-replayable:
 
   * **bounded fit aggregate**: the corpus word-frequency table (ONE
     explode → count aggregate capped with a total tie-break —
-    ``bpe.corpus_word_freq``, or the two-level variant at web scale) is
-    a sufficient statistic: the tokenizer segments within words, so the
-    fit never needs the corpus twice.
+    ``bpe.corpus_word_freq``) is a sufficient statistic: the tokenizer
+    segments within words, so the fit never needs the corpus twice.
   * **deterministic driver-side fit**: seed candidates are all
     substrings (length ≤ ``max_piece_len``) of vocab words scored by
     occurrence-weighted frequency; a FIXED number of hard-EM rounds

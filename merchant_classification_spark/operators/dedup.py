@@ -333,49 +333,6 @@ def _attach_shingles(pair_ids: DataFrame, base: DataFrame) -> DataFrame:
     return pair_ids.join(sh_a, "id_a").join(sh_b, "id_b")
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    eager: bool = True,
-) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b) via banded MinHash LSH,
-    carrying both shingle sets for the verify stage.
-
-    Plan shape: map-side signature + band hashes → explode bands (b rows
-    per doc) → shuffle on band_hash → self-join within buckets → distinct
-    pairs.
-
-    ``eager=True`` (default) persists the shared signature projection
-    (it feeds the banding plus both verify join sides — recomputing the
-    tokenizer+hash chain per branch measured ~3x the query), runs the
-    whole plan, snapshots the (small) pair output via
-    ``localCheckpoint(eager=True)``, and RELEASES the persisted input
-    before returning — composing pipelines never accumulate cached
-    blocks. ``eager=False`` returns the fully lazy plan (the shared
-    projection is recomputed per branch).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    rows_per_band = num_hashes // bands
-    base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes)
-    if not eager:
-        return _attach_shingles(
-            _minhash_pair_ids(base, bands, rows_per_band), base
-        ).select("id_a", "id_b", "sh_a", "sh_b")
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        out = _attach_shingles(
-            _minhash_pair_ids(base, bands, rows_per_band), base
-        ).select("id_a", "id_b", "sh_a", "sh_b")
-        return out.localCheckpoint(eager=True)
-    finally:
-        base.unpersist(blocking=False)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -384,16 +341,18 @@ def minhash_dedup_pairs(
     shingle_size: int = 3,
     num_hashes: int = 64,
     bands: int | None = None,
-    eager: bool = True,
-    fn_weight: float = 2.0,
 ) -> DataFrame:
     """Verified near-duplicate pairs: LSH candidates filtered by EXACT
     n-gram Jaccard ≥ threshold → (id_a, id_b, jaccard_sim).
 
+    Plan shape: map-side signature + band hashes → explode bands (b rows
+    per doc) → shuffle on band_hash → self-join within buckets → distinct
+    pairs → both shingle sets re-joined for the exact verify.
+
     ``bands=None`` (default) derives the banding from
-    :func:`lsh_params` at the verify ``threshold`` with ``fn_weight``
-    (default 2 — dedup biases toward recall: a missed duplicate leaks,
-    a false candidate is merely verified away). The S-curve solver
+    :func:`lsh_params` at the verify ``threshold`` with ``fn_weight=2``
+    (dedup biases toward recall: a missed duplicate leaks, a false
+    candidate is merely verified away). The S-curve solver
     centers the collision curve on the threshold instead of whatever a
     hardcoded banding happens to target: at sf1/t=0.8 the solver's 7×9
     measured 7.6 s median vs 9.2 s for the legacy 16×4 with 99.5% of
@@ -402,14 +361,18 @@ def minhash_dedup_pairs(
     `SCALING.md`). Passing ``bands`` explicitly keeps the legacy
     ``num_hashes // bands`` rows split.
 
-    Same eager-materialize/release contract as ``minhash_candidate_pairs``
-    — with ``eager=True`` only the verified (id_a, id_b, jaccard_sim)
-    triples are snapshotted, and no cached block outlives the call.
+    The shared signature projection is persisted (it feeds the banding
+    plus both verify join sides — recomputing the tokenizer+hash chain
+    per branch measured ~3x the query), the verified (id_a, id_b,
+    jaccard_sim) triples are snapshotted with
+    ``localCheckpoint(eager=True)``, and the persisted input is
+    RELEASED before returning — composing pipelines never accumulate
+    cached blocks.
     """
     from pyspark.storagelevel import StorageLevel
 
     if bands is None:
-        bands, rows_per_band = lsh_params(threshold, num_hashes, fn_weight)
+        bands, rows_per_band = lsh_params(threshold, num_hashes, 2.0)
     else:
         rows_per_band = num_hashes // bands
     base = _minhash_base(df, id_col, text_col, shingle_size, num_hashes)
@@ -422,8 +385,6 @@ def minhash_dedup_pairs(
             .select("id_a", "id_b", "jaccard_sim")
         )
 
-    if not eager:
-        return verified(base)
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return verified(base).localCheckpoint(eager=True)
@@ -534,7 +495,7 @@ def ngram_jaccard_pairs(
     from pyspark.sql.window import Window
     from pyspark.storagelevel import StorageLevel
 
-    # shingles hashed to longs up front (see minhash_candidate_pairs);
+    # shingles hashed to longs up front (see _minhash_base);
     # persisted: feeds the inverted index, the df-frequency agg, the
     # prefix ordering, and both verify sides
     base = (
@@ -1223,7 +1184,6 @@ def simhash_dedup_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    eager: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs with SimHash Hamming distance ≤ max_hamming.
 
@@ -1232,11 +1192,11 @@ def simhash_dedup_pairs(
     pigeonhole: distance ≤ 3 guarantees at least one identical band.
     Candidates are verified by exact bit_count.
 
-    ``eager=True`` (default) is the module's standard materialize/release
-    contract: the signature projection is persisted (BOTH self-join
-    sides consume it — lazily it is computed twice, measured 1.65x the
-    query at sf0.1), the small verified-pair output is snapshotted via
-    ``localCheckpoint``, and the persist is released before returning.
+    The module's standard materialize/release contract: the signature
+    projection is persisted (BOTH self-join sides consume it — lazily it
+    is computed twice, measured 1.65x the query at sf0.1), the small
+    verified-pair output is snapshotted via ``localCheckpoint``, and the
+    persist is released before returning.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -1280,8 +1240,6 @@ def simhash_dedup_pairs(
             .select("id_a", "id_b", "hamming")
         )
 
-    if not eager:
-        return pairs(base)
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return pairs(base).localCheckpoint(eager=True)
@@ -1358,7 +1316,6 @@ def exact_substring_dedup(
     id_col: str,
     text_col: str,
     k: int = 8,
-    hashed: bool = True,
 ) -> DataFrame:
     """Exact substring deduplication (Lee et al. 2021, arXiv:2107.06499
     §3.1 "ExactSubstr"): whenever a run of ≥ ``k`` tokens appears more
@@ -1412,9 +1369,8 @@ def exact_substring_dedup(
                 )
             ).alias("gpos", "gram"),
         )
-        key = md5_long60(F.col("gram")) if hashed else F.col("gram")
         occ = occ_persisted = grams.select(
-            "doc_id", "gpos", key.alias("gk")
+            "doc_id", "gpos", md5_long60(F.col("gram")).alias("gk")
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             dup_first = (
@@ -1503,10 +1459,9 @@ def lsh_params(
     candidate).
 
     Driver-side arithmetic only — use it to parameterize
-    :func:`minhash_candidate_pairs` / :func:`minhash_dedup_pairs`; at
-    100 TB the choice trades shuffle volume (∝ bands) against verify
-    volume (false positives), which is exactly what the two integrals
-    measure.
+    :func:`minhash_dedup_pairs`; at 100 TB the choice trades shuffle
+    volume (∝ bands) against verify volume (false positives), which is
+    exactly what the two integrals measure.
     """
     if not 0.0 < threshold < 1.0:
         raise ValueError("threshold must be in (0, 1)")

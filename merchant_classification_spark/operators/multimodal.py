@@ -405,43 +405,3 @@ def decode_audio_meta(
 
     return df.select(id_col, content_col).mapInPandas(decode, AUDIO_META_SCHEMA)
 
-
-def decode_image_meta_arrow(
-    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`decode_image_meta` — identical rows.
-
-    Skips the Arrow→pandas→Arrow conversion entirely: batches arrive and
-    leave as ``pyarrow.RecordBatch``. For BINARY-heavy columns that
-    conversion is a real copy (pandas boxes each buffer as a Python
-    bytes object on the way in AND out), so the Arrow-level path is the
-    better default for multimodal payloads; the pandas path remains for
-    kernels that genuinely want DataFrame ergonomics.
-    """
-    import pyarrow as pa
-
-    def decode(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            contents = batch.column(1)
-            cols = {k: [] for k in ("width", "height", "channels", "sha256", "decode_ok")}
-            for c in contents:
-                w, h, ch, sha, ok = _decode_one(c.as_py() if c.is_valid else None)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["channels"].append(ch)
-                cols["sha256"].append(sha)
-                cols["decode_ok"].append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(cols["width"], pa.int32()),
-                    pa.array(cols["height"], pa.int32()),
-                    pa.array(cols["channels"], pa.int32()),
-                    pa.array(cols["sha256"], pa.string()),
-                    pa.array(cols["decode_ok"], pa.bool_()),
-                ],
-                names=["media_id", "width", "height", "channels", "sha256", "decode_ok"],
-            )
-
-    return df.select(id_col, content_col).mapInArrow(decode, IMAGE_META_SCHEMA)

@@ -270,112 +270,6 @@ def lsh_topk(
     )
 
 
-def ivf_topk(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 64,
-    n_probe: int = 4,
-    seed: int = 42,
-    data_id: str = "vec_id",
-    data_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    fit_sample_rows: int = 100_000,
-    n_rows_hint: int | None = None,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Approximate cosine top-k via an IVF (inverted-file) index: KMeans
-    coarse quantizer assigns every row to a centroid cell; each query
-    scores only the rows in its `n_probe` nearest cells.
-
-    The 100 TB shape: the quantizer trains on a bounded SAMPLE (~
-    ``fit_sample_rows`` rows — a few hundred per centroid is plenty for a
-    coarse quantizer; the iterative KMeans job must not scan 100 TB), cell
-    assignment is one map-side transform over the full data, and the probe
-    join shuffles on cell id — cells are size-balanced by KMeans, and
-    recall/cost is a dial (n_probe/n_centroids). Compared to SRP-LSH this
-    adapts to the data's actual cluster structure.
-
-    Fit sampling: when the caller knows the table size it passes
-    ``n_rows_hint`` (catalog/file statistics — free) and the fit set is
-    a seeded uniform sample that reads only ~target rows. Without a
-    hint the fit set is the ``target`` rows with the smallest
-    ``xxhash64(id)`` — a content-stable uniform subset (hash-min
-    sampling) that costs one full scan but NO shuffle (Spark plans
-    orderBy+limit as TakeOrderedAndProject: per-partition partial
-    top-k, merged once), fixing the file-order bias a bare
-    ``limit(target)`` has on clustered layouts. The bounded fit set is
-    persisted for KMeans's iterations and released before returning.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    d = data.select(
-        F.col(data_id).alias("vec_id"), to_double_array(data_vec).alias("dv")
-    ).withColumn("features", array_to_vector("dv"))
-    target = max(fit_sample_rows, 50 * n_centroids)
-    if n_rows_hint is not None and n_rows_hint > target:
-        fit_df = d.sample(fraction=min(1.0, 1.05 * target / n_rows_hint), seed=seed)
-    else:
-        fit_df = d.orderBy(F.xxhash64(F.col("vec_id"))).limit(target)
-    fit_df = fit_df.persist()
-    try:
-        # a COARSE quantizer needs rough cells, not convergence:
-        # measured on the test embeddings, 10 Lloyd iterations land
-        # within 0.02% of the 20-iteration training cost at half the fit
-        # time — recall is governed by n_probe, not the last few
-        # centroid nudges
-        kmeans = KMeans(
-            k=n_centroids,
-            seed=seed,
-            maxIter=max_iter,
-            featuresCol="features",
-            predictionCol="cell",
-        )
-        model = kmeans.fit(fit_df)
-    finally:
-        fit_df.unpersist(blocking=False)
-    assigned = model.transform(d).select("vec_id", "dv", "cell")
-
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cdf = queries.sparkSession.createDataFrame(centroids, ["cell", "cv"])
-    q = queries.select(
-        F.col(query_id).alias("query_id"), to_double_array(query_vec).alias("qv")
-    )
-    # each query picks its n_probe nearest cells (tiny broadcast join)
-    probes = group_topk(
-        q.crossJoin(F.broadcast(cdf)).select(
-            "query_id",
-            "qv",
-            "cell",
-            squared_euclidean(F.col("qv"), F.col("cv")).alias("d2"),
-        ),
-        ["query_id"],
-        [F.col("d2").asc(), F.col("cell")],
-        n_probe,
-    ).select("query_id", "qv", "cell")
-
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("dv"), F.col("qv")).alias("cosine_sim"),
-        )
-    )
-    return group_topk(
-        scored,
-        ["query_id"],
-        [F.col("cosine_sim").desc(), F.col("vec_id")],
-        k,
-        keep_rank=True,
-    )
-
-
 def _deterministic_kmeans(
     vectors: list[list[float]], k: int, iters: int = 10
 ) -> list[list[float]]:
@@ -505,19 +399,16 @@ def ivf_topk_portable(
     centroids baked into the plan as literal arrays. Cell assignment,
     query probing (``n_probe`` nearest cells, ties to the lower cell),
     candidate scoring, and top-k are then pure expressions an external
-    SQL engine reproduces bit-for-bit — this is the oracle-graded twin
-    of :func:`ivf_topk` (whose MLlib KMeans quantizer is seeded but not
-    cross-engine replayable).
+    SQL engine reproduces bit-for-bit.
 
-    Same 100 TB shape as :func:`ivf_topk`: the fit never scans more
-    than ~``fit_target`` rows (pass ``n_rows_hint`` from catalog stats
-    to skip the count), assignment is one map-side transform, the probe
-    join shuffles on near-balanced cell ids, and recall/cost is the
-    n_probe/n_centroids dial. The iterative KMeans runs on the DRIVER
-    over the bounded sample — deliberately NOT a distributed KMeans:
-    a coarse quantizer fit is a few-hundred-row problem at any data
-    scale, and driver-side numpy makes it deterministic and free of
-    per-iteration Spark jobs.
+    The 100 TB shape: the fit never scans more than ~``fit_target`` rows
+    (pass ``n_rows_hint`` from catalog stats to skip the count),
+    assignment is one map-side transform, the probe join shuffles on
+    near-balanced cell ids, and recall/cost is the n_probe/n_centroids
+    dial. The iterative KMeans runs on the DRIVER over the bounded
+    sample — deliberately NOT a distributed KMeans: a coarse quantizer
+    fit is a few-hundred-row problem at any data scale, and driver-side
+    numpy makes it deterministic and free of per-iteration Spark jobs.
 
     Returns (query_id, vec_id, cosine_sim, rank), rank 1-based, ties on
     vec_id.
@@ -909,37 +800,6 @@ def _fit_pq_codebooks(
     ]
 
 
-def pq_codes(vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
-    """PQ encoding: array<int> of the 1-BASED nearest sub-centroid per
-    subspace (first-min ties, the :func:`_argmin_cell` contract). This
-    is the compressed row representation — ``n_subspaces`` small ints
-    instead of ``dim`` floats (64 fp32 → 8 codes = 32× smaller at the
-    default shape), which is the entire point of PQ at 100 TB: the
-    scan side of the search carries codes only, never raw vectors.
-
-    The input vector is bound once through a one-element-array lambda;
-    each subspace slices it and reuses the literal-codebook distance
-    fold from :func:`centroid_sq_dists`, so the expression order is the
-    one a SQL oracle mirrors term-for-term.
-    """
-    books = codebooks
-    ds = len(books[0][0])
-
-    def enc(vb: Column) -> Column:
-        return F.array(
-            *[
-                _argmin_cell(
-                    centroid_sq_dists(
-                        F.slice(vb, m * ds + 1, ds), books[m]
-                    )
-                )
-                for m in range(len(books))
-            ]
-        )
-
-    return F.element_at(F.transform(F.array(to_double_array(vec)), enc), 1)
-
-
 def pq_lut(vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
     """Asymmetric-distance lookup tables for one query vector:
     array<array<double>> with ``lut[m][j]`` = squared L2 distance from
@@ -996,7 +856,6 @@ def pq_topk_portable(
     fit_target: int = 256,
     max_iter: int = 10,
     refine_factor: int | None = 4,
-    encoder: str = "native",
     data_id: str = "vec_id",
     data_vec: str = "embedding",
     query_id: str = "query_id",
@@ -1052,12 +911,8 @@ def pq_topk_portable(
     expensive full-corpus pass is the encode, and every subsequent
     search only scans (vec_id, cell, codes).
 
-    ``encoder`` picks the corpus encode tier: ``"native"`` (pure
-    expressions — the all-JVM posture) or ``"arrow"``
-    (:func:`pq_encode_arrow`, bit-identical output, measured 4–5×
-    faster — the winnowing-kernel rule: Python is the slow path except
-    when a vectorized Arrow kernel beats interpreted HOF evaluation).
-    The query side (LUTs, ADC, refine) is native either way.
+    The corpus encode is :func:`pq_encode`'s Arrow-batched numpy kernel;
+    the query side (LUTs, ADC, refine) is pure expressions.
     """
     coarse, books = pq_fit(
         data,
@@ -1070,10 +925,7 @@ def pq_topk_portable(
         data_vec=data_vec,
         n_rows_hint=n_rows_hint,
     )
-    if encoder not in ("native", "arrow"):
-        raise ValueError("encoder must be 'native' or 'arrow'")
-    enc = pq_encode if encoder == "native" else pq_encode_arrow
-    index = enc(
+    index = pq_encode(
         data,
         coarse,
         books,
@@ -1130,17 +982,101 @@ def pq_encode(
     the compressed index rows (vec_id, cell, codes) — raw vectors are
     dropped here, which is what makes the persisted index ~32× smaller
     than the fp32 column at the default shape. Write this to parquet to
-    amortize the corpus scan across query workloads."""
+    amortize the corpus scan across query workloads.
+
+    ``cell`` is the 1-based nearest coarse centroid and ``codes`` the
+    array<int> of 1-based nearest sub-centroids, one per subspace —
+    ``n_subspaces`` small ints instead of ``dim`` floats.
+
+    The kernel is Arrow-batched numpy (``mapInPandas``): an expression
+    form walks ~1k higher-order-function lambda evaluations per row
+    (~200 µs/row warm) and measured 4–5× slower. Every squared distance
+    is accumulated DIMENSION-BY-DIMENSION with an explicit Python loop
+    — ``acc = acc + diff_i²`` over a (rows, centroids) array — which
+    performs the adds in exactly the left-to-right order of
+    :func:`centroid_sq_dists`'s fold, each one an IEEE double add;
+    ``np.argmin`` takes the FIRST minimum, matching
+    :func:`_argmin_cell`'s array_position contract. No np.sum/np.dot
+    anywhere (their pairwise/BLAS orders differ from the fold), so the
+    oracle's SQL replay of that fold picks the same cell and codes
+    (pinned against a pure-Python replay in tests/test_pq.py).
+
+    A null vector, one whose length is not ``len(coarse[0])``, or one
+    with a NaN/inf value raises ``ValueError`` naming its ``vec_id``:
+    such a row has no nearest centroid.
+    """
+    import numpy as np
+    import pandas as pd
+
+    dim = len(coarse[0])
+    n_sub = len(books)
+    ds = dim // n_sub
+    C = [np.asarray(c, dtype=np.float64) for c in coarse]  # K x (dim,)
+    B = [
+        [np.asarray(c, dtype=np.float64) for c in books[m]]
+        for m in range(n_sub)
+    ]
+
+    def _first_argmin(X: "np.ndarray", cents: list["np.ndarray"], off: int):
+        n = len(X)
+        acc = None
+        dists = []
+        for c in cents:
+            acc = np.zeros(n, dtype=np.float64)
+            for i in range(len(c)):
+                t = X[:, off + i] - c[i]
+                acc = acc + t * t  # left-assoc, one IEEE add per dim
+            dists.append(acc)
+        D = np.stack(dists, axis=1)  # (n, n_cents)
+        return np.argmin(D, axis=1) + 1  # first min, 1-based
+
+    def encode(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            rows = []
+            for vid, v in zip(pdf["vec_id"], pdf["dv"]):
+                if v is None:
+                    raise ValueError(f"pq_encode: vec_id {vid!r} is null")
+                if len(v) != dim:
+                    raise ValueError(
+                        f"pq_encode: vec_id {vid!r} has {len(v)} values, "
+                        f"expected {dim}"
+                    )
+                rows.append(np.asarray(v, dtype=np.float64))
+            X = np.array(rows, dtype=np.float64)
+            finite = np.isfinite(X).all(axis=1)
+            if not finite.all():
+                vid = pdf["vec_id"].iloc[int(np.argmin(finite))]
+                raise ValueError(
+                    f"pq_encode: vec_id {vid!r} has a NaN or infinite value"
+                )
+            cell = _first_argmin(X, C, 0)
+            codes = np.stack(
+                [
+                    _first_argmin(X, B[m], m * ds)
+                    for m in range(n_sub)
+                ],
+                axis=1,
+            )
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "cell": cell.astype("int32"),
+                    "codes": [
+                        [int(x) for x in row] for row in codes
+                    ],
+                }
+            )
+
     d = data.select(
         F.col(data_id).alias("vec_id"), to_double_array(data_vec).alias("dv")
     )
-    d = d.select(
-        "vec_id",
-        "dv",
-        _argmin_cell(centroid_sq_dists(F.col("dv"), coarse)).alias("cell"),
-    )
-    return d.select(
-        "vec_id", "cell", pq_codes(F.col("dv"), books).alias("codes")
+    # the id column keeps the CALLER's type: hardcoding `long` here
+    # silently miscast string/decimal ids to NULL
+    id_type = d.schema["vec_id"].dataType.simpleString()
+    return d.mapInPandas(
+        encode, f"vec_id {id_type}, cell int, codes array<int>"
     )
 
 
@@ -1378,97 +1314,6 @@ def cluster_balanced_sample(
     )
 
 
-def pq_encode_arrow(
-    data: DataFrame,
-    coarse: list[list[float]],
-    books: list[list[list[float]]],
-    data_id: str = "vec_id",
-    data_vec: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched twin of :func:`pq_encode` — BIT-IDENTICAL output,
-    measured much faster (the winnowing-kernel precedent: Python is the
-    slow path EXCEPT when a vectorized Arrow kernel beats interpreted
-    expression evaluation, and here it does by a wide margin — the
-    native encode walks ~1k higher-order-function lambda evaluations
-    per row, ~200 µs/row warm; the numpy kernel batches them).
-
-    Bit-identity argument (test-asserted, not just argued): every
-    squared distance is accumulated DIMENSION-BY-DIMENSION with an
-    explicit Python loop — ``acc = acc + diff_i²`` over a (rows,
-    centroids) array — which performs the adds in exactly the
-    left-to-right order of :func:`centroid_sq_dists`'s fold, each one
-    an IEEE double add; ``np.argmin`` takes the FIRST minimum, matching
-    :func:`_argmin_cell`'s array_position contract. No np.sum/np.dot
-    anywhere (their pairwise/BLAS orders differ from the fold).
-
-    Use this for the one full-corpus encode pass when building a
-    persisted index at scale; the graded query path keeps the native
-    expression form (one engine posture for the oracle-replayed plan,
-    and the corpus side is where the time goes anyway).
-    """
-    import numpy as np
-    import pandas as pd
-
-    dim = len(coarse[0])
-    n_sub = len(books)
-    ds = dim // n_sub
-    C = [np.asarray(c, dtype=np.float64) for c in coarse]  # K x (dim,)
-    B = [
-        [np.asarray(c, dtype=np.float64) for c in books[m]]
-        for m in range(n_sub)
-    ]
-
-    def _first_argmin(X: "np.ndarray", cents: list["np.ndarray"], off: int):
-        n = len(X)
-        acc = None
-        dists = []
-        for c in cents:
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(len(c)):
-                t = X[:, off + i] - c[i]
-                acc = acc + t * t  # left-assoc, one IEEE add per dim
-            dists.append(acc)
-        D = np.stack(dists, axis=1)  # (n, n_cents)
-        return np.argmin(D, axis=1) + 1  # first min, 1-based
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["dv"]],
-                dtype=np.float64,
-            )
-            cell = _first_argmin(X, C, 0)
-            codes = np.stack(
-                [
-                    _first_argmin(X, B[m], m * ds)
-                    for m in range(n_sub)
-                ],
-                axis=1,
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": cell.astype("int32"),
-                    "codes": [
-                        [int(x) for x in row] for row in codes
-                    ],
-                }
-            )
-
-    d = data.select(
-        F.col(data_id).alias("vec_id"), to_double_array(data_vec).alias("dv")
-    )
-    # the id column keeps the CALLER's type (pq_encode preserves it via
-    # plain column passthrough; hardcoding `long` here silently miscast
-    # string/decimal ids to NULL — round-10 advice fix)
-    id_type = d.schema["vec_id"].dataType.simpleString()
-    return d.mapInPandas(
-        encode, f"vec_id {id_type}, cell int, codes array<int>"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental PQ index maintenance (round-11): the persisted index is a
 # batch_id-partitioned parquet layout so NEW vectors encode and land as
@@ -1503,14 +1348,13 @@ def pq_index_append(
     batch_id: int,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
-    encoder: str = "arrow",
 ) -> None:
     """Encode ONLY the delta vectors with the index's FITTED quantizers
     and append them as partition ``batch_id=<n>`` of the persisted
     layout — the one-shot :func:`pq_encode` pass shrinks to the new
     rows, which is what index maintenance must cost at 100 TB (the
-    round-10 verdict's missing item #2). Because both encoders are
-    pure per-row maps of (vector, literals), the merged layout read
+    round-10 verdict's missing item #2). Because the encode is a pure
+    per-row map of (vector, literals), the merged layout read
     back by :func:`read_pq_index` is ROW-IDENTICAL to a full re-encode
     of the grown corpus (bit-parity test-asserted in tests/test_pq.py).
 
@@ -1519,14 +1363,9 @@ def pq_index_append(
     against the new codebooks). Drift is an offline rebuild decision —
     re-fit, re-encode to a fresh index_path, swap, exactly like the
     reference's model-promotion flow for the classifier artifact.
-    ``encoder="arrow"`` (default) uses the vectorized
-    :func:`pq_encode_arrow` kernel; "native" keeps the expression twin.
     """
-    if encoder not in ("arrow", "native"):
-        raise ValueError(f"unknown encoder {encoder!r}")
-    enc = pq_encode_arrow if encoder == "arrow" else pq_encode
     pq_index_write(
-        enc(
+        pq_encode(
             new_data,
             coarse,
             books,

@@ -141,12 +141,3 @@ def heavy_hitters_exact(
     counts.unpersist(blocking=False)
     return out
 
-
-def heavy_hitters_approx(
-    df: DataFrame, cols: list[str], support: float = 0.01
-) -> DataFrame:
-    """One-pass approximate heavy hitters (Karp/Shenker/Papadimitriou via
-    ``df.stat.freqItems``): guaranteed to CONTAIN every item above
-    support (no false negatives), may include items below it. Use when
-    the distinct-item space is too large for the exact aggregate."""
-    return df.stat.freqItems(cols, support)

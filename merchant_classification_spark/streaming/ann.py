@@ -276,7 +276,6 @@ def start_index_ingest(
     checkpoint: str,
     data_id: str = "vec_id",
     data_vec: str = "embedding",
-    encoder: str = "arrow",
     serving_index: ServingIndex | None = None,
     trigger_once: bool = True,
 ) -> StreamingQuery:
@@ -318,7 +317,6 @@ def start_index_ingest(
             batch_id=int(batch_id),
             data_id=data_id,
             data_vec=data_vec,
-            encoder=encoder,
         )
         if serving_index is not None:
             serving_index.refresh()

@@ -186,119 +186,3 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def sessionize_stream_tws(
-    stream: DataFrame,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """``sessionize_stream`` on the transformWithState API (Spark 4.x):
-    identical output schema/units/semantics, but state lives in typed
-    handles (ValueState) and idle sessions flush via explicit event-time
-    timers instead of GroupState timeouts. Functionally interchangeable
-    with the applyInPandasWithState version; prefer this one on Spark 4 —
-    it is the actively developed operator (state schema evolution, TTL,
-    multiple state variables).
-
-    Timer discipline: one timer per key is REGISTERED per batch at
-    last_event + gap, and stale timers (an earlier batch's timer firing
-    after newer events arrived) are detected by comparing the expiry
-    against the current state's deadline and ignored — no delete-on-write
-    bookkeeping, which would double the state-store round-trips.
-
-    Runtime requirement: the transformWithState Python client talks to
-    the state server over protobuf, so ``google.protobuf`` must be
-    importable on driver and workers (it ships with real Spark distros;
-    the test suite skips when absent).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_seconds * _US
-    gap_ms = gap_seconds * 1000
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._session = handle.getValueState("session", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            events = pd.concat(list(rows), ignore_index=True).sort_values("ts")
-            ts_us = events["ts"].astype("int64") // 1000  # ns -> µs
-            values = events["value"].astype("float64")
-
-            got = self._session.get() if self._session.exists() else None
-            if got is not None:
-                start_us, last_us, n, sv = got
-            else:
-                start_us = last_us = int(ts_us.iloc[0])
-                n, sv = 0, 0
-
-            closed = []
-            for t_us, v in zip(ts_us, values):
-                t_us = int(t_us)
-                if n > 0 and t_us - last_us > gap_us:
-                    closed.append((start_us, last_us, n, sv))
-                    start_us, n, sv = t_us, 0, 0
-                if n == 0:
-                    start_us = t_us
-                last_us = t_us
-                n += 1
-                sv += _to_cents(float(v))
-
-            self._session.update((start_us, last_us, n, sv))
-            self._handle.registerTimer(last_us // 1000 + gap_ms)
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(closed),
-                        "session_start": [
-                            pd.Timestamp(s, unit="us") for s, *_ in closed
-                        ],
-                        "session_end": [
-                            pd.Timestamp(e, unit="us") for _, e, *_ in closed
-                        ],
-                        "n_events": [n_ev for _, _, n_ev, _ in closed],
-                        "sum_value_cents": [v for _, _, _, v in closed],
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            got = self._session.get() if self._session.exists() else None
-            if got is None:
-                return
-            start_us, last_us, n, sv = got
-            if expiredTimerInfo.getExpiryTimeInMs() < last_us // 1000 + gap_ms:
-                return  # stale timer: newer events moved the deadline
-            self._session.clear()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                    "sum_value_cents": [sv],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    prepared = stream.withWatermark(ts_col, watermark).select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )

@@ -294,55 +294,3 @@ def test_save_load_bpe_roundtrip(tmp_path, spark, tiny_docs):
     open(bad, "w").write('{"format": "other"}')
     with pytest.raises(ValueError):
         load_bpe(bad)
-
-
-def test_two_level_fit_matches_global(spark, tables):
-    """Two-level per-shard candidates + exact recount = global fit on the
-    graded corpus (round-7 done-bar), including under an adversarial
-    repartition that splits every word's occurrences across shards."""
-    from merchant_classification_spark.functions.bpe import (
-        corpus_word_freq,
-        corpus_word_freq_two_level,
-    )
-
-    docs = tables["documents"]
-    want = corpus_word_freq(docs, "text", max_vocab_words=256)
-    got = corpus_word_freq_two_level(docs, "text", max_vocab_words=256)
-    assert got == want
-    # scatter the corpus over many tiny shards: per-shard counts are now
-    # far from global, so survivors-only sums WOULD undercount — the
-    # exact recount must still land on the global table
-    scattered = docs.repartition(16)
-    got_scattered = corpus_word_freq_two_level(
-        scattered, "text", max_vocab_words=256
-    )
-    assert got_scattered == want
-
-
-def test_two_level_no_recount_is_survivor_sums(spark, tiny_docs):
-    from merchant_classification_spark.functions.bpe import (
-        corpus_word_freq,
-        corpus_word_freq_two_level,
-    )
-
-    # single partition: per-shard top-k IS the global table, so even the
-    # no-recount mode matches exactly
-    one = tiny_docs.coalesce(1)
-    want = corpus_word_freq(one, "text", max_vocab_words=64)
-    got = corpus_word_freq_two_level(
-        one, "text", max_vocab_words=64, exact_recount=False
-    )
-    assert got == want
-
-
-def test_two_level_fit_feeds_identical_merges(spark, tables):
-    from merchant_classification_spark.functions.bpe import (
-        corpus_word_freq,
-        corpus_word_freq_two_level,
-        fit_bpe,
-    )
-
-    docs = tables["documents"]
-    wf_a = corpus_word_freq(docs, "text", max_vocab_words=512)
-    wf_b = corpus_word_freq_two_level(docs, "text", max_vocab_words=512)
-    assert fit_bpe(wf_a, num_merges=40) == fit_bpe(wf_b, num_merges=40)

@@ -8,7 +8,6 @@ from merchant_classification_spark.operators.dedup import (
     assign_representatives,
     exact_dedup,
     fingerprint_dedup,
-    minhash_candidate_pairs,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     shingles,
@@ -113,9 +112,12 @@ def test_assign_representatives_chain(spark):
 
 
 def test_minhash_on_documents_table(tables):
-    """Smoke the full LSH pipeline on the real documents table."""
+    """Smoke the full LSH pipeline on the real documents table; a zero
+    verify threshold keeps every band-collision candidate."""
     docs = tables["documents"]
-    pairs = minhash_candidate_pairs(docs, "doc_id", "text", num_hashes=32, bands=8)
+    pairs = minhash_dedup_pairs(
+        docs, "doc_id", "text", threshold=0.0, num_hashes=32, bands=8
+    )
     n = pairs.count()
     assert n < docs.count() ** 2 / 10  # LSH actually prunes
 

@@ -180,9 +180,10 @@ def test_literal_table_matches_create_dataframe(spark):
 def test_literal_table_large_fallback(spark, monkeypatch):
     """Above the row cap the helper must take the createDataFrame path
     (the literal form is for BOUNDED fitted tables only)."""
+    from merchant_classification_spark.functions import lookup
     from merchant_classification_spark.functions.lookup import literal_table
 
-    monkeypatch.setenv("SPARK_GRAFT_LITERAL_TABLE_MAX", "3")
+    monkeypatch.setattr(lookup, "_LITERAL_TABLE_MAX_ROWS", 3)
     rows = [(f"k{i}", float(i)) for i in range(5)]
     df = literal_table(spark, rows, "k string, v double")
     # the fallback is an RDD-backed local relation, not a folded literal

@@ -90,16 +90,6 @@ def test_audio_features_fanout(media):
             assert all(0.0 <= v < 1.0 for v in r.features)
 
 
-def test_decode_arrow_twin_bit_identical(media):
-    from merchant_classification_spark.operators.multimodal import (
-        decode_image_meta_arrow,
-    )
-
-    a = sorted(tuple(r) for r in decode_image_meta(media).collect())
-    b = sorted(tuple(r) for r in decode_image_meta_arrow(media).collect())
-    assert a == b and len(a) == 4
-
-
 # ---------------------------------------------------------------------------
 # REAL media bytes: hand-crafted valid files through the real decode tiers
 # ---------------------------------------------------------------------------

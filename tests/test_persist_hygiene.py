@@ -1,6 +1,6 @@
 """Operators that persist internally must not leak cached blocks.
 
-Round-2 verdict: `minhash_candidate_pairs` / `ngram_jaccard_pairs` left
+Round-2 verdict: the MinHash pair operator / `ngram_jaccard_pairs` left
 `.persist(MEMORY_AND_DISK)` frames cached forever, so any pipeline
 composing them accumulated blocks until memory pressure. The operators now
 eagerly snapshot their (small) outputs and release every internal persist
@@ -19,7 +19,6 @@ ever release.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def persistent_rdd_ids(spark) -> set[int]:
@@ -54,20 +53,6 @@ def test_ngram_jaccard_releases_all_persists(spark, docs):
     assert len(gained) <= 1, (
         f"ngram_jaccard_pairs leaked internal persists: {gained}"
     )
-
-
-def test_ivf_topk_releases_fit_persist(spark, tables):
-    from merchant_classification_spark.operators.similarity import ivf_topk
-
-    emb = tables["embeddings"]
-    qs = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    before = persistent_rdd_ids(spark)
-    out = ivf_topk(emb, qs, k=5, n_centroids=4, n_probe=2)
-    assert out.count() > 0
-    gained = persistent_rdd_ids(spark) - before
-    assert not gained, f"ivf_topk leaked persisted RDDs: {gained}"
 
 
 def test_assign_representatives_releases_loop_persists(spark, docs):

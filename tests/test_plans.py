@@ -259,13 +259,16 @@ def test_diversity_cap_uses_window_group_limit(spark, sf_dir):
     assert has_broadcast_join(out)  # the totals join
 
 
-def test_pq_probe_join_broadcasts_and_stays_jvm(spark, sf_dir):
+def test_pq_probe_join_broadcasts_and_stays_jvm(spark, sf_dir, tmp_path):
     # the IVF-PQ candidate join must broadcast the probe side (codes
-    # scan never shuffles) and the whole ADC pipeline stays codegen
+    # scan never shuffles) and the whole ADC search over a persisted
+    # index stays codegen; only the one-time corpus encode is Python
     from pyspark.sql import functions as F
 
     from merchant_classification_spark.operators.similarity import (
-        pq_topk_portable,
+        pq_encode,
+        pq_fit,
+        pq_search,
     )
     from merchant_classification_spark.sources.tables import load_table
 
@@ -274,9 +277,13 @@ def test_pq_probe_join_broadcasts_and_stays_jvm(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    out = pq_topk_portable(
-        emb, qs, k=5, n_centroids=4, n_probe=2, n_subspaces=8,
-        n_codes=8, fit_target=64,
+    coarse, books = pq_fit(
+        emb, n_centroids=4, n_subspaces=8, n_codes=8, fit_target=64
+    )
+    path = str(tmp_path / "pq_index")
+    pq_encode(emb, coarse, books).write.parquet(path)
+    out = pq_search(
+        spark.read.parquet(path), emb, coarse, books, qs, k=5, n_probe=2
     )
     assert has_broadcast_join(out)
     assert_no_python_eval(out)

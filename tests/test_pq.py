@@ -16,7 +16,7 @@ from merchant_classification_spark.operators.similarity import (
     brute_force_topk_l2,
     cluster_balanced_sample,
     deterministic_fit_sample,
-    pq_codes,
+    pq_encode,
     pq_lut,
     pq_topk_portable,
 )
@@ -95,35 +95,62 @@ def _py_code(v, book):
     return best
 
 
-def test_codes_match_python_replay(spark, vectors, fitted):
-    _, books = fitted
+def _encoded(df, coarse, books):
+    return {
+        r["vec_id"]: (r["cell"], list(r["codes"]))
+        for r in pq_encode(df, coarse, books).collect()
+    }
+
+
+def _replayed(rows, coarse, books):
     ds = DIM // N_SUB
-    got = vectors.limit(50).select(
-        "vec_id", "embedding", pq_codes("embedding", books).alias("codes")
-    ).collect()
-    for r in got:
-        v = list(r["embedding"])
-        want = [
-            _py_code(v[m * ds:(m + 1) * ds], books[m]) for m in range(N_SUB)
-        ]
-        assert list(r["codes"]) == want, r["vec_id"]
+    return {
+        i: (
+            _py_code(v, coarse),
+            [_py_code(v[m * ds:(m + 1) * ds], books[m]) for m in range(N_SUB)],
+        )
+        for i, v in rows.items()
+    }
 
 
-def test_adc_matches_python_replay(spark, vectors, fitted):
+@pytest.fixture(scope="module")
+def coarse(fitted):
+    return _deterministic_kmeans(fitted[0], 8, 10)
+
+
+@pytest.fixture(scope="module")
+def rows(vectors):
+    return {r["vec_id"]: list(r["embedding"]) for r in vectors.collect()}
+
+
+def test_codes_match_python_replay(spark, vectors, fitted, coarse, rows):
+    _, books = fitted
+    got = _encoded(vectors.where(F.col("vec_id") < 50), coarse, books)
+    want = _replayed({i: rows[i] for i in range(50)}, coarse, books)
+    assert {i: c for i, (_, c) in got.items()} == {
+        i: c for i, (_, c) in want.items()
+    }
+
+
+def test_adc_matches_python_replay(spark, vectors, fitted, coarse, rows):
     _, books = fitted
     ds = DIM // N_SUB
     q = [0.5] * DIM
-    got = vectors.limit(20).select(
-        "vec_id",
-        "embedding",
-        adc_distance(
-            pq_lut(F.array(*[F.lit(x) for x in q]), books),
-            pq_codes("embedding", books),
-            N_SUB,
-        ).alias("adc"),
-    ).collect()
+    got = (
+        pq_encode(vectors.where(F.col("vec_id") < 20), coarse, books)
+        .select(
+            "vec_id",
+            adc_distance(
+                pq_lut(F.array(*[F.lit(x) for x in q]), books),
+                F.col("codes"),
+                N_SUB,
+            ).alias("adc"),
+        )
+        .collect()
+    )
+    assert len(got) == 20
     for r in got:
-        v = list(r["embedding"])
+        v = rows[r["vec_id"]]
         acc = 0.0
         for m in range(N_SUB):
             code = _py_code(v[m * ds:(m + 1) * ds], books[m])
@@ -305,42 +332,43 @@ def test_persisted_index_search_matches_one_shot(spark, vectors, tmp_path):
     assert adc_only.count() == 6 * 5
 
 
-def test_arrow_encode_bit_identical_to_native(spark, vectors, fitted):
-    from merchant_classification_spark.operators.similarity import (
-        pq_encode,
-        pq_encode_arrow,
-    )
-
-    fit, books = fitted
-    coarse = _deterministic_kmeans(fit, 8, 10)
-    native = {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in pq_encode(vectors, coarse, books).collect()
-    }
-    arrow = {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in pq_encode_arrow(
-            vectors.repartition(7), coarse, books
-        ).collect()
-    }
-    assert native == arrow
-    assert len(native) == 400
+def test_arrow_encode_bit_identical_to_native(
+    spark, vectors, fitted, coarse, rows
+):
+    """The Arrow encode kernel's every cell and code equals the
+    pure-Python left-assoc fold with first-min ties — the order of the
+    native expression fold the oracle's SQL replays — under any
+    partitioning of the input."""
+    _, books = fitted
+    want = _replayed(rows, coarse, books)
+    assert _encoded(vectors, coarse, books) == want
+    assert _encoded(vectors.repartition(7), coarse, books) == want
+    assert len(want) == 400
 
 
-def test_arrow_encoder_one_shot_matches_native(spark, vectors):
-    qs = vectors.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
+@pytest.mark.parametrize(
+    "vec, what",
+    [
+        (None, "is null"),
+        ([0.5] * (DIM - 1), f"has {DIM - 1} values, expected {DIM}"),
+        ([float("nan")] + [0.5] * (DIM - 1), "has a NaN or infinite value"),
+        ([0.5] * (DIM - 1) + [float("inf")], "has a NaN or infinite value"),
+        ([None] + [0.5] * (DIM - 1), "has a NaN or infinite value"),
+    ],
+    ids=["null", "ragged", "nan", "inf", "null-element"],
+)
+def test_encode_rejects_degenerate_vector(
+    spark, vectors, fitted, coarse, vec, what
+):
+    """A vector with no nearest centroid fails the encode with a named
+    error instead of a raw numpy IndexError or a silent code."""
+    _, books = fitted
+    bad = spark.createDataFrame(
+        [(1000, vec)], "vec_id long, embedding array<double>"
     )
-    kwargs = dict(k=5, n_centroids=8, n_probe=3, n_subspaces=N_SUB,
-                  n_codes=N_CODES, fit_target=128, refine_factor=8)
-    native = pq_topk_portable(vectors, qs, encoder="native", **kwargs)
-    arrow = pq_topk_portable(vectors, qs, encoder="arrow", **kwargs)
-    assert sorted(map(tuple, native.collect())) == sorted(
-        map(tuple, arrow.collect())
-    )
-    with pytest.raises(ValueError):
-        pq_topk_portable(vectors, qs, encoder="fast")
+    msg = f"ValueError: pq_encode: vec_id 1000 {what}"
+    with pytest.raises(Exception, match=msg):
+        pq_encode(vectors.limit(5).unionByName(bad), coarse, books).collect()
 
 
 def test_index_append_row_identical_to_full_reencode(spark, vectors, fitted, tmp_path):
@@ -380,15 +408,3 @@ def test_index_append_row_identical_to_full_reencode(spark, vectors, fitted, tmp
     }
     assert merged == full
     assert read_pq_index(spark, index_path).count() == 400  # no dup rows
-
-    # both encoders land the same partition content
-    pq_index_append(
-        delta, coarse, books, index_path, batch_id=1, encoder="native"
-    )
-    assert {
-        r["vec_id"]: (r["cell"], list(r["codes"]))
-        for r in read_pq_index(spark, index_path).collect()
-    } == full
-
-    with pytest.raises(ValueError, match="unknown encoder"):
-        pq_index_append(delta, coarse, books, index_path, 2, encoder="x")

@@ -65,21 +65,6 @@ def test_lsh_recall_reasonable(emb, queries):
     assert recall > 0.5, f"LSH recall too low: {recall}"
 
 
-def test_ivf_recall_beats_blind_guessing(emb, queries):
-    from merchant_classification_spark.operators.similarity import ivf_topk
-
-    rows = emb.collect()
-    expected = numpy_topk(rows, K)
-    got_rows = ivf_topk(emb, queries, k=K, n_centroids=16, n_probe=4).collect()
-    got = {}
-    for r in got_rows:
-        got.setdefault(r.query_id, set()).add(r.vec_id)
-    hits = sum(len(got.get(q, set()) & set(v)) for q, v in expected.items())
-    recall = hits / (K * N_QUERIES)
-    # probing 4/16 cells of clustered data should recover most neighbors
-    assert recall > 0.5, f"IVF recall too low: {recall}"
-
-
 def test_signature_deterministic(emb):
     a = emb.select(hyperplane_signature("embedding", 64, 12, seed=1).alias("s"))
     b = emb.select(hyperplane_signature("embedding", 64, 12, seed=1).alias("s"))

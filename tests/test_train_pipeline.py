@@ -142,3 +142,36 @@ def test_lifecycle_no_class_kept(spark, tmp_path):
             _raw(spark, n=100), config=cfg, classifier=clf, register=False
         )
     assert not os.path.exists(os.path.join(str(tmp_path), "merchcat_empty_model"))
+
+
+def test_lifecycle_single_class_kept(spark, tmp_path):
+    """count_threshold keeps one class: the run trains a one-label model
+    with a defined result, and scoring labels every row with that class."""
+    from merchant_classification_spark.pipelines.etl import clean_transactions
+
+    rng = random.Random(17)
+    rows = [
+        (m, MERCHANTS[m].format(n=rng.randint(1000, 9999)), 1.0)
+        for m, n in (("starbucks", 150), ("tesco", 10))
+        for _ in range(n)
+    ]
+    raw = spark.createDataFrame(
+        rows, ["tr_merchant", "tr_description", "tr_amount"]
+    )
+    cfg = EngineConfig(
+        model_path=str(tmp_path), model_name="merchcat_one", sample_size=120,
+        count_threshold=50, seed=3,
+    )
+    clf = NarrativeClassifier(ngram_max=1, num_features=1 << 12, max_iter=5)
+    result = train_merchant_classifier(
+        raw, config=cfg, classifier=clf, register=False
+    )
+    assert result.metrics["avg_acc"] == 1.0
+    assert [r["tr_merchant"] for r in result.per_class.collect()] == [
+        "starbucks"
+    ]
+    scored = result.model.transform(clean_transactions(raw))
+    assert {
+        r["pr_merchant"]: r["count"]
+        for r in scored.groupBy("pr_merchant").count().collect()
+    } == {"starbucks": 160}

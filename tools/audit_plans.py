@@ -32,10 +32,10 @@ from merchant_classification_spark.session import build_session  # noqa: E402
 # Arrow/numpy fingerprint kernel — the measured slow-path inversion
 # (4.8x over the interpreted HOF fold, bit-identical output; the native
 # kernel remains graded via the doc_winnow member of dedup_suite) — and
-# the PQ corpus encode inside ann_exact_suite (pq_encode_arrow — same
-# inversion, 0.31s vs 1.35s at sf0.1, bit-identity test-asserted; the
-# native encode stays the library default and is plan-audited in
-# tests/test_plans.py).
+# the PQ corpus encode inside ann_exact_suite (pq_encode — same
+# inversion, 0.31s vs 1.35s at sf0.1 over the interpreted HOF encode,
+# bit-identity to the oracle's fold test-asserted; the search side is
+# plan-audited as JVM-only in tests/test_plans.py).
 PYTHON_OK = {
     "multimodal_decode",
     "ml_train_score",

@@ -423,8 +423,8 @@ def main() -> None:
         "unrolled chain (identical association order, oracle unchanged)\n"
         "cut index search at 20k rows 11.1 s -> 1.67 s; plan-time-\n"
         "constant loops should unroll, HOF folds are for data-dependent\n"
-        "lengths. (2) pq_encode_arrow batches the ~1k-lambda-per-row\n"
-        "native encode in numpy (dimension-ordered left-assoc\n"
+        "lengths. (2) the Arrow pq_encode batches the ~1k-lambda-per-row\n"
+        "HOF encode in numpy (dimension-ordered left-assoc\n"
         "accumulation, bit-identity test-asserted): 0.32 s vs 1.53 s\n"
         "for the 20k-row corpus pass; with pq_fit -> pq_encode ->\n"
         "parquet -> pq_search the corpus pass is one-time and the codes\n"
