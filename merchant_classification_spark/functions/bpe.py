@@ -230,7 +230,7 @@ def bpe_segment(
     """
     if not word_freq:
         raise ValueError("word_freq must be non-empty (fit first)")
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions.literals import literal_table
 
     seg_rows = [(w, encode_word(w, merges)) for w in sorted(word_freq)]
     # bounded fitted dimension -> folded plan literal (no parallelize job)
@@ -289,7 +289,7 @@ def bpe_token_counts(
     """
     if not word_n_tokens:
         raise ValueError("word_n_tokens must be non-empty (fit first)")
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions.literals import literal_table
 
     # bounded fitted vocabulary -> folded plan literal (no parallelize job)
     vt = literal_table(

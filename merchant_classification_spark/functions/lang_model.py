@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from merchant_classification_spark.functions.literals import sql_lit
 from merchant_classification_spark.functions.portable_hash import md5_long60
 from merchant_classification_spark.functions.text_analysis import tokens
 
@@ -365,29 +366,14 @@ def lang_model_scores(
     # probe is an O(1) GetArrayItem + K GetStructField hops. Built as
     # ONE F.expr, not K·n_buckets F.lit py4j calls (~0.8 s of pure
     # driver round-trips at the graded 5×64 dial — measured round 11);
-    # sql_double_lit's repr round-trip keeps every weight bit-identical
-    # (functions/lookup.py, fuzz-asserted there).
-    from merchant_classification_spark.functions.lookup import (
-        sql_double_lit,
-    )
-
-    ws_lit = F.expr(
-        "array("
-        + ",".join(
-            "named_struct("
-            + ",".join(
-                f"'w{k}',{sql_double_lit(float(weights[k][j]))}"
-                for k in range(kk)
-            )
-            + ")"
-            for j in range(n_buckets)
-        )
-        + ")"
-    )
+    # sql_lit's repr round-trip keeps every weight bit-identical
+    # (functions/literals.py, fuzz-asserted in tests/test_literals.py).
+    w_ddl = ",".join(f"w{k}:double" for k in range(kk))
+    ws_lit = F.expr(sql_lit(list(zip(*weights)), f"array<struct<{w_ddl}>>"))
+    s_ddl = ",".join(f"s{k}:double" for k in range(kk))
+    zero = F.expr(sql_lit([0.0] * kk, f"struct<{s_ddl}>"))
 
     def folds(bs: Column) -> Column:
-        zero = F.struct(*[F.lit(0.0).alias(f"s{k}") for k in range(kk)])
-
         def step(a: Column, i: Column) -> Column:
             # buckets are 0-based (char_ngram_buckets); arrays 1-based
             w = F.element_at(ws_lit, i + F.lit(1))

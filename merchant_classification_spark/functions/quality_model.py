@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from merchant_classification_spark.functions.literals import sql_lit
 from merchant_classification_spark.functions.portable_hash import md5_long60
 from merchant_classification_spark.functions.text_analysis import (
     _dsir_features,
@@ -191,7 +192,7 @@ def quality_logit_col(
     n_buckets = len(weights)
     if n_buckets == 0:
         raise ValueError("weights must be non-empty")
-    lit = F.lit([float(x) for x in weights])
+    lit = F.expr(sql_lit(weights, "array<double>"))
     b = F.lit(float(bias))
 
     def one(fs):
@@ -227,7 +228,7 @@ def quality_keep_col(
     n_buckets = len(weights)
     if n_buckets == 0:
         raise ValueError("weights must be non-empty")
-    lit = F.lit([float(x) for x in weights])
+    lit = F.expr(sql_lit(weights, "array<double>"))
     b = F.lit(float(bias))
     thr = F.lit(float(min_logit))
 
@@ -264,7 +265,7 @@ def quality_logits(
     and are never kept.
 
     Scale shape: the model is an ``n_buckets`` double-literal array
-    (``F.lit(list)`` — ONE array literal, O(1) ``element_at``), so
+    (``sql_lit`` — ONE array literal, O(1) ``element_at``), so
     scoring is a single map-only codegen projection. The feature array
     (which embeds the tokenize regex) is BOUND ONCE per row via the
     one-element-array lambda + dedicated-select idiom: written naively,
@@ -277,7 +278,7 @@ def quality_logits(
     n_buckets = len(weights)
     if n_buckets == 0:
         raise ValueError("weights must be non-empty")
-    lit = F.lit([float(x) for x in weights])
+    lit = F.expr(sql_lit(weights, "array<double>"))
     b = F.lit(float(bias))
 
     def fold(fs):

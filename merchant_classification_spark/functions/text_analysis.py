@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from merchant_classification_spark.functions.literals import sql_lit
+
 # tiny per-language stopword sets for the n-gram/stopword-ratio heuristic;
 # deliberately small so the oracle SQL can inline them
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -47,7 +49,7 @@ def tokens(col: Column | str) -> Column:
 def tokens_sql(col_sql: str) -> str:
     """SQL-text twin of :func:`tokens` for plan-build-cost-critical
     callers that render their whole expression as ONE ``F.expr`` string
-    (the ``bucketed_lookup`` discipline — a py4j round trip per
+    (the ``functions/literals.py`` discipline — a py4j round trip per
     expression node costs ~1 ms on the driver; the SQL text parses in
     ~ms and resolves to the same evaluation semantics).
 
@@ -56,9 +58,7 @@ def tokens_sql(col_sql: str) -> str:
     as :func:`tokens`: coalesce→lower→regexp_replace→trim, empty guard,
     split on single space. Bit-parity with :func:`tokens` is
     fuzz-asserted in ``tests/test_retrieval_inverted.py``."""
-    from merchant_classification_spark.functions.lookup import sql_str_lit
-
-    pat = sql_str_lit(r"[^a-z0-9']+")
+    pat = sql_lit(r"[^a-z0-9']+", "string")
     cleaned = (
         f"trim(regexp_replace(lower(coalesce(CAST({col_sql} AS STRING), '')),"
         f" {pat}, ' '))"
@@ -93,7 +93,7 @@ def stopword_hits(
     multiplying the regex cost by the number of languages.
     """
     toks = tokens(col) if tokens_col is None else tokens_col
-    stopset = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
+    stopset = F.expr(sql_lit(LANG_STOPWORDS[lang], "array<string>"))
     return F.size(F.filter(toks, lambda t: F.array_contains(stopset, t)))
 
 
@@ -868,10 +868,10 @@ def dsir_scores(
     n_buckets = len(logratios)
     if n_buckets == 0:
         raise ValueError("logratios must be non-empty")
-    # F.lit(list) makes ONE array Literal; F.array(*lits) would be a
-    # CreateArray expression, rebuilt per element inside the transform
-    # lambda below
-    lit = F.lit([float(x) for x in logratios])
+    # one F.expr of sql_lit text: one py4j call (F.lit(list) is
+    # F.array(*lits), one call per bucket), constant-folded to ONE array
+    # Literal, so the transform lambda below never rebuilds it per element
+    lit = F.expr(sql_lit(logratios, "array<double>"))
 
     # bind the feature array ONCE per row (one-element-array lambda +
     # dedicated select): naively, (fold, size, keep) reference the

@@ -191,7 +191,7 @@ def unigram_segment(
         (w, viterbi_encode(w, piece_logprob, max_piece_len))
         for w in sorted(word_freq)
     ]
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions.literals import literal_table
 
     # bounded fitted dimension -> folded plan literal (no parallelize job)
     vt = literal_table(spark, seg_rows, "word string, segs array<string>")
@@ -236,7 +236,7 @@ def unigram_token_counts(
     """
     if not word_n_pieces:
         raise ValueError("word_n_pieces must be non-empty (fit first)")
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions.literals import literal_table
 
     # bounded fitted vocabulary -> folded plan literal (no parallelize job)
     vt = literal_table(

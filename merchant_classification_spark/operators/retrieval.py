@@ -24,6 +24,10 @@ import numbers
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from merchant_classification_spark.functions.literals import (
+    literal_table,
+    sql_lit,
+)
 from merchant_classification_spark.functions.text_analysis import tokens
 
 
@@ -38,8 +42,9 @@ def bm25_fit(
     Scale shape: ONE aggregate pass — the token array is bound once per
     row (the ``transform(array(tokens), …)`` binding idiom, see
     ``dedup.shingles``) into a struct carrying the doc length and a
-    ROLLED per-term flags array (``transform`` over the term literal —
-    O(1) py4j round trips regardless of |terms|; the unrolled one-
+    ROLLED per-term flags array (``transform`` over the term literal,
+    one ``F.expr`` of ``sql_lit`` text — one py4j call regardless of
+    |terms|, where ``F.lit(list)`` makes one per term; the unrolled one-
     ``array_contains``-column-per-term form cost ~0.6 s of pure driver
     expression construction at 27 terms, round 11), then a single
     scalar aggregate reduces to |terms| + 2 driver scalars (the
@@ -53,7 +58,7 @@ def bm25_fit(
         raise ValueError("query_terms must be non-empty")
     if len(set(query_terms)) != len(query_terms):
         raise ValueError("query_terms must be distinct")
-    terms_lit = F.lit(list(query_terms))
+    terms_lit = F.expr(sql_lit(query_terms, "array<string>"))
     stats = F.element_at(
         F.transform(
             F.array(tokens(text_col)),
@@ -297,9 +302,9 @@ def bm25_scores_multi(
     query's (idf, tf-index) literal arrays folded with ``aggregate``),
     not O(|queries|·|union terms|) unrolled expression nodes — and the
     WHOLE scoring expression is rendered as ONE SQL string
-    (``bucketed_lookup``'s discipline: the py4j/Column form of the same
-    HOF tree cost ~1.0 s per call at 8 queries and ~2.2 s at 24 in pure
-    driver round trips, measured; the SQL text parses in ~ms). The
+    (``functions/literals.py``'s discipline: the py4j/Column form of the
+    same HOF tree cost ~1.0 s per call at 8 queries and ~2.2 s at 24 in
+    pure driver round trips, measured; the SQL text parses in ~ms). The
     VALUES are unchanged bit-for-bit: element count/order, the
     ((idf·tf)·(k1+1))/(tf+norm) contribution shape, and the
     left-to-right 0.0-seeded fold are all identical IEEE operations in
@@ -312,10 +317,6 @@ def bm25_scores_multi(
     if avgdl <= 0:
         raise ValueError("avgdl must be positive")
     _check_qids(query_models)
-    from merchant_classification_spark.functions.lookup import (
-        sql_double_lit,
-        sql_str_lit,
-    )
     from merchant_classification_spark.functions.text_analysis import (
         tokens_sql,
     )
@@ -327,37 +328,30 @@ def bm25_scores_multi(
                 union_terms.append(term)
     t_ix = {term: i for i, term in enumerate(union_terms)}
 
-    terms_sql = (
-        "array(" + ",".join(sql_str_lit(t) for t in union_terms) + ")"
-    )
-    # norm = k1 * ((1 - b) + b * (dl / avgdl)) — doubles rendered with
-    # the repr round-trip (bit-exact, see sql_double_lit)
+    terms_sql = sql_lit(union_terms, "array<string>")
+
+    def dbl(x: float) -> str:
+        # bit-exact repr round trip (functions/literals.py)
+        return sql_lit(x, "double")
+
+    # norm = k1 * ((1 - b) + b * (dl / avgdl))
     norm_sql = (
-        f"{sql_double_lit(float(k1))} * ({sql_double_lit(1.0 - b)} + "
-        f"{sql_double_lit(float(b))} * (CAST(size(_t) AS DOUBLE) / "
-        f"{sql_double_lit(float(avgdl))}))"
+        f"{dbl(k1)} * ({dbl(1.0 - b)} + {dbl(b)} * "
+        f"(CAST(size(_t) AS DOUBLE) / {dbl(avgdl)}))"
     )
     # one tf cell per union term, in union order
     tfs_sql = (
         f"transform({terms_sql}, _tm -> "
         f"CAST(size(filter(_t, _x -> _x = _tm)) AS DOUBLE))"
     )
-    k1p1 = sql_double_lit(float(k1 + 1.0))
+    k1p1 = dbl(k1 + 1.0)
     per_query = []
     for qid, model in query_models:
         # per-term contributions in the query's term order:
         # ((idf · tf) · (k1+1)) / (tf + norm), then the left-to-right
         # fold seeded at 0.0 — identical IEEE adds in identical order
-        idfs = (
-            "array("
-            + ",".join(sql_double_lit(float(idf)) for _, idf in model)
-            + ")"
-        )
-        idxs = (
-            "array("
-            + ",".join(str(t_ix[term] + 1) for term, _ in model)
-            + ")"
-        )
+        idfs = sql_lit([idf for _, idf in model], "array<double>")
+        idxs = sql_lit([t_ix[term] + 1 for term, _ in model], "array<int>")
         contribs = (
             f"zip_with({idfs}, {idxs}, (_idf, _ix) -> "
             f"_idf * element_at(_b.tfs, CAST(_ix AS INT)) * {k1p1} / "
@@ -365,7 +359,7 @@ def bm25_scores_multi(
         )
         s = f"aggregate({contribs}, 0.0D, (_acc, _x) -> _acc + _x)"
         per_query.append(
-            f"named_struct('query_id', CAST({int(qid)} AS BIGINT), "
+            f"named_struct('query_id', {sql_lit(qid, 'bigint')}, "
             f"'bm25', {s})"
         )
     # bind (tfs, norm) once — every query's chain reads the same
@@ -491,7 +485,6 @@ def bm25_scores_inverted(
     if avgdl <= 0:
         raise ValueError("avgdl must be positive")
     _check_qids(query_models)
-    from merchant_classification_spark.functions.lookup import literal_table
 
     term_rows = []
     for qid, model in query_models:

@@ -14,10 +14,31 @@ the survey calls out (§3.1, §4.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.operators.relational import group_topk
+
+
+def _class_rate(
+    count: Column,
+    sample_size: int,
+    oversample_floor: int | None,
+    floor_bump: float,
+) -> Column:
+    """SA1 rate ``sample_size/count``; with ``oversample_floor`` (SA2) a
+    class whose expected yield falls under the floor gets
+    ``floor/count + floor_bump``. Both capped at 1.0 with ``least()``."""
+    rate = F.least(F.lit(1.0), F.lit(float(sample_size)) / count)
+    if oversample_floor is not None:
+        floor_rate = F.least(
+            F.lit(1.0),
+            F.lit(float(oversample_floor)) / count + F.lit(floor_bump),
+        )
+        rate = F.when(
+            count * rate < F.lit(float(oversample_floor)), floor_rate
+        ).otherwise(rate)
+    return rate
 
 
 def class_counts_fractions(
@@ -44,14 +65,9 @@ def class_counts_fractions(
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("count"))
     if min_count is not None:
         counts = counts.where(F.col("count") >= min_count)
-    rate = F.lit(sample_size) / F.col("count")
-    rate = F.when(rate > 1.0, 1.0).otherwise(rate)
-    if oversample_floor is not None:
-        floor_rate = F.lit(oversample_floor) / F.col("count") + F.lit(floor_bump)
-        rate = F.when(
-            F.col("count") * rate < oversample_floor,
-            F.when(floor_rate > 1.0, 1.0).otherwise(floor_rate),
-        ).otherwise(rate)
+    rate = _class_rate(
+        F.col("count"), sample_size, oversample_floor, floor_bump
+    )
     # driver-side by design (mirrors the reference; sampleBy needs a
     # literal fractions dict) — guard the cardinality so a runaway key
     # column fails loudly instead of OOMing the driver
@@ -144,15 +160,9 @@ def stratified_hash_sample(
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("_cnt"))
     if min_count is not None:
         counts = counts.where(F.col("_cnt") >= min_count)
-    rate = F.least(F.lit(1.0), F.lit(float(sample_size)) / F.col("_cnt"))
-    if oversample_floor is not None:
-        floor_rate = F.least(
-            F.lit(1.0),
-            F.lit(float(oversample_floor)) / F.col("_cnt") + F.lit(floor_bump),
-        )
-        rate = F.when(
-            F.col("_cnt") * rate < F.lit(float(oversample_floor)), floor_rate
-        ).otherwise(rate)
+    rate = _class_rate(
+        F.col("_cnt"), sample_size, oversample_floor, floor_bump
+    )
     rates = counts.select(F.col(key), rate.alias("_rate"))
     p = hash_percentile(id_cols, salt)
     out = (

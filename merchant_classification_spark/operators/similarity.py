@@ -20,56 +20,13 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from merchant_classification_spark.functions.literals import json_lit, sql_lit
 from merchant_classification_spark.functions.vectors import (
     cosine_similarity,
     squared_euclidean,
     to_double_array,
 )
 from merchant_classification_spark.operators.relational import group_topk
-
-
-def _folded_double_lit(nested, depth: int) -> Column:
-    """ONE constant-folded plan node for a (nested) double-array
-    constant: the values ride as a single JSON string literal decoded
-    by ``from_json``, which Spark's optimizer constant-folds to the
-    identical array Literal before execution.
-
-    Why not the parsed ``array(array(0.1D, …))`` SQL text (the round-9
-    form): eager Catalyst ANALYSIS walks every literal node of a fresh
-    Dataset, so each ``df.select`` embedding a 4096-double parsed array
-    cost ~0.30 s of pure driver-side analysis PER CALL — the dominant
-    build cost of the ANN members (round-11 §13 measured it; round-12
-    probe: parse 2 ms, select-with-parsed-literal 295 ms,
-    select-with-from_json 91 ms, execution identical at 0.42 s, outputs
-    bit-equal).
-
-    Bit-exactness: ``json.dumps`` emits the shortest round-trip decimal
-    (same digits as ``repr``) and Jackson's parseDouble is correctly
-    rounded like the SQL parser's — pinned bitwise in
-    ``tests/test_similarity.py``. Non-finite doubles have no JSON
-    rendering (and the parsed form cannot spell them either), so they
-    raise ``ValueError``."""
-    import json
-
-    def _flat(x):
-        if isinstance(x, (list, tuple)):
-            for y in x:
-                yield from _flat(y)
-        else:
-            yield x
-
-    if not all(math.isfinite(v) for v in _flat(nested)):
-        raise ValueError("folded constant has non-finite values")
-    schema = "double"
-    for _ in range(depth):
-        schema = f"array<{schema}>"
-    # FAILFAST: a constant that does not match the schema errors when
-    # the optimizer folds it, instead of folding to a null
-    return F.from_json(
-        F.lit(json.dumps(nested, allow_nan=False)),
-        schema,
-        options={"mode": "FAILFAST"},
-    )
 
 
 def brute_force_topk(
@@ -142,9 +99,10 @@ def hyperplane_signature(
     # per-element form costs ~0.25 s of py4j round-trips PER CALL at
     # bits=8/dim=64 (multi-table callers build 16 signatures -> seconds
     # of driver time before any work). Round 12: the JSON-string form
-    # (see _folded_double_lit) also cuts the per-Dataset ANALYSIS cost
-    # the parsed-array SQL text paid; values bit-identical.
-    planes_lit = _folded_double_lit(planes, 2)
+    # (json_lit, functions/literals.py) also cuts the per-Dataset
+    # ANALYSIS cost the parsed-array SQL text paid; values bit-identical.
+    planes_lit = json_lit(planes, "array<array<double>>")
+    weights = F.expr(sql_lit([1 << i for i in range(bits)], "array<bigint>"))
     # bind v once (one-element-array trick) so the tokenizing/cast work is
     # not re-inlined into every lambda use site
     def sig_from(vb: Column) -> Column:
@@ -156,7 +114,6 @@ def hyperplane_signature(
                 lambda acc, x: acc + x,
             ),
         )
-        weights = F.array(*[F.lit(1 << i).cast("long") for i in range(bits)])
         return F.aggregate(
             F.zip_with(
                 dots,
@@ -178,7 +135,7 @@ def _multi_table_signatures(
     planes, same bit weights) but built as ONE folded literal walked by
     ONE nested-transform expression, so driver-side plan construction is
     O(1) py4j calls instead of O(tables) — and (round 12) the literal
-    rides as a from_json constant (``_folded_double_lit``), so each
+    rides as a from_json constant (``json_lit``), so each
     Dataset op embedding it analyzes ONE string node instead of 4096
     literal nodes (~0.30 s of eager analysis per select at the ann_lsh
     dial)."""
@@ -186,10 +143,8 @@ def _multi_table_signatures(
     all_planes = [
         _random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(tables)
     ]
-    planes_lit = _folded_double_lit(all_planes, 3)
-    weights = F.expr(
-        "array(" + ",".join(f"{1 << i}L" for i in range(bits)) + ")"
-    )
+    planes_lit = json_lit(all_planes, "array<array<array<double>>>")
+    weights = F.expr(sql_lit([1 << i for i in range(bits)], "array<bigint>"))
 
     def sigs_from(vb: Column) -> Column:
         return F.transform(
@@ -314,13 +269,13 @@ def centroid_sq_dists(
     order the SQL oracle mirrors, so the doubles match bit-for-bit.
 
     Centroids are one folded literal array<array<double>>
-    (``_folded_double_lit``: one string node to analyze, not k·dim
+    (``json_lit``: one string node to analyze, not k·dim
     literal nodes) walked by a single reused lambda (same codegen shape as
     :func:`hyperplane_signature` — O(1) lambdas regardless of k·dim,
     where unrolled per-centroid expressions were seconds of Janino).
     """
     v = to_double_array(vec)
-    cents_lit = _folded_double_lit(centroids, 2)
+    cents_lit = json_lit(centroids, "array<array<double>>")
 
     def dl(vb: Column) -> Column:
         return F.transform(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from merchant_classification_spark.functions.literals import sql_lit
+
 _SALT = "_salt__"
 
 
@@ -42,6 +44,6 @@ def salted_join(
             "outer would need the salt on the other side"
         )
     salted_left = left.withColumn(_SALT, (F.rand(seed) * salt).cast("int"))
-    salts = F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+    salts = F.explode(F.expr(sql_lit(range(salt), "array<int>")))
     salted_right = right.withColumn(_SALT, salts)
     return salted_left.join(salted_right, keys + [_SALT], how).drop(_SALT)

@@ -353,17 +353,13 @@ def test_remove_boilerplate_intra_doc_repeats_dont_count(spark):
     assert {r.n_removed for r in got.collect()} == {0}
 
 
-def test_remove_boilerplate_hashed_matches_raw(tables):
+def test_remove_boilerplate_on_documents_table(tables):
+    # exact output is pinned by test_property_fuzz's naive replay; on the
+    # documents table some spans must repeat across >= 2 documents
     from merchant_classification_spark.operators.dedup import remove_boilerplate
 
     docs = tables["documents"]
-    a = remove_boilerplate(
-        docs, "doc_id", "text", span_tokens=3, min_docs=2, hashed=True
-    )
-    b = remove_boilerplate(
-        docs, "doc_id", "text", span_tokens=3, min_docs=2, hashed=False
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    a = remove_boilerplate(docs, "doc_id", "text", span_tokens=3, min_docs=2)
     assert a.where(F.col("n_removed") > 0).count() > 0
 
 

@@ -1,6 +1,7 @@
 """Bucketed literal lookup (functions/lookup.py): crc32 Python↔JVM
 parity, probe correctness vs a plain dict, and the constant-folded
-nested-literal plan shape."""
+nested-literal plan shape; plus ``literal_table``
+(functions/literals.py) against its ``createDataFrame`` twin."""
 
 import zlib
 
@@ -85,69 +86,13 @@ def test_nested_literals_constant_fold(spark):
     assert "array(array(" not in plan  # CreateArray(CreateArray(...)) gone
 
 
-def test_sql_literal_renderers_match_f_lit_bitwise(spark):
-    """Round 11 builds the nested table literals from SQL text (ONE
-    F.expr instead of one py4j call per element — ~300x cheaper to
-    construct). The renderers must reproduce F.lit exactly: strings
-    byte-for-byte through the non-legacy lexer's escaping, doubles
-    bit-for-bit through the repr round-trip."""
-    import struct as st
-
-    from pyspark.sql import functions as F
-
-    from merchant_classification_spark.functions.lookup import (
-        sql_double_lit,
-        sql_str_lit,
-    )
-
-    keys = [
-        "a'b",
-        "back\\slash",
-        "unié中",
-        "",
-        "tab\tnl\nquote''",
-        "plain_token",
-        "\\'\\'",
-    ]
-    vals = [
-        0.1,
-        -0.0,
-        5e-324,              # min subnormal
-        1.7976931348623157e308,  # max double
-        3.141592653589793,
-        -2.5e17,
-        float("inf"),
-        float("-inf"),
-        float("nan"),
-        -19.998877665544332,
-    ]
-    row = (
-        spark.range(1)
-        .select(
-            F.array(*[F.lit(k) for k in keys]).alias("ok"),
-            F.expr(
-                "array(" + ",".join(sql_str_lit(k) for k in keys) + ")"
-            ).alias("nk"),
-            F.array(*[F.lit(v) for v in vals]).alias("ov"),
-            F.expr(
-                "array(" + ",".join(sql_double_lit(v) for v in vals) + ")"
-            ).alias("nv"),
-        )
-        .collect()[0]
-    )
-    assert row["ok"] == row["nk"]
-    pb = [st.pack(">d", x) for x in row["ov"]]
-    nb = [st.pack(">d", x) for x in row["nv"]]
-    assert pb == nb
-
-
 def test_literal_table_matches_create_dataframe(spark):
     """literal_table must be an exact drop-in for createDataFrame on
     every supported column type: same column names, same dtypes, same
     values (doubles compared bitwise), across adversarial strings."""
     import struct as st
 
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions.literals import literal_table
 
     rows = [
         ("plain", 1, 7, 0.1, ["a", "b"]),
@@ -180,10 +125,10 @@ def test_literal_table_matches_create_dataframe(spark):
 def test_literal_table_large_fallback(spark, monkeypatch):
     """Above the row cap the helper must take the createDataFrame path
     (the literal form is for BOUNDED fitted tables only)."""
-    from merchant_classification_spark.functions import lookup
-    from merchant_classification_spark.functions.lookup import literal_table
+    from merchant_classification_spark.functions import literals
+    from merchant_classification_spark.functions.literals import literal_table
 
-    monkeypatch.setattr(lookup, "_LITERAL_TABLE_MAX_ROWS", 3)
+    monkeypatch.setattr(literals, "_LITERAL_TABLE_MAX_ROWS", 3)
     rows = [(f"k{i}", float(i)) for i in range(5)]
     df = literal_table(spark, rows, "k string, v double")
     # the fallback is an RDD-backed local relation, not a folded literal

@@ -78,7 +78,7 @@ def test_inverted_plan_constant_in_query_count(spark):
     must not grow with |queries| (the literal form compiles per-query
     scoring branches). Since round 11 the bounded (term, query, idf)
     dimension rides as ONE folded array-of-structs Literal
-    (functions/lookup.py literal_table) — DATA inside that single
+    (functions/literals.py literal_table) — DATA inside that single
     literal is allowed to grow (it is a constant object, not generated
     code, and literal_table caps it with a createDataFrame fallback);
     per-query EXPRESSION growth is not. Canonicalizing literal payloads

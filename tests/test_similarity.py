@@ -1,6 +1,5 @@
 """Similarity-search tests: brute-force exactness vs numpy, LSH recall."""
 
-import math
 
 import numpy as np
 import pytest
@@ -315,95 +314,3 @@ def test_hard_negative_topk_vs_numpy(spark):
         # hardest negative first, monotone down the ranks
         for a, b in zip(got, got[1:]):
             assert a[3] >= b[3]
-
-
-# --- round 12: folded JSON double literals ---------------------------------
-
-
-def test_folded_double_lit_bit_identical_to_parsed_array(spark):
-    """_folded_double_lit (from_json string constant) must yield the
-    IDENTICAL doubles, bit for bit, as the parsed-array SQL form it
-    replaced — adversarial values: subnormals, extremes, -0.0,
-    shortest-repr torture cases, integral doubles."""
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from merchant_classification_spark.operators.similarity import (
-        _folded_double_lit,
-    )
-
-    vals = [
-        [5e-324, -5e-324, 1.7976931348623157e308, -1.7976931348623157e308],
-        [0.0, -0.0, 1.0, -1.0],
-        [0.1, 2.675, 1 / 3, math.pi],
-        [6.02e23, 1e-308, 123456789.123456789, 2.0 ** -1022],
-    ]
-    parsed = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x!r}D" for x in row) + ")" for row in vals
-        )
-        + ")"
-    )
-    row = (
-        spark.range(1)
-        .select(
-            parsed.alias("a"), _folded_double_lit(vals, 2).alias("b")
-        )
-        .first()
-    )
-    bits = lambda x: struct.pack("<d", x)  # noqa: E731
-    for ra, rb in zip(row["a"], row["b"]):
-        for xa, xb in zip(ra, rb):
-            assert bits(xa) == bits(xb), (xa, xb)
-    assert [len(r) for r in row["a"]] == [len(r) for r in row["b"]]
-
-
-def test_folded_double_lit_nonfinite_raises(spark):
-    """Non-finite doubles have no JSON rendering, and the parsed SQL form
-    cannot spell them either (``nanD`` is an unresolved column): the
-    helper raises a named error when the plan is built."""
-    from merchant_classification_spark.operators.similarity import (
-        _folded_double_lit,
-        centroid_sq_dists,
-    )
-
-    fin = spark.range(1).select(_folded_double_lit([[1.0, 2.0]], 2).alias("x"))
-    assert "from_json" in fin._jdf.queryExecution().analyzed().toString()
-
-    for bad in (float("nan"), float("inf"), float("-inf")):
-        with pytest.raises(ValueError, match="non-finite"):
-            _folded_double_lit([[1.0, bad]], 2)
-    # NaN centroids (a k-means fit over NaN vectors) reach it this way
-    with pytest.raises(ValueError, match="non-finite"):
-        centroid_sq_dists("v", [[0.0, float("nan")]])
-
-
-def test_folded_double_lit_malformed_constant_raises(spark):
-    """A constant whose nesting does not match `depth` must fail when the
-    plan is optimized, not fold to a null array (from_json's default
-    PERMISSIVE mode would)."""
-    from py4j.protocol import Py4JJavaError
-
-    from merchant_classification_spark.operators.similarity import (
-        _folded_double_lit,
-    )
-
-    for nested, depth in (([[1.0, 2.0]], 1), ([1.0, 2.0], 2)):
-        df = spark.range(1).select(_folded_double_lit(nested, depth).alias("x"))
-        with pytest.raises(Py4JJavaError, match="MALFORMED_RECORD_IN_PARSING"):
-            df.collect()
-
-
-def test_folded_double_lit_constant_folds_in_optimized_plan(spark):
-    """The whole point: the optimizer must fold the from_json call to a
-    plain array Literal so execution never parses JSON per row."""
-    from merchant_classification_spark.operators.similarity import (
-        _folded_double_lit,
-    )
-
-    df = spark.range(1).select(_folded_double_lit([[1.5, 2.5]], 2).alias("x"))
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "from_json" not in opt.lower().replace("jsontostructs", "from_json")
-    assert "1.5" in opt and "2.5" in opt

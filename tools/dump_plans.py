@@ -4,14 +4,19 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> [member ...]
 
 Writes <out_dir>/<member>_<suffix>.txt for each named member (default:
 every BRANCH_QUERIES member). The plan is the formatted physical plan
-exactly as `df.explain("formatted")` prints it — the evidence for
-plan-shape claims in OPTIMIZATION_*.md. Run it at the parent and at the
-change with two suffixes (e.g. `before`, `after`) and diff the pairs.
+as `df.explain("formatted")` prints it — the evidence for plan-shape
+claims in OPTIMIZATION_*.md — with the run-dependent counters masked:
+expression ids (`#1804L` -> `#N`), PySpark lambda-variable suffixes
+(`x_3` -> `x_N`) and `plan_id=N`. All members share one session, so
+these counters shift with whatever ran before; masked, two runs of the
+same tree write identical files. Run it at the parent and at the change
+with two suffixes (e.g. `before`, `after`) and diff the pairs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -19,6 +24,18 @@ sys.path.insert(0, ".")
 import __spark_entry__ as entry_mod  # noqa: E402
 from merchant_classification_spark.plans.explain import explain_str  # noqa: E402
 from merchant_classification_spark.session import build_session  # noqa: E402
+
+_MASKS = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+)
+
+
+def mask_plan(plan: str) -> str:
+    for pat, repl in _MASKS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -35,7 +52,7 @@ def main() -> None:
             plan = f"ERROR building plan: {type(e).__name__}: {e}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan.rstrip() + "\n")
+            f.write(mask_plan(plan).rstrip() + "\n")
         print("wrote", path)
 
 
