@@ -27,8 +27,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from merchant_classification_spark.functions.literals import sql_lit
-
 
 def word_ngrams(text_col: Column | str, n: int) -> Column:
     """Distinct space-joined word n-grams (array<string>) of a text column.
@@ -53,72 +51,6 @@ def word_ngrams(text_col: Column | str, n: int) -> Column:
     return F.element_at(F.transform(F.array(F.split(c, " ")), grams), 1)
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, m_bits: int, k: int
-) -> list[int]:
-    """Bloom-filter bitmap of a key column, as ``m_bits/64`` signed longs.
-
-    Bit positions use Kirsch-Mitzenmacher double hashing — ``((xxhash64
-    & (m−1)) + i·(murmur3 & (m−1))) & (m−1)`` for i in [0, k) — both
-    hashes JVM-native, so build AND probe stay in whole-stage codegen.
-    Both hashes are masked BEFORE the add: the raw ``xxhash64 + i·h2``
-    form can overflow bigint (ANSI mode makes that a job-killing
-    ARITHMETIC_OVERFLOW at ~1e12-gram scale), while masking first bounds
-    every operand by ``m`` and low-bit arithmetic makes the masked form
-    bit-identical to the wrapping sum's low bits. The bitmap is built
-    DISTRIBUTED: explode the k positions, OR bits per 64-bit word in one
-    ``bit_or`` aggregate, and collect at most ``m_bits/64`` (word, bits)
-    rows — the driver never sees the keys themselves, so the collect is
-    bounded by the filter size regardless of key count.
-
-    ``m_bits`` must be a power of two ≥ 64 (the mask trick needs it).
-    """
-    if m_bits < 64 or m_bits & (m_bits - 1):
-        raise ValueError("m_bits must be a power of two >= 64")
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    rows = (
-        keys.select(
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {k - 1}), i -> "
-                    f"((xxhash64({key_col}) & {m_bits - 1}) + "
-                    f"i * (cast(hash({key_col}) as bigint) & {m_bits - 1}))"
-                    f" & {m_bits - 1})"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.shiftright(F.col("p"), 6).alias("w"))
-        .agg(
-            F.expr(
-                "bit_or(shiftleft(cast(1 as bigint), cast(p & 63 as int)))"
-            ).alias("bits")
-        )
-        .collect()
-    )
-    words = [0] * (m_bits // 64)
-    for r in rows:
-        words[int(r["w"])] = int(r["bits"])
-    return words
-
-
-def _bloom_might_contain(m_bits: int, k: int) -> str:
-    """SQL predicate testing columns (h1, h2) against the ``_bf`` bitmap
-    column: every one of the k double-hashed bit positions is set.
-    Hashes masked before the add — must stay bit-identical to
-    :func:`bloom_bitmap`'s build expression (overflow-free under ANSI)."""
-    pos = f"((h1 & {m_bits - 1}) + i * (h2 & {m_bits - 1})) & {m_bits - 1}"
-    return (
-        f"forall(sequence(0, {k - 1}), i -> "
-        f"(shiftright(element_at(_bf, cast(shiftright({pos}, 6) as int) + 1), "
-        f"cast(({pos}) & 63 as int)) & 1) = 1)"
-    )
-
-
-def _pow2_ceil(x: int) -> int:
-    return 1 << max(6, (x - 1).bit_length())
-
-
 def ngram_overlap_report(
     train: DataFrame,
     eval_df: DataFrame,
@@ -127,9 +59,6 @@ def ngram_overlap_report(
     n: int = 5,
     broadcast_eval: bool = True,
     hash_grams: bool = False,
-    bloom_prefilter: bool = False,
-    bloom_bits_per_gram: int = 10,
-    bloom_k: int = 4,
 ) -> DataFrame:
     """Per-training-document eval-overlap counts.
 
@@ -143,19 +72,6 @@ def ngram_overlap_report(
     string — 8-byte shuffle keys instead of ~6-word strings; the
     standard trade at corpus scale (a 64-bit collision flags one extra
     doc, it never unflags one).
-
-    ``bloom_prefilter=True`` is the 100 TB broadcast-bytes tier: the
-    eval grams are folded into a Bloom bitmap (~``bloom_bits_per_gram``
-    bits per gram — ~1.25 bytes vs ~8 hashed / ~40 raw per gram) that
-    rides the train-side scan as ONE array literal, and only grams the
-    filter admits reach the exact join. Bloom filters have zero false
-    negatives, so with the exact join still verifying survivors the
-    output is row-identical to the plain path (asserted in
-    `tests/test_decontaminate.py`); false-positive survivors are rare
-    (~0.8% at 10 bits/gram), so pair ``bloom_prefilter=True`` with
-    ``broadcast_eval=False`` at scale — the survivor set is small
-    enough for a shuffle join and the full gram set is never
-    broadcast at all.
     """
     key = (
         (lambda c: F.xxhash64(c)) if hash_grams else (lambda c: c)
@@ -169,19 +85,6 @@ def ngram_overlap_report(
         .select(key(F.col("gram")).alias("gram"))
         .distinct()
     )
-    if bloom_prefilter:
-        # size from the exact distinct-gram count (one bounded job —
-        # the same pass a bloom_filter_agg would make anyway)
-        n_e = e_grams.count()
-        m_bits = _pow2_ceil(max(64, n_e * bloom_bits_per_gram))
-        words = bloom_bitmap(e_grams, "gram", m_bits, bloom_k)
-        t_grams = (
-            t_grams.withColumn("h1", F.xxhash64("gram"))
-            .withColumn("h2", F.hash("gram").cast("bigint"))
-            .withColumn("_bf", F.expr(sql_lit(words, "array<bigint>")))
-            .where(F.expr(_bloom_might_contain(m_bits, bloom_k)))
-            .select(id_col, "gram")
-        )
     if broadcast_eval:
         e_grams = F.broadcast(e_grams)
     return (

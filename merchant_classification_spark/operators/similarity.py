@@ -1274,7 +1274,7 @@ def cluster_balanced_sample(
 # batch_id-partitioned parquet layout so NEW vectors encode and land as
 # their own partition — no full-corpus re-encode, mirroring the
 # streaming near-dup store's incremental discipline
-# (streaming/neardup.py incremental_neardup). Writes are per-partition
+# (streaming/neardup.py neardup_ingest_batch). Writes are per-partition
 # OVERWRITE, so a replayed append (the at-least-once foreachBatch /
 # retry hazard) rewrites its own directory instead of duplicating rows.
 # ---------------------------------------------------------------------------

@@ -58,16 +58,10 @@ def split_scan(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     drown in ambient drift): the 20 kept sites measured 0.36-0.90×,
     the 24 losers (explode→broadcast-join→agg scorers, iterative
     rep-assign/LR, prefix-sum packers) regressed 1.1-1.8× and stay
-    unsplit — numbers in OPTIMIZATION_r11.md. defaultParallelism
-    partitions (A/B-validated; 2× was no better); override with
-    $SPARK_GRAFT_SCAN_SPLIT (0 disables globally).
+    unsplit — numbers in OPTIMIZATION_r11.md. ``parallelism`` defaults
+    to the session's defaultParallelism (A/B-validated; 2× was no
+    better).
     """
-    env = os.environ.get("SPARK_GRAFT_SCAN_SPLIT")
-    if env is not None:
-        n = int(env)
-        if n <= 0:
-            return df
-        return df.repartition(n)
     if parallelism is None:
         parallelism = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(parallelism)

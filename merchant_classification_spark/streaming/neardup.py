@@ -76,8 +76,25 @@ def neardup_ingest_batch(
     Returns ``(accepted, dupes)`` — accepted (doc_id) rows and the
     (doc_id, matched_id, jaccard_sim, batch_id) verdicts — already
     materialized (the stores are appended before returning), so batch
-    callers (:func:`incremental_neardup`) can read them without
-    re-running the joins."""
+    callers can read them without re-running the joins.
+
+    Called directly it is the batch backfill against the persisted
+    corpus index, with the same store contract as
+    :func:`start_neardup_ingest`, so re-running dedup over a grown corpus
+    never recomputes the corpus side: the existing index contributes a
+    parquet scan of its (band, band_hash) rows into the candidate join
+    plus (shh) rows for the Jaccard verify of actual candidates — no
+    re-shingling, no re-signing, no corpus×corpus stage. Survivors
+    append to the index, keeping it canonical for the next shard
+    (streaming and batch shards interleave freely).
+
+    Equivalence contract (test-asserted): with shard ids greater than
+    every indexed id (the natural append-only id discipline), the
+    admitted set equals re-running ``minhash_dedup_pairs`` +
+    drop-greatest over (indexed corpus ∪ shard). Greater-id shards make
+    the union rerun's drop-greatest always drop the shard side of a
+    cross pair, which is the only resolution an incremental path can
+    implement (the corpus is already admitted)."""
     spark = batch_df.sparkSession
     rows_per_band = num_hashes // bands
 
@@ -150,51 +167,6 @@ def neardup_ingest_batch(
     accepted.select("doc_id", "shh").write.mode("append").parquet(docs_path)
     dupes.write.mode("append").parquet(_store(store_path, _DUPES_DIR))
     return accepted.select("doc_id"), dupes
-
-
-def incremental_neardup(
-    df: DataFrame,
-    store_path: str,
-    batch_id: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_size: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """Batch backfill against the persisted corpus index — the batch
-    twin of :func:`start_neardup_ingest` with the SAME store contract,
-    so re-running dedup over a grown corpus never recomputes the corpus
-    side: the existing index contributes a parquet scan of its
-    (band, band_hash) rows into the candidate join plus (shh) rows for
-    the Jaccard verify of actual candidates — no re-shingling, no
-    re-signing, no corpus×corpus stage. New-shard survivors append to
-    the index, keeping it canonical for the next shard (streaming and
-    batch shards interleave freely).
-
-    Equivalence contract (test-asserted): with shard ids greater than
-    every indexed id (the natural append-only id discipline), the
-    admitted set equals re-running ``minhash_dedup_pairs`` +
-    drop-greatest over (indexed corpus ∪ shard). Greater-id shards make
-    the union rerun's drop-greatest always drop the shard side of a
-    cross pair, which is the only resolution an incremental path can
-    implement (the corpus is already admitted).
-
-    Returns ``(admitted, dupes)``: admitted (doc_id) and
-    (doc_id, matched_id, jaccard_sim, batch_id).
-    """
-    return neardup_ingest_batch(
-        df,
-        batch_id,
-        store_path,
-        id_col=id_col,
-        text_col=text_col,
-        threshold=threshold,
-        shingle_size=shingle_size,
-        num_hashes=num_hashes,
-        bands=bands,
-    )
 
 
 def start_neardup_ingest(

@@ -1,6 +1,8 @@
-"""Regression-gate decision rule (tools/bench_compare.py compare())."""
+"""Regression-gate decision rule (tools/bench_compare.py compare()) and
+bench.py's Spark-free helpers (floor_probe, time_warm)."""
 
 import importlib.util
+import json
 import os
 
 
@@ -143,3 +145,131 @@ def test_headline_line_with_per_query_map_fits_tail_capture():
         separators=(",", ":"),
     )
     assert len(line) < 1900, len(line)
+
+
+def _probe_lines(bench, capsys, draws, floor=5.0, best=None):
+    it = iter(draws)
+
+    def measure():
+        v = next(it)
+        if isinstance(v, Exception):
+            raise v
+        return v
+
+    got = bench.floor_probe("m", "u", measure, floor, best=best)
+    return got, [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+
+
+def test_floor_probe_pass_prints_one_line(capsys):
+    bench = _load_bench()
+    got, lines = _probe_lines(bench, capsys, [10.0])
+    assert got == (10.0, False)
+    assert lines == [
+        {"metric": "m", "value": 10.0, "unit": "u", "floor": 5.0,
+         "floor_violated": False}
+    ]
+    assert list(lines[0]) == ["metric", "value", "unit", "floor", "floor_violated"]
+
+
+def test_floor_probe_breach_retries_once_and_keeps_the_max(capsys):
+    bench = _load_bench()
+    got, lines = _probe_lines(bench, capsys, [3.0, 8.0])
+    assert got == (8.0, False)
+    assert [ln["value"] for ln in lines] == [8.0]
+
+
+def test_floor_probe_breach_on_both_tries_then_late_retry(capsys):
+    bench = _load_bench()
+    got, lines = _probe_lines(bench, capsys, [3.0, 4.0])
+    assert got == (4.0, True)
+    assert lines[0]["floor_violated"] is True and "late_retry" not in lines[0]
+    # the late retry measures once and keeps the better draw
+    got, lines = _probe_lines(bench, capsys, [2.0], best=4.0)
+    assert got == (4.0, True)
+    assert lines == [
+        {"metric": "m", "value": 4.0, "unit": "u", "floor": 5.0,
+         "floor_violated": True, "late_retry": True}
+    ]
+
+
+def test_floor_probe_without_floor_and_on_error(capsys):
+    bench = _load_bench()
+    got, lines = _probe_lines(bench, capsys, [1.0], floor=None)
+    assert got == (1.0, False)
+    assert lines == [{"metric": "m", "value": 1.0, "unit": "u"}]
+    got, lines = _probe_lines(bench, capsys, [RuntimeError("boom")])
+    assert got == (None, False)
+    assert lines == [{"metric": "m", "error": "boom"}]
+    # a retry that raises keeps the first draw
+    got, lines = _probe_lines(bench, capsys, [3.0, RuntimeError("boom")])
+    assert got == (3.0, False)
+    assert lines == [{"metric": "m", "error": "boom"}]
+    # a late retry that raises keeps the earlier value and the breach
+    got, lines = _probe_lines(bench, capsys, [RuntimeError("boom")], best=4.0)
+    assert got == (4.0, True)
+    assert lines == [{"metric": "m", "error": "boom"}]
+
+
+def test_time_warm_times_every_pass_but_the_warm_up(monkeypatch):
+    """One untimed warm-up pass, then `reps` timed (build_s, exec_s)
+    passes on a fake clock, the session released after every pass."""
+    import types
+
+    bench = _load_bench()
+    now = [0.0]
+    events = []
+    monkeypatch.setattr(
+        bench, "time", types.SimpleNamespace(perf_counter=lambda: now[0])
+    )
+
+    class Plan:
+        """Stands in for a DataFrame: plan.write.mode().format().save()."""
+
+        def __init__(self, n):
+            self.n = n
+            self.write = self
+
+        def mode(self, mode):
+            assert mode == "overwrite"
+            return self
+
+        def format(self, fmt):
+            assert fmt == "noop"
+            return self
+
+        def save(self):
+            events.append(f"exec{self.n}")
+            now[0] += 10.0 * self.n
+
+    built = []
+
+    def build():
+        n = len(built)
+        built.append(n)
+        events.append(f"build{n}")
+        now[0] += n
+        return Plan(n)
+
+    session = types.SimpleNamespace(
+        catalog=types.SimpleNamespace(
+            clearCache=lambda: events.append("clear")
+        ),
+        sparkContext=types.SimpleNamespace(
+            _jvm=types.SimpleNamespace(
+                System=types.SimpleNamespace(gc=lambda: events.append("gc"))
+            )
+        ),
+    )
+    passes = bench.time_warm(session, build, 3)
+    # build 0 is the warm-up and is not returned
+    assert passes == [(1.0, 10.0), (2.0, 20.0), (3.0, 30.0)]
+    assert events == [
+        e for n in range(4) for e in (f"build{n}", f"exec{n}", "clear", "gc")
+    ]
+    events.clear()
+    built.clear()
+    assert bench.time_warm(session, build, 2, warmup=False) == [
+        (0.0, 0.0),
+        (1.0, 10.0),
+    ]
+    assert events.count("clear") == events.count("gc") == 2

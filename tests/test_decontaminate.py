@@ -147,119 +147,3 @@ def test_remove_contaminated_spans_no_eval_overlap(spark):
     ).collect()
     assert len(got) == 1 and got[0].fragment == "a b c d e"
     assert got[0].n_frag_tokens == 5 and got[0].frag_id == 1
-
-
-def test_bloom_bitmap_membership_exhaustive(spark):
-    from merchant_classification_spark.operators.decontaminate import (
-        bloom_bitmap,
-        _bloom_might_contain,
-    )
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], ["gram"])
-    words = bloom_bitmap(keys, "gram", m_bits=1024, k=4)
-    assert len(words) == 1024 // 64
-    # zero false negatives: every inserted key passes the probe
-    probe = (
-        keys.withColumn("h1", F.xxhash64("gram"))
-        .withColumn("h2", F.hash("gram").cast("bigint"))
-        .withColumn("_bf", F.lit(words).cast("array<bigint>"))
-        .where(F.expr(_bloom_might_contain(1024, 4)))
-    )
-    assert probe.count() == 50
-    # and at 1024 bits / 50 keys almost every non-member is rejected
-    other = spark.createDataFrame([(f"z{i}",) for i in range(200)], ["gram"])
-    fp = (
-        other.withColumn("h1", F.xxhash64("gram"))
-        .withColumn("h2", F.hash("gram").cast("bigint"))
-        .withColumn("_bf", F.lit(words).cast("array<bigint>"))
-        .where(F.expr(_bloom_might_contain(1024, 4)))
-        .count()
-    )
-    assert fp < 20
-
-
-def test_bloom_bitmap_validation(spark):
-    from merchant_classification_spark.operators.decontaminate import bloom_bitmap
-
-    keys = spark.createDataFrame([("a",)], ["gram"])
-    with pytest.raises(ValueError):
-        bloom_bitmap(keys, "gram", m_bits=100, k=4)  # not a power of two
-    with pytest.raises(ValueError):
-        bloom_bitmap(keys, "gram", m_bits=1024, k=0)
-
-
-@pytest.mark.parametrize("hash_grams", [False, True])
-def test_bloom_prefilter_row_identical(spark, tables, hash_grams):
-    # the done-criterion: bloom-prefiltered report == plain report on
-    # real data, for both gram key representations, with the exact join
-    # NOT broadcast (the scale configuration the prefilter exists for)
-    docs = tables["documents"]
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = docs.where(F.col("doc_id") % 17 != 0)
-    plain = ngram_overlap_report(
-        tr, ev, "doc_id", "text", n=3, hash_grams=hash_grams
-    )
-    bloom = ngram_overlap_report(
-        tr,
-        ev,
-        "doc_id",
-        "text",
-        n=3,
-        hash_grams=hash_grams,
-        bloom_prefilter=True,
-        broadcast_eval=False,
-    )
-    a = sorted((r["doc_id"], r["n_overlap"]) for r in plain.collect())
-    b = sorted((r["doc_id"], r["n_overlap"]) for r in bloom.collect())
-    assert a == b
-    assert len(a) > 0  # the fixture actually exercises overlap
-
-
-def test_bloom_prefilter_plan_shape(spark, tables):
-    # the bloom predicate must run BEFORE the exact join (a Filter on
-    # the train side), and no Python stage may appear anywhere
-    docs = tables["documents"]
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = docs.where(F.col("doc_id") % 17 != 0)
-    df = ngram_overlap_report(
-        tr, ev, "doc_id", "text", n=3,
-        bloom_prefilter=True, broadcast_eval=False,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "forall" in plan or "shiftright" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the predicate sits under the join: find the join line and assert a
-    # Filter with the bitmap probe below it in the tree text
-    lines = plan.splitlines()
-    join_i = min(
-        i for i, ln in enumerate(lines) if "Join" in ln and "Inner" in ln
-    )
-    assert any(
-        "Filter" in ln and "shiftright" in ln for ln in lines[join_i:]
-    )
-
-
-def test_bloom_positions_match_wrapping_sum_and_never_overflow(spark):
-    """The masked double-hash `((h1&m-1) + i*(h2&m-1)) & (m-1)` must equal
-    the low bits of the mathematically-wrapping `h1 + i*h2` (the pre-fix
-    form, which ANSI mode can abort with ARITHMETIC_OVERFLOW near
-    Long.MAX) — checked in arbitrary-precision Python."""
-    m_bits, k = 1024, 4
-    rows = [(f"gram-{i}",) for i in range(50)]
-    df = spark.createDataFrame(rows, ["gram"])
-    hashed = df.select(
-        "gram",
-        F.xxhash64("gram").alias("h1"),
-        F.expr("cast(hash(gram) as bigint)").alias("h2"),
-        F.expr(
-            f"transform(sequence(0, {k - 1}), i -> "
-            f"((xxhash64(gram) & {m_bits - 1}) + "
-            f"i * (cast(hash(gram) as bigint) & {m_bits - 1}))"
-            f" & {m_bits - 1})"
-        ).alias("pos"),
-    ).collect()
-    for r in hashed:
-        for i in range(k):
-            # Python ints don't overflow: the true wrapped low bits
-            want = (r["h1"] + i * r["h2"]) & (m_bits - 1)
-            assert r["pos"][i] == want, (r["gram"], i)

@@ -94,11 +94,8 @@ def test_split_scan_preserves_rows_and_parallelizes(spark, sf_dir):
     """split_scan (round 11) compensates for the corpus's single-row-
     group parquet files (a row group is the atomic scan unit, so every
     scan otherwise executes as ONE non-empty task): it must multiply
-    partitions to engine parallelism without touching content, and
-    $SPARK_GRAFT_SCAN_SPLIT=0 must disable it for perf triage."""
-    import os
-
-    from merchant_classification_spark.sources import load_table, split_scan
+    partitions to engine parallelism without touching content."""
+    from merchant_classification_spark.sources import load_table
 
     base = load_table(spark, sf_dir, "documents")
     split = load_table(spark, sf_dir, "documents", split=True)
@@ -111,12 +108,6 @@ def test_split_scan_preserves_rows_and_parallelizes(spark, sf_dir):
     a = sorted(r[0] for r in base.select("doc_id").collect())
     b = sorted(r[0] for r in split.select("doc_id").collect())
     assert a == b
-    os.environ["SPARK_GRAFT_SCAN_SPLIT"] = "0"
-    try:
-        off = split_scan(load_table(spark, sf_dir, "documents"))
-        assert off.rdd.getNumPartitions() == base.rdd.getNumPartitions()
-    finally:
-        del os.environ["SPARK_GRAFT_SCAN_SPLIT"]
 
 
 def test_rand_seeded_samplers_stay_unsplit():

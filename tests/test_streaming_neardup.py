@@ -65,9 +65,6 @@ def test_incremental_neardup_matches_union_rerun(spark, store):
     from merchant_classification_spark.operators.dedup import (
         minhash_dedup_pairs,
     )
-    from merchant_classification_spark.streaming.neardup import (
-        incremental_neardup,
-    )
 
     third = (
         "a third completely unrelated piece about cooking pasta with "
@@ -82,14 +79,14 @@ def test_incremental_neardup_matches_union_rerun(spark, store):
         (12, DOC + " extra bonus"),
         (13, third.replace("basil", "pepper")),
     ]
-    admitted0, _ = incremental_neardup(
-        _df(spark, corpus_rows), store, batch_id=0, threshold=0.5
+    admitted0, _ = neardup_ingest_batch(
+        _df(spark, corpus_rows), 0, store, threshold=0.5
     )
     indexed = {r.doc_id for r in admitted0.collect()}
     assert indexed == {1, 2, 4}  # 3 is an internal near-dup of 1
 
-    admitted1, dupes1 = incremental_neardup(
-        _df(spark, shard_rows), store, batch_id=1, threshold=0.5
+    admitted1, dupes1 = neardup_ingest_batch(
+        _df(spark, shard_rows), 1, store, threshold=0.5
     )
     incr = indexed | {r.doc_id for r in admitted1.collect()}
 

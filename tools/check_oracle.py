@@ -55,7 +55,10 @@ def main():
     only = set(sys.argv[2:])
     # Deliberately VANILLA (mirrors the external gate, which does not run
     # build_session) — any query that silently depends on our session confs
-    # must fail here, not in the gate. Round-1 lesson.
+    # must fail here, not in the gate. The console progress bar is off
+    # only so each result prints on its own line (it changes no query
+    # semantics): with stdout and stderr in one file, its \r updates
+    # otherwise share lines with the results.
     from pyspark.sql import SparkSession
 
     spark = (
@@ -63,6 +66,7 @@ def main():
         .master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "48g")
         .getOrCreate()
     )

@@ -6,20 +6,19 @@ cluster execution before touching either.
 Usage: python tools/profile_build_exec.py member [member ...]
        (default: the committed artifact's heaviest members)
 
-Each member gets one warm-up (build+exec), then REPS measured passes;
-reports min build / min exec. Caches cleared between passes.
+Each member is timed by bench.time_warm: one warm-up pass, then REPS
+measured passes; reports min build / min exec / min total.
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import time_warm
 from merchant_classification_spark.session import build_session
 
 REPS = int(os.environ.get("PROFILE_REPS", "3"))
@@ -43,33 +42,14 @@ def main() -> None:
         names = [m for _, m in sorted(flat, reverse=True)[:15]]
     spark = build_session(app_name="profile-build-exec")
 
-    def jgc():
-        gc.collect()
-        jvm = getattr(spark.sparkContext, "_jvm", None)
-        if jvm is not None:
-            jvm.System.gc()
-
     print(f"{'member':32s} {'build':>8s} {'exec':>8s} {'total':>8s}")
     for name in names:
         fn = entry_mod.BRANCH_QUERIES[name]
-        # warm-up
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
-        jgc()
-        builds, execs = [], []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.perf_counter()
-            builds.append(t1 - t0)
-            execs.append(t2 - t1)
-            spark.catalog.clearCache()
-            jgc()
+        passes = time_warm(spark, lambda: fn(spark, sf_dir), REPS)
+        builds, execs = zip(*passes)
         print(
             f"{name:32s} {min(builds):8.3f} {min(execs):8.3f}"
-            f" {min(b + e for b, e in zip(builds, execs)):8.3f}"
+            f" {min(b + e for b, e in passes):8.3f}"
         )
 
 

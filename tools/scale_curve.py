@@ -25,11 +25,11 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import time_warm
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.session import build_session
@@ -76,10 +76,6 @@ PROBES = [
     ("grouped_linear_fit", "applyInPandas exact-moment OLS"),
     ("winnow_pairs", "MOSS pair join (arrow kernel, df-capped postings)"),
 ]
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 # --- skewed-key stress probes -------------------------------------------
@@ -143,6 +139,47 @@ def _skew_probes():
     ]
 
 
+def _curve(spark, probes, sf_dirs, sfs):
+    """(name, desc, times, alpha) per probe: the min of two warm passes
+    at each scale factor, and the exponent over the last decade."""
+    rows = []
+    for name, desc, fn in probes:
+        times = [
+            min(b + e for b, e in time_warm(spark, lambda: fn(spark, d), 2))
+            for d in sf_dirs
+        ]
+        alpha = math.log(times[-1] / times[-2]) / math.log(sfs[-1] / sfs[-2])
+        rows.append((name, desc, times, alpha))
+        print(name, [round(t, 2) for t in times], "alpha=%.2f" % alpha, flush=True)
+    return rows
+
+
+def _write_table(f, kind: str, rows, sfs) -> None:
+    f.write(f"| probe | {kind} | " + " | ".join(f"sf{s}" for s in sfs) + " | alpha | verdict |\n")
+    f.write("|---|---|" + "---|" * (len(sfs) + 2) + "\n")
+    for name, desc, times, alpha in rows:
+        small = times[-1] < 1.0
+        verdict = (
+            "overhead-bound"
+            if small
+            else "linear-or-better"
+            if alpha <= 1.15
+            else "superlinear — see plan notes"
+            if alpha < 2.0
+            else "QUADRATIC — fix"
+        )
+        f.write(
+            "| %s | %s | %s | %s | %s |\n"
+            % (
+                name,
+                desc,
+                " | ".join("%.2f" % t for t in times),
+                ("~%.2f" % alpha) if small else "%.2f" % alpha,
+                verdict,
+            )
+        )
+
+
 def main() -> None:
     args = sys.argv[1:]
     out_path = args[0] if args and args[0].endswith(".md") else "SCALING.md"
@@ -154,44 +191,12 @@ def main() -> None:
     sfs = [float(d.rsplit("sf", 1)[1]) for d in sf_dirs]
 
     spark = build_session(app_name="mcs-scale-curve")
-    rows = []
-    for name, desc in PROBES:
-        fn = entry_mod.BRANCH_QUERIES.get(name) or entry_mod.queries().get(name)
-        if fn is None:
-            continue
-        times = []
-        for d in sf_dirs:
-            force(fn(spark, d))  # warm: codegen + JIT + page cache
-            spark.catalog.clearCache()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                force(fn(spark, d))
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-                spark.catalog.clearCache()
-            times.append(best)
-        alpha = math.log(times[-1] / times[-2]) / math.log(sfs[-1] / sfs[-2])
-        rows.append((name, desc, times, alpha))
-        print(name, [round(t, 2) for t in times], "alpha=%.2f" % alpha, flush=True)
-
-    skew_rows = []
-    for name, desc, builder in _skew_probes():
-        times = []
-        for d in sf_dirs:
-            force(builder(spark, d))
-            spark.catalog.clearCache()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                force(builder(spark, d))
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-                spark.catalog.clearCache()
-            times.append(best)
-        alpha = math.log(times[-1] / times[-2]) / math.log(sfs[-1] / sfs[-2])
-        skew_rows.append((name, desc, times, alpha))
-        print(name, [round(t, 2) for t in times], "alpha=%.2f" % alpha, flush=True)
+    probes = [
+        (name, desc, entry_mod.BRANCH_QUERIES.get(name) or entry_mod.queries().get(name))
+        for name, desc in PROBES
+    ]
+    rows = _curve(spark, [p for p in probes if p[2] is not None], sf_dirs, sfs)
+    skew_rows = _curve(spark, _skew_probes(), sf_dirs, sfs)
 
     with open(out_path, "w") as f:
         f.write(
@@ -203,29 +208,7 @@ def main() -> None:
             "not meaningful (marked ~). Generated by tools/scale_curve.py.\n\n"
             % (sfs[-2], sfs[-1])
         )
-        f.write("| probe | family | " + " | ".join(f"sf{s}" % () for s in sfs) + " | alpha | verdict |\n")
-        f.write("|---|---|" + "---|" * (len(sfs) + 2) + "\n")
-        for name, desc, times, alpha in rows:
-            small = times[-1] < 1.0
-            verdict = (
-                "overhead-bound"
-                if small
-                else "linear-or-better"
-                if alpha <= 1.15
-                else "superlinear — see plan notes"
-                if alpha < 2.0
-                else "QUADRATIC — fix"
-            )
-            f.write(
-                "| %s | %s | %s | %s | %s |\n"
-                % (
-                    name,
-                    desc,
-                    " | ".join("%.2f" % t for t in times),
-                    ("~%.2f" % alpha) if small else "%.2f" % alpha,
-                    verdict,
-                )
-            )
+        _write_table(f, "family", rows, sfs)
         f.write(
             "\nReading guide: every near-dup/ANN operator above ships with a\n"
             "banded/bucketed candidate stage precisely so this table stays\n"
@@ -239,29 +222,7 @@ def main() -> None:
             "construction, so these rows measure straggler behavior the\n"
             "uniform probes cannot.\n\n"
         )
-        f.write("| probe | shape | " + " | ".join(f"sf{s}" for s in sfs) + " | alpha | verdict |\n")
-        f.write("|---|---|" + "---|" * (len(sfs) + 2) + "\n")
-        for name, desc, times, alpha in skew_rows:
-            small = times[-1] < 1.0
-            verdict = (
-                "overhead-bound"
-                if small
-                else "linear-or-better"
-                if alpha <= 1.15
-                else "superlinear — see plan notes"
-                if alpha < 2.0
-                else "QUADRATIC — fix"
-            )
-            f.write(
-                "| %s | %s | %s | %s | %s |\n"
-                % (
-                    name,
-                    desc,
-                    " | ".join("%.2f" % t for t in times),
-                    ("~%.2f" % alpha) if small else "%.2f" % alpha,
-                    verdict,
-                )
-            )
+        _write_table(f, "shape", skew_rows, sfs)
         by_name = {n: t for n, _, t, _ in skew_rows}
         if "skew_topk_plain" in by_name and "skew_topk_salted" in by_name:
             plain, salted = by_name["skew_topk_plain"][-1], by_name["skew_topk_salted"][-1]

@@ -59,12 +59,12 @@ import math
 import os
 import re
 import sys
-import time
 from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from bench import time_warm
 from pyspark.sql import functions as F
 
 from merchant_classification_spark.session import build_session
@@ -262,27 +262,10 @@ def derive(spark) -> None:
         ).parquet(f"{OUT}/{name}.parquet")
 
 
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def measure(spark, fn, sf_dir: str, reps: int = 2) -> float:
-    force(fn(spark, sf_dir))
-    spark.catalog.clearCache()
-    best = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        force(fn(spark, sf_dir))
-        dt = time.perf_counter() - t0
-        best = dt if best is None or dt < best else best
-        spark.catalog.clearCache()
-    import gc
-
-    gc.collect()
-    jvm = getattr(spark.sparkContext, "_jvm", None)
-    if jvm is not None:
-        jvm.System.gc()
-    return best
+    """Min build+exec seconds of ``reps`` warm passes of one probe."""
+    passes = time_warm(spark, lambda: fn(spark, sf_dir), reps)
+    return min(b + e for b, e in passes)
 
 
 def _parse_prev_table() -> dict[str, tuple[float, float, float]]:
