@@ -18,6 +18,10 @@ Spark-vs-DuckDB value hashes bit-identical without rounding fudge.
 
 from __future__ import annotations
 
+import functools
+import math
+import os
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3912,6 +3916,11 @@ def _sql_dot(a: str, b: str, dim: int = EMB_DIM) -> str:
     return "0.0 + " + " + ".join(f"{a}[{i}]*{b}[{i}]" for i in range(1, dim + 1))
 
 
+def _esc(s: str) -> str:
+    """The body of a SQL string literal: single quotes doubled."""
+    return s.replace("'", "''")
+
+
 def _sql_clean_chain(expr: str) -> str:
     """DuckDB mirror of functions.cleaning.clean_narrative (trim=True),
     using the RE2-compatible (backref-free) date pattern — equivalent on
@@ -3921,12 +3930,9 @@ def _sql_clean_chain(expr: str) -> str:
         build_datetime_pattern,
     )
 
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    out = f"regexp_replace({expr}, '{q(build_datetime_pattern(False))}', ' ', 'g')"
+    out = f"regexp_replace({expr}, '{_esc(build_datetime_pattern(False))}', ' ', 'g')"
     for pattern, repl in POST_DATE_STEPS:
-        out = f"regexp_replace({out}, '{q(pattern)}', '{q(repl)}', 'g')"
+        out = f"regexp_replace({out}, '{_esc(pattern)}', '{_esc(repl)}', 'g')"
     return f"trim({out})"
 
 
@@ -4903,7 +4909,70 @@ def _dlit(v: float) -> str:
     return r if ("e" in r or "E" in r or "inf" in r or "nan" in r) else r + "e0"
 
 
-def _ann_ivf_oracle_sql() -> str | None:
+# ---------------------------------------------------------------------------
+# data-dependent oracles: each refits on the grading data at import with
+# the same pure-Python fit the Spark side runs, and inlines the fitted
+# literals. _oracle_read is their one read of that data; the
+# _DATA_ORACLES loop after SUITES is their one guard.
+# ---------------------------------------------------------------------------
+
+#: the sf dir the driver grades at (sf0.01), which the data-dependent
+#: oracles fit on; SPARK_GRAFT_ORACLE_SF_DIR overrides for local checks
+#: at other scales
+_ORACLE_SF_DIR = os.environ.get(
+    "SPARK_GRAFT_ORACLE_SF_DIR", os.path.join(os.path.dirname(SF0001), "sf0.01")
+)
+
+
+def _oracle_read(table: str, *sqls: str) -> list[list[tuple]]:
+    """Run ``sqls`` on one DuckDB connection, where ``table`` is a view
+    over the grading parquet ``<oracle sf dir>/<table>.parquet``, and
+    return each result. Raises when the parquet cannot be read, or when
+    the first query returns no rows (the fit has nothing to fit on)."""
+    import duckdb as _dd
+
+    con = _dd.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM "
+            f"read_parquet('{_ORACLE_SF_DIR}/{table}.parquet')"
+        )
+        out = [con.sql(q).fetchall() for q in sqls]
+    finally:
+        con.close()
+    if not out[0]:
+        raise ValueError(f"no {table} rows to fit on")
+    return out
+
+
+@functools.cache
+def _fit_sample() -> list[list[float]]:
+    """The every-stride-th-vec_id sample the IVF, PQ, diversity and
+    SemDeDup quantizers fit on the Spark side."""
+    rows = _oracle_read(
+        "embeddings",
+        f"SELECT CAST(embedding AS DOUBLE[]) FROM embeddings "
+        f"WHERE vec_id % greatest(1, (SELECT count(*) FROM embeddings)"
+        f" // {IVF_FIT_TARGET}) = 0 ORDER BY vec_id LIMIT {IVF_FIT_TARGET}",
+    )[0]
+    return [list(r[0]) for r in rows]
+
+
+def _sql_centroid_d2s(var: str, cents: list[list[float]], off: int = 0) -> str:
+    """DuckDB list of the left-assoc squared distances from ``var``'s
+    elements ``off + 1 …`` to each literal centroid (centroid_sq_dists'
+    expression order)."""
+    return "[" + ", ".join(
+        "0.0 + " + " + ".join(
+            f"({var}[{off + i + 1}]-({_dlit(c[i])}))"
+            f"*({var}[{off + i + 1}]-({_dlit(c[i])}))"
+            for i in range(len(c))
+        )
+        for c in cents
+    ) + "]"
+
+
+def _ann_ivf_oracle_sql() -> str:
     """Full replay of ivf_topk_portable + recall@k: run the SAME
     deterministic fit (every stride-th vec_id -> driver Lloyd's KMeans,
     operators/similarity.py _deterministic_kmeans) on the SAME sample
@@ -4912,50 +4981,13 @@ def _ann_ivf_oracle_sql() -> str | None:
     distances), n_probe cell selection, candidate scoring, top-k, and
     the recall annotation are then pure expressions both engines
     evaluate bit-for-bit.
-
-    The fit reads the sf dir the driver grades at (sf0.01 by default;
-    SPARK_GRAFT_ORACLE_SF_DIR overrides for local checks at other
-    scales). Returns None when the data is unreachable so importing
-    this module never breaks — the query then degrades to rows-only.
     """
-    import os
-
-    import duckdb as _dd
-
     from merchant_classification_spark.operators.similarity import (
         _deterministic_kmeans,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        con = _dd.connect()
-        n = con.sql(
-            f"SELECT count(*) FROM read_parquet('{path}')"
-        ).fetchone()[0]
-        stride = max(1, n // IVF_FIT_TARGET)
-        rows = con.sql(
-            f"SELECT CAST(embedding AS DOUBLE[]) FROM read_parquet('{path}') "
-            f"WHERE vec_id % {stride} = 0 ORDER BY vec_id LIMIT {IVF_FIT_TARGET}"
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    cents = _deterministic_kmeans(
-        [list(r[0]) for r in rows], IVF_N_CENTROIDS, IVF_ITERS
-    )
-
-    def d2(c: list[float]) -> str:
-        return "0.0 + " + " + ".join(
-            f"(v[{i + 1}]-({_dlit(c[i])}))*(v[{i + 1}]-({_dlit(c[i])}))"
-            for i in range(EMB_DIM)
-        )
-
-    dl = "[" + ", ".join(d2(c) for c in cents) + "]"
+    cents = _deterministic_kmeans(_fit_sample(), IVF_N_CENTROIDS, IVF_ITERS)
+    dl = _sql_centroid_d2s("v", cents)
     return f"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         dd AS (SELECT vec_id, v, {dl} AS dl FROM e),
@@ -5021,44 +5053,7 @@ def _ann_ivf_oracle_sql() -> str | None:
     """
 
 
-_ann_ivf_sql = _ann_ivf_oracle_sql()
-if _ann_ivf_sql is not None:
-    ORACLES["ann_ivf"] = _ann_ivf_sql
-
-
-def _pq_fit_from_parquet() -> list[list[float]] | None:
-    """Shared guarded fit-sample read for the PQ / diversity oracles:
-    the same every-stride-th-vec_id sample ivf/pq/semantic fit on the
-    Spark side, read straight from the grading parquet. None when the
-    data is unreachable (import must never break — the member then
-    degrades to rows-only / is left out of its suite)."""
-    import os
-
-    import duckdb as _dd
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        con = _dd.connect()
-        n = con.sql(
-            f"SELECT count(*) FROM read_parquet('{path}')"
-        ).fetchone()[0]
-        stride = max(1, n // IVF_FIT_TARGET)
-        rows = con.sql(
-            f"SELECT CAST(embedding AS DOUBLE[]) FROM read_parquet('{path}') "
-            f"WHERE vec_id % {stride} = 0 ORDER BY vec_id LIMIT {IVF_FIT_TARGET}"
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    return [list(r[0]) for r in rows]
-
-
-def _ann_pq_oracle_sql() -> str | None:
+def _ann_pq_oracle_sql() -> str:
     """Full replay of pq_topk_portable (refine mode) + recall@k: refit
     the coarse quantizer AND the per-subspace PQ codebooks from the
     same stride sample (shared _deterministic_kmeans /
@@ -5074,19 +5069,10 @@ def _ann_pq_oracle_sql() -> str | None:
         _fit_pq_codebooks,
     )
 
-    fit = _pq_fit_from_parquet()
-    if fit is None:
-        return None
+    fit = _fit_sample()
     coarse = _deterministic_kmeans(fit, IVF_N_CENTROIDS, IVF_ITERS)
     books = _fit_pq_codebooks(fit, PQ_N_SUBSPACES, PQ_N_CODES, IVF_ITERS)
     ds = EMB_DIM // PQ_N_SUBSPACES
-
-    def d2(var: str, c: list[float], off: int = 0) -> str:
-        return "0.0 + " + " + ".join(
-            f"({var}[{off + i + 1}]-({_dlit(c[i])}))"
-            f"*({var}[{off + i + 1}]-({_dlit(c[i])}))"
-            for i in range(len(c))
-        )
 
     def dvv(a: str, b: str) -> str:
         return "0.0 + " + " + ".join(
@@ -5094,25 +5080,17 @@ def _ann_pq_oracle_sql() -> str | None:
             for i in range(1, EMB_DIM + 1)
         )
 
-    coarse_dl = "[" + ", ".join(d2("v", c) for c in coarse) + "]"
+    coarse_dl = _sql_centroid_d2s("v", coarse)
     code_cols = []
     for m in range(PQ_N_SUBSPACES):
-        dlm = (
-            "["
-            + ", ".join(d2("v", c, off=m * ds) for c in books[m])
-            + "]"
-        )
+        dlm = _sql_centroid_d2s("v", books[m], off=m * ds)
         code_cols.append(
             f"CAST(list_position({dlm}, list_min({dlm})) AS INTEGER) AS c{m + 1}"
         )
-    lut_cols = []
-    for m in range(PQ_N_SUBSPACES):
-        lutm = (
-            "["
-            + ", ".join(d2("qv", c, off=m * ds) for c in books[m])
-            + "]"
-        )
-        lut_cols.append(f"{lutm} AS lut{m + 1}")
+    lut_cols = [
+        f"{_sql_centroid_d2s('qv', books[m], off=m * ds)} AS lut{m + 1}"
+        for m in range(PQ_N_SUBSPACES)
+    ]
     adc = "0.0 + " + " + ".join(
         f"p.lut{m + 1}[a.c{m + 1}]" for m in range(PQ_N_SUBSPACES)
     )
@@ -5189,12 +5167,7 @@ def _ann_pq_oracle_sql() -> str | None:
     """
 
 
-_ann_pq_sql = _ann_pq_oracle_sql()
-if _ann_pq_sql is not None:
-    ORACLES["ann_pq"] = _ann_pq_sql
-
-
-def _diversity_sample_oracle_sql() -> str | None:
+def _diversity_sample_oracle_sql() -> str:
     """Full replay of cluster_balanced_sample (q_diversity_sample):
     refit the coarse quantizer from the shared stride sample, bake the
     centroid literals, then replay cell assignment (first-min argmin),
@@ -5206,18 +5179,8 @@ def _diversity_sample_oracle_sql() -> str | None:
         _deterministic_kmeans,
     )
 
-    fit = _pq_fit_from_parquet()
-    if fit is None:
-        return None
-    cents = _deterministic_kmeans(fit, DIV_N_CENTROIDS, IVF_ITERS)
-
-    def d2(c: list[float]) -> str:
-        return "0.0 + " + " + ".join(
-            f"(v[{i + 1}]-({_dlit(c[i])}))*(v[{i + 1}]-({_dlit(c[i])}))"
-            for i in range(EMB_DIM)
-        )
-
-    dl = "[" + ", ".join(d2(c) for c in cents) + "]"
+    cents = _deterministic_kmeans(_fit_sample(), DIV_N_CENTROIDS, IVF_ITERS)
+    dl = _sql_centroid_d2s("v", cents)
     return f"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         assigned AS (
@@ -5240,61 +5203,21 @@ def _diversity_sample_oracle_sql() -> str | None:
     """
 
 
-_div_sql = _diversity_sample_oracle_sql()
-if _div_sql is not None:
-    ORACLES["diversity_sample"] = _div_sql
-
-
-def _semantic_dedup_oracle_sql() -> str | None:
+def _semantic_dedup_oracle_sql() -> str:
     """Full replay of semantic_dedup_portable (q_semantic_dedup): run
     the SAME deterministic quantizer fit on the SAME stride sample read
     straight from the parquet, inline identical centroid literals, then
     express assignment (first-min argmin), centroid distance
     (list_min of the left-assoc squared-distance folds), the
     outranked-by predicate, and the per-pair cosine as pure SQL — both
-    engines evaluate every double bit-for-bit. Same guard as the
-    ann_ivf oracle: returns None when the grading data is unreachable
-    at import, degrading the probe to absent (pytest still covers the
-    operator) instead of breaking the module.
+    engines evaluate every double bit-for-bit.
     """
-    import os
-
-    import duckdb as _dd
-
     from merchant_classification_spark.operators.similarity import (
         _deterministic_kmeans,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        con = _dd.connect()
-        n = con.sql(
-            f"SELECT count(*) FROM read_parquet('{path}')"
-        ).fetchone()[0]
-        stride = max(1, n // IVF_FIT_TARGET)
-        rows = con.sql(
-            f"SELECT CAST(embedding AS DOUBLE[]) FROM read_parquet('{path}') "
-            f"WHERE vec_id % {stride} = 0 ORDER BY vec_id LIMIT {IVF_FIT_TARGET}"
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    cents = _deterministic_kmeans(
-        [list(r[0]) for r in rows], SEMDEDUP_N_CENTROIDS, IVF_ITERS
-    )
-
-    def d2(c: list[float]) -> str:
-        return "0.0 + " + " + ".join(
-            f"(v[{i + 1}]-({_dlit(c[i])}))*(v[{i + 1}]-({_dlit(c[i])}))"
-            for i in range(EMB_DIM)
-        )
-
-    dl = "[" + ", ".join(d2(c) for c in cents) + "]"
+    cents = _deterministic_kmeans(_fit_sample(), SEMDEDUP_N_CENTROIDS, IVF_ITERS)
+    dl = _sql_centroid_d2s("v", cents)
     return f"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         dd AS (SELECT vec_id, v, {dl} AS dl FROM e),
@@ -5319,58 +5242,53 @@ def _semantic_dedup_oracle_sql() -> str | None:
     """
 
 
-_semantic_dedup_sql = _semantic_dedup_oracle_sql()
-if _semantic_dedup_sql is not None:
-    ORACLES["semantic_dedup"] = _semantic_dedup_sql
-
-
-def _perplexity_oracle_sql() -> str | None:
-    """Full replay of q_perplexity_filter: recompute the SAME unigram
-    counts in DuckDB (tokenization replay already proven by token_stats),
-    run the SAME Python ``math.log`` on the same exact integers, and
-    inline the identical double literals — scoring is then a
-    list_transform lookup + the list_reduce left fold seeded at 0.0,
-    matching Spark's ``aggregate(…, 0.0, +)`` order, so every
-    logprob_sum / avg_neg_logprob is bit-exact. Same guard as the
-    ann_ivf/semantic_dedup oracles: unreadable grading data at import →
-    None → the probe degrades to absent instead of breaking the module.
-    """
-    import math
-    import os
-
-    import duckdb as _dd
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        counts = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d),
+@functools.cache
+def _token_counts() -> tuple[list[tuple], list[tuple]]:
+    """Unigram ``(tok, c)`` and adjacent-pair ``(w1, w2, c)`` integer
+    counts over the grading documents (tokenization replay proven by
+    token_stats) — what the perplexity screens fit on."""
+    uni, bi = _oracle_read(
+        "documents",
+        f"""
+            WITH t AS (SELECT {_SQL_TOKENS} AS toks FROM documents),
             e AS (SELECT unnest(toks) AS tok FROM t)
             SELECT tok, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY tok
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not counts:
-        return None
-    n = sum(c for _, c in counts)
-    v = len(counts)
-    top = sorted(counts, key=lambda r: (-r[1], r[0]))[:PPLX_TOP_K]
-    denom = float(n + v + 1)
-    model = [(t, math.log((c + 1) / denom)) for t, c in top]
-    oov = _dlit(math.log(1.0 / denom))
+        """,
+        f"""
+            WITH t AS (SELECT {_SQL_TOKENS} AS toks FROM documents),
+            p AS (SELECT unnest([
+                      struct_pack(w1 := toks[i], w2 := toks[i+1])
+                      for i in range(1, len(toks))]) AS pr FROM t)
+            SELECT pr.w1, pr.w2, CAST(count(*) AS BIGINT) AS c
+            FROM p GROUP BY pr.w1, pr.w2
+        """,
+    )
+    return uni, bi
 
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
 
-    vocab = "[" + ", ".join(f"'{esc(t)}'" for t, _ in model) + "]"
-    lps = "[" + ", ".join(_dlit(lp) for _, lp in model) + "]"
+def _unigram_model(top_k: int) -> tuple[dict[str, int], str, str, str]:
+    """The add-one unigram model over the top_k tokens (count desc,
+    token asc): their counts, the DuckDB vocab and log-prob lists, and
+    the OOV log-prob — the same Python ``math.log`` on the same exact
+    integers as the Spark-side fit."""
+    uni = _token_counts()[0]
+    n = sum(c for _, c in uni)
+    top = sorted(uni, key=lambda r: (-r[1], r[0]))[:top_k]
+    denom = float(n + len(uni) + 1)
+    vocab = "[" + ", ".join(f"'{_esc(t)}'" for t, _ in top) + "]"
+    lps = "[" + ", ".join(_dlit(math.log((c + 1) / denom)) for _, c in top) + "]"
+    return dict(top), vocab, lps, _dlit(math.log(1.0 / denom))
+
+
+def _perplexity_oracle_sql() -> str:
+    """Full replay of q_perplexity_filter: recompute the SAME unigram
+    counts in DuckDB, run the SAME Python ``math.log`` on the same exact
+    integers, and inline the identical double literals — scoring is
+    then a list_transform lookup + the list_reduce left fold seeded at
+    0.0, matching Spark's ``aggregate(…, 0.0, +)`` order, so every
+    logprob_sum / avg_neg_logprob is bit-exact.
+    """
+    _, vocab, lps, oov = _unigram_model(PPLX_TOP_K)
     return f"""
         WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
         s AS (SELECT doc_id, toks,
@@ -5393,12 +5311,7 @@ def _perplexity_oracle_sql() -> str | None:
     """
 
 
-_perplexity_sql = _perplexity_oracle_sql()
-if _perplexity_sql is not None:
-    ORACLES["perplexity_filter"] = _perplexity_sql
-
-
-def _bigram_perplexity_oracle_sql() -> str | None:
+def _bigram_perplexity_oracle_sql() -> str:
     """Full replay of q_bigram_perplexity: recompute the SAME unigram
     AND bigram integer counts in DuckDB, apply the same caps/tie-breaks
     and the same Python ``math.log`` chain (stupid-backoff:
@@ -5406,79 +5319,24 @@ def _bigram_perplexity_oracle_sql() -> str | None:
     backoff), inline identical double literals, and replay the fold
     SEEDED at the first token's unigram score — matching Spark's
     ``aggregate(pairs, first, +)`` order — so every logprob_sum is
-    bit-exact. Same unreadable-data guard as the other oracles.
+    bit-exact.
     """
-    import math
-    import os
-
-    import duckdb as _dd
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        uni = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d),
-            e AS (SELECT unnest(toks) AS tok FROM t)
-            SELECT tok, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY tok
-            """
-        ).fetchall()
-        bi = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d),
-            p AS (SELECT unnest([
-                      struct_pack(w1 := toks[i], w2 := toks[i+1])
-                      for i in range(1, len(toks))]) AS pr FROM t)
-            SELECT pr.w1, pr.w2, CAST(count(*) AS BIGINT) AS c
-            FROM p GROUP BY pr.w1, pr.w2
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not uni:
-        return None
-    n_tot = sum(c for _, c in uni)
-    v = len(uni)
-    top = sorted(uni, key=lambda r: (-r[1], r[0]))[:BIPPLX_TOP_K]
-    denom = float(n_tot + v + 1)
-    uni_model = [(t, math.log((c + 1) / denom)) for t, c in top]
-    oov = _dlit(math.log(1.0 / denom))
+    prev_c, uvocab, ulps, oov = _unigram_model(BIPPLX_TOP_K)
     la = _dlit(math.log(BIPPLX_ALPHA))
-    prev_c = dict(top)
     top_bi = sorted(
-        (r for r in bi if r[0] in prev_c),
+        (r for r in _token_counts()[1] if r[0] in prev_c),
         key=lambda r: (-r[2], r[0], r[1]),
     )[:BIPPLX_TOP_K2]
-    bi_model = [
-        (w1 + "\x1f" + w2, math.log(c / prev_c[w1])) for w1, w2, c in top_bi
-    ]
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    uvocab = "[" + ", ".join(f"'{esc(t)}'" for t, _ in uni_model) + "]"
-    ulps = "[" + ", ".join(_dlit(lp) for _, lp in uni_model) + "]"
     # bigram keys carry the 0x1F separator via chr(31) so the SQL text
     # stays printable
     bvocab = (
         "["
-        + ", ".join(
-            "'{}' || chr(31) || '{}'".format(
-                esc(k.split("\x1f")[0]), esc(k.split("\x1f")[1])
-            )
-            for k, _ in bi_model
-        )
+        + ", ".join(f"'{_esc(w1)}' || chr(31) || '{_esc(w2)}'" for w1, w2, _ in top_bi)
         + "]"
-    ) if bi_model else "CAST([] AS VARCHAR[])"
+    ) if top_bi else "CAST([] AS VARCHAR[])"
     blps = (
-        "[" + ", ".join(_dlit(lp) for _, lp in bi_model) + "]"
-        if bi_model
+        "[" + ", ".join(_dlit(math.log(c / prev_c[w1])) for w1, _, c in top_bi) + "]"
+        if top_bi
         else "CAST([] AS DOUBLE[])"
     )
     uni_of = (
@@ -5519,11 +5377,6 @@ def _bigram_perplexity_oracle_sql() -> str | None:
     """
 
 
-_bigram_pplx_sql = _bigram_perplexity_oracle_sql()
-if _bigram_pplx_sql is not None:
-    ORACLES["bigram_perplexity"] = _bigram_pplx_sql
-
-
 #: DuckDB mirror of text_analysis._dsir_features: unigrams then adjacent
 #: bigrams joined with '_' ('_' cannot occur inside a token), document
 #: order — range(1, len) is empty for < 2 tokens, matching Spark's guard
@@ -5533,7 +5386,7 @@ _SQL_DSIR_FEATS = (
 )
 
 
-def _dsir_oracle_sql() -> str | None:
+def _dsir_oracle_sql() -> str:
     """Full replay of q_dsir_weights: recompute the SAME hashed-bucket
     counts in DuckDB (portable md5-60bit bucket, tokenization replay
     already proven by token_stats), run the SAME Python ``math.log`` on
@@ -5541,39 +5394,22 @@ def _dsir_oracle_sql() -> str | None:
     literals — scoring is then a list_transform bucket lookup + the
     left fold seeded at 0.0, matching Spark's ``aggregate(…, 0.0, +)``
     order (unigrams first, then bigrams), so every dsir_logratio is
-    bit-exact. Same guard as the perplexity/ann_ivf oracles: unreadable
-    grading data at import → None → the probe degrades to absent.
+    bit-exact.
     """
-    import math
-    import os
-
-    import duckdb as _dd
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
     b = DSIR_BUCKETS
-    try:
-        con = _dd.connect()
-        rows = con.sql(
-            f"""
-            WITH d AS (SELECT lang, text FROM read_parquet('{path}')),
-            t AS (SELECT lang = '{DSIR_TARGET_LANG}' AS w,
-                         {_SQL_TOKENS} AS toks FROM d),
+    rows = _oracle_read(
+        "documents",
+        f"""
+            WITH t AS (SELECT lang = '{DSIR_TARGET_LANG}' AS w,
+                         {_SQL_TOKENS} AS toks FROM documents),
             f AS (SELECT w, {_SQL_DSIR_FEATS} AS feats FROM t),
             e AS (SELECT w, unnest(feats) AS feat FROM f)
             SELECT CAST(('0x' || substr(md5(feat), 1, 15))::BIGINT % {b} AS INT) AS bk,
                    CAST(count(*) AS BIGINT) AS c_raw,
                    CAST(sum(CASE WHEN w THEN 1 ELSE 0 END) AS BIGINT) AS c_tgt
             FROM e GROUP BY bk
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
+        """,
+    )[0]
     raw = {int(r[0]): int(r[1]) for r in rows}
     tgt = {int(r[0]): int(r[2]) for r in rows}
     d_raw = float(sum(raw.values()) + b)
@@ -5601,19 +5437,12 @@ def _dsir_oracle_sql() -> str | None:
     """
 
 
-_dsir_sql = _dsir_oracle_sql()
-if _dsir_sql is not None:
-    ORACLES["dsir_weights"] = _dsir_sql
-
-
-def _duckdb_quality_fit(path: str) -> tuple[list[float], float] | None:
+@functools.cache
+def _quality_fit() -> tuple[list[float], float]:
     """Recompute the md5-ranked curated-vs-crawl training sample and
     integer bucket counts in DuckDB and run the SAME shared pure-Python
     ``fit_quality_lr`` — the (weights, bias) every quality-gate replay
-    inlines (quality_model member AND the corpus_funnel composition).
-    None on unreadable grading data (the callers degrade to absent)."""
-    import duckdb as _dd
-
+    inlines (quality_model member AND the corpus_funnel composition)."""
     from merchant_classification_spark.functions.quality_model import (
         fit_quality_lr,
     )
@@ -5621,12 +5450,11 @@ def _duckdb_quality_fit(path: str) -> tuple[list[float], float] | None:
     nb = QUALITY_BUCKETS
     n_cls = QUALITY_SAMPLE_PER_CLASS
     srcs = ", ".join(f"'{s}'" for s in QUALITY_CURATED_SOURCES)
-    try:
-        con = _dd.connect()
-        rows = con.sql(
-            f"""
+    rows = _oracle_read(
+        "documents",
+        f"""
             WITH d AS (SELECT doc_id, source, text
-                       FROM read_parquet('{path}')
+                       FROM documents
                        WHERE text IS NOT NULL),
             h AS (SELECT doc_id, (source IN ({srcs})) AS w, text,
                          ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
@@ -5643,13 +5471,8 @@ def _duckdb_quality_fit(path: str) -> tuple[list[float], float] | None:
                         % {nb} AS INT) AS bk,
                    CAST(count(*) AS BIGINT) AS c
             FROM e GROUP BY 1, 2, 3, 4
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
+        """,
+    )[0]
     docs: dict = {}
     for w, h, i, bk, c in rows:
         vec = docs.setdefault((bool(w), int(h), i), [0] * nb)
@@ -5661,7 +5484,7 @@ def _duckdb_quality_fit(path: str) -> tuple[list[float], float] | None:
     return fit_quality_lr(samples, nb)
 
 
-def _quality_oracle_sql() -> str | None:
+def _quality_oracle_sql() -> str:
     """Full replay of q_quality_model: recompute the SAME deterministic
     md5-ranked training sample and integer bucket counts in DuckDB, run
     the SAME shared pure-Python ``fit_quality_lr`` on them (the fit is a
@@ -5669,18 +5492,9 @@ def _quality_oracle_sql() -> str | None:
     ``fit_bpe``), inline the identical weight/bias double literals, and
     replay scoring as a list_transform bucket lookup + left fold seeded
     at 0.0 + one division — matching Spark's expression order, so every
-    quality_logit is bit-exact. Same unreadable-data guard as the
-    DSIR/perplexity oracles.
+    quality_logit is bit-exact.
     """
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    fit = _duckdb_quality_fit(f"{sf_dir}/documents.parquet")
-    if fit is None:
-        return None
-    weights, bias = fit
+    weights, bias = _quality_fit()
     nb = QUALITY_BUCKETS
     wl = "[" + ", ".join(_dlit(x) for x in weights) + "]"
     bl = _dlit(bias)
@@ -5705,11 +5519,6 @@ def _quality_oracle_sql() -> str | None:
                (len(feats) > 0 AND quality_logit > 0.0e0) AS keep
         FROM g
     """
-
-
-_quality_sql = _quality_oracle_sql()
-if _quality_sql is not None:
-    ORACLES["quality_model"] = _quality_sql
 
 
 #: DuckDB mirror of functions.lang_model.char_ngram_features: 3-grams
@@ -5737,7 +5546,8 @@ def _sql_gram_bucket(expr: str, n_buckets: int) -> str:
     )
 
 
-def _lang_model_oracle_sql() -> str | None:
+
+def _lang_model_oracle_sql() -> str:
     """Full replay of q_lang_model: recompute the SAME md5-ranked
     per-language training sample and integer char-3-gram bucket counts
     in DuckDB, run the SAME shared pure-Python ``fit_lang_softmax`` on
@@ -5745,29 +5555,20 @@ def _lang_model_oracle_sql() -> str | None:
     replay scoring as K list_reduce left folds (seeded 0.0, one
     division, one addition each — Spark's expression order) plus the
     strict-> first-wins argmax (first class >= all others = earliest
-    max, exactly the Spark loop's tie-break). Same unreadable-data
-    guard as the other data-dependent oracles.
+    max, exactly the Spark loop's tie-break). A lang value outside the
+    fixed class list makes the fit raise, as the probe would.
     """
-    import os
-
-    import duckdb as _dd
-
     from merchant_classification_spark.functions.lang_model import (
         fit_lang_softmax,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
     nb = LANGM_BUCKETS
     n_cls = LANGM_SAMPLE_PER_CLASS
-    try:
-        con = _dd.connect()
-        rows = con.sql(
-            f"""
+    rows = _oracle_read(
+        "documents",
+        f"""
             WITH d AS (SELECT doc_id, lang, text
-                       FROM read_parquet('{path}')
+                       FROM documents
                        WHERE text IS NOT NULL AND lang IS NOT NULL),
             h AS (SELECT doc_id, lang, text,
                          ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
@@ -5784,13 +5585,8 @@ def _lang_model_oracle_sql() -> str | None:
                    {_sql_gram_bucket("g", nb)} AS bk,
                    CAST(count(*) AS BIGINT) AS c
             FROM e GROUP BY 1, 2, 3, 4
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
+        """,
+    )[0]
     docs: dict = {}
     for y, h, i, bk, c in rows:
         vec = docs.setdefault((str(y), int(h), i), [0] * nb)
@@ -5799,14 +5595,9 @@ def _lang_model_oracle_sql() -> str | None:
         (y, docs[(y, h, i)])
         for (y, h, i) in sorted(docs, key=lambda k: (k[0], k[1], k[2]))
     ]
-    try:
-        weights, biases = fit_lang_softmax(
-            samples, list(LANGM_CLASSES), nb, iters=LANGM_ITERS
-        )
-    except ValueError:
-        # a lang value outside the fixed class list: degrade to absent
-        # (the probe would raise identically; the member is left out)
-        return None
+    weights, biases = fit_lang_softmax(
+        samples, list(LANGM_CLASSES), nb, iters=LANGM_ITERS
+    )
     classes = list(LANGM_CLASSES)
     folds = "\n".join(
         "list_reduce(list_prepend(0.0e0, list_transform(bs, i -> (["
@@ -5847,11 +5638,6 @@ def _lang_model_oracle_sql() -> str | None:
     """
 
 
-_lang_model_sql = _lang_model_oracle_sql()
-if _lang_model_sql is not None:
-    ORACLES["lang_model"] = _lang_model_sql
-
-
 def _sql_tokens_of(expr: str) -> str:
     """The _SQL_TOKENS tokenization over an arbitrary text expression
     (the funnel replay tokenizes the PII-scrubbed text a second time)."""
@@ -5873,12 +5659,12 @@ def _sql_scrub_of(expr: str) -> str:
 
     out = expr
     for pat, tok in PII_STEPS:
-        p = pat.replace("'", "''")
-        out = f"regexp_replace({out}, '{p}', '{tok}', 'g')"
+        out = f"regexp_replace({out}, '{_esc(pat)}', '{tok}', 'g')"
     return out
 
 
-def _corpus_funnel_oracle_sql() -> str | None:
+
+def _corpus_funnel_oracle_sql() -> str:
     """Full replay of q_corpus_funnel — prepare_corpus graded
     end-to-end the way bpe_pack graded its composition. Every stage
     reuses a replay the gate already proves member-wise: the lang CASE
@@ -5889,24 +5675,15 @@ def _corpus_funnel_oracle_sql() -> str | None:
     min-id dedups (dedup_exact/dedup_fingerprint), and the full
     portable MinHash pipeline at the funnel threshold's solver banding
     (minhash_neardup) with the pipeline's drop-greatest rule. Split is
-    excluded (xxhash64 has no external twin). Same unreadable-data
-    guard as the other data-dependent oracles.
+    excluded (xxhash64 has no external twin).
     """
-    import os
-
     from merchant_classification_spark.functions.portable_hash import (
         MERSENNE31,
         minhash_perms,
     )
     from merchant_classification_spark.operators.dedup import lsh_params
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    fit = _duckdb_quality_fit(f"{sf_dir}/documents.parquet")
-    if fit is None:
-        return None
-    weights, bias = fit
+    weights, bias = _quality_fit()
     wl = "[" + ", ".join(_dlit(x) for x in weights) + "]"
     bl = _dlit(bias)
     nbq = QUALITY_BUCKETS
@@ -6013,45 +5790,24 @@ def _corpus_funnel_oracle_sql() -> str | None:
     """
 
 
-_corpus_funnel_sql = _corpus_funnel_oracle_sql()
-if _corpus_funnel_sql is not None:
-    ORACLES["corpus_funnel"] = _corpus_funnel_sql
-
-
-def _temperature_mix_oracle_sql() -> str | None:
+def _temperature_mix_oracle_sql() -> str:
     """Full replay of q_temperature_mix: recompute the per-source counts
     in DuckDB, run the SAME shared pure-Python ``temperature_rates`` on
     them, inline the identical rate double literals, and replay the
     content-hash percentile admission (the corpus_mix md5 arithmetic) —
-    every mix_p/keep_rate double bit-exact. Same unreadable-data guard
-    as the other data-dependent oracles.
+    every mix_p/keep_rate double bit-exact.
     """
-    import os
-
-    import duckdb as _dd
-
     from merchant_classification_spark.operators.sampling import (
         temperature_rates,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        # NULL sources are dropped by temperature_mix (documented
-        # contract), so the replayed counts drop them too
-        rows = con.sql(
-            f"SELECT source, CAST(count(*) AS BIGINT) "
-            f"FROM read_parquet('{path}') "
-            f"WHERE source IS NOT NULL GROUP BY source"
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
+    # NULL sources are dropped by temperature_mix (documented contract),
+    # so the replayed counts drop them too
+    rows = _oracle_read(
+        "documents",
+        "SELECT source, CAST(count(*) AS BIGINT) FROM documents "
+        "WHERE source IS NOT NULL GROUP BY source",
+    )[0]
     counts = {str(s): int(c) for s, c in rows}
     rates = temperature_rates(counts, TEMP_MIX_ALPHA, TEMP_MIX_TOTAL)
     case = (
@@ -6077,96 +5833,112 @@ def _temperature_mix_oracle_sql() -> str | None:
     """
 
 
-_temp_mix_sql = _temperature_mix_oracle_sql()
-if _temp_mix_sql is not None:
-    ORACLES["temperature_mix"] = _temp_mix_sql
+@functools.cache
+def _bm25_stats(terms: tuple[str, ...]) -> tuple[str, dict[str, float]]:
+    """bm25_scores' corpus statistics for ``terms`` over the grading
+    documents: the length-norm SQL ``k1*((1-b) + b*(dl/avgdl))`` with
+    avgdl inlined, and each term's idf through the same ``math.log`` on
+    the same exact integer document frequencies."""
+    flags = ", ".join(
+        f"CAST(sum(CASE WHEN list_contains(toks, '{_esc(t)}') THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
+        for i, t in enumerate(terms)
+    )
+    row = _oracle_read(
+        "documents",
+        f"""
+            WITH t AS (SELECT {_SQL_TOKENS} AS toks FROM documents)
+            SELECT CAST(count(*) AS BIGINT) AS n,
+                   CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS dl_sum,
+                   {flags}
+            FROM t
+        """,
+    )[0][0]
+    n = int(row[0])
+    if n == 0:
+        raise ValueError("no documents rows to fit on")
+    idf = {
+        t: math.log(1.0 + (n - int(row[2 + i]) + 0.5) / (int(row[2 + i]) + 0.5))
+        for i, t in enumerate(terms)
+    }
+    norm = (
+        f"{_dlit(BM25_K1)} * ({_dlit(1.0 - BM25_B)} + {_dlit(BM25_B)} * "
+        f"(CAST(len(toks) AS DOUBLE) / {_dlit(float(row[1]) / float(n))}))"
+    )
+    return norm, idf
 
 
-def _bm25_oracle_sql() -> str | None:
+def _sql_tf(term: str) -> str:
+    return f"CAST(len(list_filter(toks, x -> x = '{_esc(term)}')) AS DOUBLE)"
+
+
+def _sql_bm25(terms: list[str], idf: dict[str, float]) -> str:
+    """bm25_scores' fold over ``terms`` in order:
+    ``s += ((idf * tf) * (k1+1)) / (tf + norm)``, norm read from ``nrm``."""
+    score = "0.0e0"
+    for term in terms:
+        tf = _sql_tf(term)
+        score = (
+            f"({score} + {_dlit(idf[term])} * {tf} * {_dlit(BM25_K1 + 1.0)}"
+            f" / ({tf} + nrm))"
+        )
+    return score
+
+
+@functools.cache
+def _query_bm25(n_queries: int, n_terms: int) -> tuple[str, list[tuple[int, str]]]:
+    """The batch-query leg of the hybrid and auto replays: the same
+    driver-side query-term selection (shared query_term_sets on the
+    texts of doc_id < n_queries), bm25 statistics for the union of the
+    selected terms, and each query's score chain in ITS term order.
+    Returns the norm SQL and ``(query_id, score SQL)`` per query."""
+    from merchant_classification_spark.operators.retrieval import (
+        query_term_sets,
+    )
+
+    qtexts = _oracle_read(
+        "documents",
+        f"SELECT doc_id, text FROM documents WHERE doc_id < {n_queries} "
+        f"ORDER BY doc_id",
+    )[0]
+    term_sets = [(q, ts) for q, ts in query_term_sets(qtexts, n_terms) if ts]
+    union = tuple(dict.fromkeys(t for _, ts in term_sets for t in ts))
+    if not union:
+        raise ValueError("no query terms")
+    norm, idf = _bm25_stats(union)
+    return norm, [(int(q), _sql_bm25(ts, idf)) for q, ts in term_sets]
+
+
+def _bm25_oracle_sql() -> str:
     """Full replay of q_bm25_retrieval: recompute the SAME document
     frequencies and total token count in DuckDB, run the same Python
     ``math.log`` on the same exact integers, and inline the identical
     idf/avgdl double literals — scoring is then a per-term
     ``len(list_filter(...))`` tf plus the SAME fixed-order float
-    arithmetic, so every bm25 double is bit-exact. Same guard as the
-    perplexity/DSIR oracles: unreadable grading data at import → None.
+    arithmetic, so every bm25 double is bit-exact.
     """
-    import math
-    import os
-
-    import duckdb as _dd
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        flags = ", ".join(
-            f"CAST(sum(CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
-            for i, t in enumerate(BM25_TERMS)
-        )
-        row = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d)
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS dl_sum,
-                   {flags}
-            FROM t
-            """
-        ).fetchall()[0]
-        con.close()
-    except Exception:
-        return None
-    n = int(row[0])
-    if n == 0:
-        return None
-    avgdl = float(row[1]) / float(n)
-    idfs = [
-        math.log(1.0 + (n - int(row[2 + i]) + 0.5) / (int(row[2 + i]) + 0.5))
-        for i in range(len(BM25_TERMS))
-    ]
-    # mirror bm25_scores exactly: norm = k1*((1-b) + b*(dl/avgdl));
-    # s += ((idf * tf) * (k1+1)) / (tf + norm), term order fixed
-    k1, b = BM25_K1, BM25_B
-    norm = (
-        f"{_dlit(k1)} * ({_dlit(1.0 - b)} + {_dlit(b)} * "
-        f"(CAST(len(toks) AS DOUBLE) / {_dlit(avgdl)}))"
-    )
-    score = "0.0e0"
+    norm, idf = _bm25_stats(tuple(BM25_TERMS))
     matched = "0"
-    for term, idf in zip(BM25_TERMS, idfs):
-        tf = f"CAST(len(list_filter(toks, x -> x = '{term}')) AS DOUBLE)"
-        score = (
-            f"({score} + {_dlit(idf)} * {tf} * {_dlit(BM25_K1 + 1.0)}"
-            f" / ({tf} + nrm))"
-        )
-        matched = f"({matched} + CASE WHEN {tf} > 0.0e0 THEN 1 ELSE 0 END)"
+    for term in BM25_TERMS:
+        matched = f"({matched} + CASE WHEN {_sql_tf(term)} > 0.0e0 THEN 1 ELSE 0 END)"
     return f"""
         WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
         w AS (SELECT doc_id, toks, {norm} AS nrm FROM t)
         SELECT doc_id,
                CAST(len(toks) AS INTEGER) AS n_tokens,
                CAST({matched} AS INTEGER) AS matched,
-               {score} AS bm25
+               {_sql_bm25(BM25_TERMS, idf)} AS bm25
         FROM w
     """
 
 
-_bm25_sql = _bm25_oracle_sql()
-if _bm25_sql is not None:
-    ORACLES["bm25_retrieval"] = _bm25_sql
-
-
-def _hybrid_oracle_sql(matched_only: bool = False) -> str | None:
+def _hybrid_oracle_sql(matched_only: bool = False) -> str:
     """Full replay of q_hybrid_retrieval: rerun the SAME driver-side
     query-term selection (shared query_term_sets on the same texts),
     recompute df/avgdl for the union term set in DuckDB and the idf
     literals through the same ``math.log``, score each query's literal
     branch in its term order, rank both legs, and fuse — rrf divides
     INTEGER ranks, so the fused doubles are the same two divisions and
-    one add on any engine. Same unreadable-data guard as bm25/ann.
+    one add on any engine.
 
     ``matched_only=True`` builds the q_hybrid_inverted replay: the
     inverted-index leg emits only matched (doc, query) pairs, and
@@ -6174,86 +5946,12 @@ def _hybrid_oracle_sql(matched_only: bool = False) -> str | None:
     contributions are exact +0.0 adds), so the lex branch gets a
     ``bm25 > 0`` filter before ranking — everything else is identical.
     """
-    import math
-    import os
-
-    import duckdb as _dd
-
-    from merchant_classification_spark.operators.retrieval import (
-        query_term_sets,
+    norm, legs = _query_bm25(HR_N_QUERIES, HR_TERMS)
+    lexall = "\nUNION ALL\n".join(
+        f"SELECT CAST({q} AS BIGINT) AS query_id, doc_id,"
+        f" {score} AS bm25 FROM w WHERE doc_id <> {q}"
+        for q, score in legs
     )
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        qtexts = con.sql(
-            f"SELECT doc_id, text FROM read_parquet('{path}') "
-            f"WHERE doc_id < {HR_N_QUERIES} ORDER BY doc_id"
-        ).fetchall()
-        term_sets = [
-            (q, ts)
-            for q, ts in query_term_sets(list(qtexts), HR_TERMS)
-            if ts
-        ]
-        union_terms: list[str] = []
-        for _, ts in term_sets:
-            for t in ts:
-                if t not in union_terms:
-                    union_terms.append(t)
-        if not union_terms:
-            con.close()
-            return None
-
-        def esc(t: str) -> str:
-            return t.replace("'", "''")
-
-        flags = ", ".join(
-            f"CAST(sum(CASE WHEN list_contains(toks, '{esc(t)}') THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
-            for i, t in enumerate(union_terms)
-        )
-        row = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d)
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS dl_sum,
-                   {flags}
-            FROM t
-            """
-        ).fetchall()[0]
-        con.close()
-    except Exception:
-        return None
-    n = int(row[0])
-    if n == 0:
-        return None
-    avgdl = float(row[1]) / float(n)
-    idf = {
-        t: math.log(1.0 + (n - int(row[2 + i]) + 0.5) / (int(row[2 + i]) + 0.5))
-        for i, t in enumerate(union_terms)
-    }
-    k1, b = BM25_K1, BM25_B
-    norm = (
-        f"{_dlit(k1)} * ({_dlit(1.0 - b)} + {_dlit(b)} * "
-        f"(CAST(len(toks) AS DOUBLE) / {_dlit(avgdl)}))"
-    )
-    branches = []
-    for qid, ts in term_sets:
-        score = "0.0e0"
-        for term in ts:
-            tf = f"CAST(len(list_filter(toks, x -> x = '{esc(term)}')) AS DOUBLE)"
-            score = (
-                f"({score} + {_dlit(idf[term])} * {tf} * {_dlit(k1 + 1.0)}"
-                f" / ({tf} + nrm))"
-            )
-        branches.append(
-            f"SELECT CAST({int(qid)} AS BIGINT) AS query_id, doc_id,"
-            f" {score} AS bm25 FROM w WHERE doc_id <> {int(qid)}"
-        )
-    lexall = "\nUNION ALL\n".join(branches)
     if matched_only:
         lexall = f"SELECT * FROM (\n{lexall}\n) WHERE bm25 > 0.0e0"
     return f"""
@@ -6301,102 +5999,19 @@ def _hybrid_oracle_sql(matched_only: bool = False) -> str | None:
     """
 
 
-_hybrid_sql = _hybrid_oracle_sql()
-if _hybrid_sql is not None:
-    ORACLES["hybrid_retrieval"] = _hybrid_sql
-_hybrid_inv_sql = _hybrid_oracle_sql(matched_only=True)
-if _hybrid_inv_sql is not None:
-    ORACLES["hybrid_inverted"] = _hybrid_inv_sql
-
-
-def _bm25_auto_oracle_sql() -> str | None:
+def _bm25_auto_oracle_sql() -> str:
     """Replay of q_bm25_auto: same driver-side query-term selection
     (shared query_term_sets on the same texts), df/avgdl recomputed in
     DuckDB with the idf literals through the same ``math.log``, each
     query's literal score chain in ITS term order over the shared
     tokenized CTE, matched filter ``bm25 > 0`` (the auto/inverted
-    contract), then row_number top-BMAUTO_K per query. Same
-    unreadable-data guard as the hybrid replay."""
-    import math
-    import os
-
-    import duckdb as _dd
-
-    from merchant_classification_spark.operators.retrieval import (
-        query_term_sets,
+    contract), then row_number top-BMAUTO_K per query."""
+    norm, legs = _query_bm25(BMAUTO_N_QUERIES, BMAUTO_TERMS)
+    lexall = "\nUNION ALL\n".join(
+        f"SELECT CAST({q} AS BIGINT) AS query_id, doc_id,"
+        f" {score} AS bm25 FROM w"
+        for q, score in legs
     )
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        qtexts = con.sql(
-            f"SELECT doc_id, text FROM read_parquet('{path}') "
-            f"WHERE doc_id < {BMAUTO_N_QUERIES} ORDER BY doc_id"
-        ).fetchall()
-        term_sets = [
-            (q, ts)
-            for q, ts in query_term_sets(list(qtexts), BMAUTO_TERMS)
-            if ts
-        ]
-        union_terms: list[str] = []
-        for _, ts in term_sets:
-            for t in ts:
-                if t not in union_terms:
-                    union_terms.append(t)
-        if not union_terms:
-            con.close()
-            return None
-
-        def esc(t: str) -> str:
-            return t.replace("'", "''")
-
-        flags = ", ".join(
-            f"CAST(sum(CASE WHEN list_contains(toks, '{esc(t)}') THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
-            for i, t in enumerate(union_terms)
-        )
-        row = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d)
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS dl_sum,
-                   {flags}
-            FROM t
-            """
-        ).fetchall()[0]
-        con.close()
-    except Exception:
-        return None
-    n = int(row[0])
-    if n == 0:
-        return None
-    avgdl = float(row[1]) / float(n)
-    idf = {
-        t: math.log(1.0 + (n - int(row[2 + i]) + 0.5) / (int(row[2 + i]) + 0.5))
-        for i, t in enumerate(union_terms)
-    }
-    k1, b = BM25_K1, BM25_B
-    norm = (
-        f"{_dlit(k1)} * ({_dlit(1.0 - b)} + {_dlit(b)} * "
-        f"(CAST(len(toks) AS DOUBLE) / {_dlit(avgdl)}))"
-    )
-    branches = []
-    for qid, ts in term_sets:
-        score = "0.0e0"
-        for term in ts:
-            tf = f"CAST(len(list_filter(toks, x -> x = '{esc(term)}')) AS DOUBLE)"
-            score = (
-                f"({score} + {_dlit(idf[term])} * {tf} * {_dlit(k1 + 1.0)}"
-                f" / ({tf} + nrm))"
-            )
-        branches.append(
-            f"SELECT CAST({int(qid)} AS BIGINT) AS query_id, doc_id,"
-            f" {score} AS bm25 FROM w"
-        )
-    lexall = "\nUNION ALL\n".join(branches)
     return f"""
         WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
         w AS (SELECT doc_id, toks, {norm} AS nrm FROM t),
@@ -6411,16 +6026,65 @@ def _bm25_auto_oracle_sql() -> str | None:
     """
 
 
-_bm25_auto_sql = _bm25_auto_oracle_sql()
-if _bm25_auto_sql is not None:
-    ORACLES["bm25_auto"] = _bm25_auto_sql
-
-
 #: pack budget for the BPE-token packing probe (bpe_pack)
 BPE_PACK_BUDGET = 512
 
 
-def _bpe_oracle_sql() -> str | None:
+@functools.cache
+def _word_freqs() -> dict[str, int]:
+    """The top-BPE_MAX_VOCAB word-frequency table (freq desc, word asc
+    — the same total tie-break as the Spark side) that the BPE and
+    unigram-LM tokenizers fit on."""
+    rows = _oracle_read(
+        "documents",
+        f"""
+            WITH t AS (SELECT {_SQL_TOKENS} AS toks FROM documents),
+            e AS (SELECT unnest(toks) AS word FROM t)
+            SELECT word, CAST(count(*) AS BIGINT) AS freq
+            FROM e GROUP BY word
+            ORDER BY freq DESC, word ASC
+            LIMIT {BPE_MAX_VOCAB}
+        """,
+    )[0]
+    return {str(w): int(f) for w, f in rows}
+
+
+@functools.cache
+def _bpe_vocab() -> str:
+    """The fitted BPE word → token-count table as VALUES rows: what the
+    bpe_tokens and bpe_pack replays both inline."""
+    from merchant_classification_spark.functions.bpe import fit_bpe
+
+    _, wnt = fit_bpe(_word_freqs(), BPE_MERGES, BPE_MIN_PAIR_FREQ)
+    return ", ".join(f"('{_esc(w)}', {n})" for w, n in sorted(wnt.items()))
+
+
+def _sql_word_counts(vals: str, per_word: str, total: str) -> str:
+    """Per-doc subword counts from a fitted word → count VALUES table:
+    unnest + left join + integer sums, a word outside the table counting
+    one token per character."""
+    return f"""
+        WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
+        e AS (SELECT doc_id, unnest(toks) AS word FROM t),
+        v(word, {per_word}) AS (SELECT * FROM (VALUES {vals})),
+        j AS (SELECT e.doc_id, e.word, v.{per_word}
+              FROM e LEFT JOIN v ON e.word = v.word),
+        a AS (SELECT doc_id,
+                     CAST(count(*) AS INTEGER) AS n_words,
+                     CAST(sum(coalesce({per_word}, length(word))) AS BIGINT)
+                         AS {total},
+                     CAST(sum(CASE WHEN {per_word} IS NULL THEN 1 ELSE 0 END)
+                          AS INTEGER) AS n_oov
+              FROM j GROUP BY doc_id)
+        SELECT t.doc_id,
+               coalesce(a.n_words, 0) AS n_words,
+               coalesce(a.{total}, 0) AS {total},
+               coalesce(a.n_oov, 0) AS n_oov
+        FROM t LEFT JOIN a ON t.doc_id = a.doc_id
+    """
+
+
+def _bpe_oracle_sql() -> str:
     """Full replay of q_bpe_tokens: recompute the word-frequency table
     in DuckDB (same tokenization replay as token_stats, same top-k cap
     with the same total tie-break), run the SAME deterministic fit on
@@ -6429,157 +6093,41 @@ def _bpe_oracle_sql() -> str | None:
     the distributed plumbing the oracle independently verifies is the
     tokenize/aggregate/join/sum path), inline the fitted word →
     token-count table as VALUES, and score with unnest + left join +
-    integer sums. Same guard as the other corpus screens: unreadable
-    grading data at import → None → the member degrades to absent.
+    integer sums.
     """
-    import os
-
-    import duckdb as _dd
-
-    from merchant_classification_spark.functions.bpe import fit_bpe
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        rows = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d),
-            e AS (SELECT unnest(toks) AS word FROM t)
-            SELECT word, CAST(count(*) AS BIGINT) AS freq
-            FROM e GROUP BY word
-            ORDER BY freq DESC, word ASC
-            LIMIT {BPE_MAX_VOCAB}
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    wf = {str(w): int(f) for w, f in rows}
-    _, wnt = fit_bpe(wf, BPE_MERGES, BPE_MIN_PAIR_FREQ)
-    vals = ", ".join(
-        f"('{w.replace(chr(39), chr(39) * 2)}', {n})"
-        for w, n in sorted(wnt.items())
-    )
-    # stash for the bpe_pack oracle (same fitted vocab, same corpus)
-    global _BPE_VALS
-    _BPE_VALS = vals
-    return f"""
-        WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
-        e AS (SELECT doc_id, unnest(toks) AS word FROM t),
-        v(word, word_tokens) AS (SELECT * FROM (VALUES {vals})),
-        j AS (SELECT e.doc_id, e.word, v.word_tokens
-              FROM e LEFT JOIN v ON e.word = v.word),
-        a AS (SELECT doc_id,
-                     CAST(count(*) AS INTEGER) AS n_words,
-                     CAST(sum(coalesce(word_tokens, length(word))) AS BIGINT)
-                         AS n_bpe_tokens,
-                     CAST(sum(CASE WHEN word_tokens IS NULL THEN 1 ELSE 0 END)
-                          AS INTEGER) AS n_oov
-              FROM j GROUP BY doc_id)
-        SELECT t.doc_id,
-               coalesce(a.n_words, 0) AS n_words,
-               coalesce(a.n_bpe_tokens, 0) AS n_bpe_tokens,
-               coalesce(a.n_oov, 0) AS n_oov
-        FROM t LEFT JOIN a ON t.doc_id = a.doc_id
-    """
+    return _sql_word_counts(_bpe_vocab(), "word_tokens", "n_bpe_tokens")
 
 
-_BPE_VALS: str | None = None
-_bpe_sql = _bpe_oracle_sql()
-if _bpe_sql is not None:
-    ORACLES["bpe_tokens"] = _bpe_sql
-
-
-def _unigram_oracle_sql() -> str | None:
+def _unigram_oracle_sql() -> str:
     """Full replay of q_unigram_tokens: recompute the word-frequency
     table in DuckDB (same tokenization, same top-k total tie-break),
     run the SAME deterministic ``fit_unigram_lm`` on those exact
     integer counts (shared pure function, like ``fit_bpe``), inline the
     fitted word → piece-count table as VALUES, and score with unnest +
-    left join + integer sums. Same unreadable-data guard as the BPE
-    oracle.
+    left join + integer sums.
     """
-    import os
-
-    import duckdb as _dd
-
     from merchant_classification_spark.functions.unigram_lm import (
         fit_unigram_lm,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    _, wnp = fit_unigram_lm(
+        _word_freqs(), UNILM_VOCAB, UNILM_ROUNDS, UNILM_MAX_PIECE
     )
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        con = _dd.connect()
-        rows = con.sql(
-            f"""
-            WITH d AS (SELECT text FROM read_parquet('{path}')),
-            t AS (SELECT {_SQL_TOKENS} AS toks FROM d),
-            e AS (SELECT unnest(toks) AS word FROM t)
-            SELECT word, CAST(count(*) AS BIGINT) AS freq
-            FROM e GROUP BY word
-            ORDER BY freq DESC, word ASC
-            LIMIT {BPE_MAX_VOCAB}
-            """
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    wf = {str(w): int(f) for w, f in rows}
-    _, wnp = fit_unigram_lm(wf, UNILM_VOCAB, UNILM_ROUNDS, UNILM_MAX_PIECE)
-    vals = ", ".join(
-        f"('{w.replace(chr(39), chr(39) * 2)}', {n})"
-        for w, n in sorted(wnp.items())
-    )
-    return f"""
-        WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
-        e AS (SELECT doc_id, unnest(toks) AS word FROM t),
-        v(word, word_pieces) AS (SELECT * FROM (VALUES {vals})),
-        j AS (SELECT e.doc_id, e.word, v.word_pieces
-              FROM e LEFT JOIN v ON e.word = v.word),
-        a AS (SELECT doc_id,
-                     CAST(count(*) AS INTEGER) AS n_words,
-                     CAST(sum(coalesce(word_pieces, length(word))) AS BIGINT)
-                         AS n_uni_tokens,
-                     CAST(sum(CASE WHEN word_pieces IS NULL THEN 1 ELSE 0 END)
-                          AS INTEGER) AS n_oov
-              FROM j GROUP BY doc_id)
-        SELECT t.doc_id,
-               coalesce(a.n_words, 0) AS n_words,
-               coalesce(a.n_uni_tokens, 0) AS n_uni_tokens,
-               coalesce(a.n_oov, 0) AS n_oov
-        FROM t LEFT JOIN a ON t.doc_id = a.doc_id
-    """
+    vals = ", ".join(f"('{_esc(w)}', {n})" for w, n in sorted(wnp.items()))
+    return _sql_word_counts(vals, "word_pieces", "n_uni_tokens")
 
 
-_unigram_sql = _unigram_oracle_sql()
-if _unigram_sql is not None:
-    ORACLES["unigram_tokens"] = _unigram_sql
-
-
-def _bpe_pack_oracle_sql() -> str | None:
+def _bpe_pack_oracle_sql() -> str:
     """Replay of q_bpe_pack — the BPE → pack_documents composition:
     per-doc BPE token counts from the SAME fitted vocab literal the
     bpe_tokens oracle inlines, then pack_documents' start-offset rule
     (prefix-sum window, pack = cum_before DIV budget) in BPE tokens.
     Proves the token-budget operators compose with real subword counts
     end-to-end, integer-exact."""
-    if _BPE_VALS is None:
-        return None
     return f"""
         WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
         e AS (SELECT doc_id, unnest(toks) AS word FROM t),
-        v(word, word_tokens) AS (SELECT * FROM (VALUES {_BPE_VALS})),
+        v(word, word_tokens) AS (SELECT * FROM (VALUES {_bpe_vocab()})),
         a AS (SELECT e.doc_id,
                      CAST(sum(coalesce(v.word_tokens, length(e.word)))
                           AS BIGINT) AS n_tokens
@@ -6605,11 +6153,6 @@ def _bpe_pack_oracle_sql() -> str | None:
     """
 
 
-_bpe_pack_sql = _bpe_pack_oracle_sql()
-if _bpe_pack_sql is not None:
-    ORACLES["bpe_pack"] = _bpe_pack_sql
-
-
 def _pii_oracle_sql() -> str:
     """Progressive scrub chain mirroring functions/pii.py exactly: same
     patterns (dialect-portable, so the literal strings are reused), same
@@ -6628,7 +6171,7 @@ def _pii_oracle_sql() -> str:
     ctes = [f"s0 AS ({inject})"]
     carried: list[str] = []
     for i, ((pat, tok), name) in enumerate(zip(PII_STEPS, names)):
-        p = pat.replace("'", "''")
+        p = _esc(pat)
         cols = ", ".join(["doc_id"] + carried)
         ctes.append(
             f"s{i + 1} AS (SELECT {cols}, "
@@ -7934,8 +7477,8 @@ SUITES: dict[str, list[str]] = {
         "stratified_hash_sample",
     ],
     # singleton suites (graded standalone): the portable-hash LSH tier,
-    # promoted from rows-only in round 4 — their md5-scheme pipelines now
-    # have exact DuckDB replays including candidate generation
+    # whose md5-scheme pipelines have exact DuckDB replays including
+    # candidate generation
     "minhash_neardup": ["minhash_neardup"],
     "simhash_neardup": ["simhash_neardup"],
     "embedding_neardup_lsh": ["embedding_neardup_lsh"],
@@ -7945,108 +7488,56 @@ SUITES: dict[str, list[str]] = {
     "grouped_linear_fit": ["grouped_linear_fit"],
 }
 
-# the portable-quantizer IVF, promoted from rows-only in round 5 — its
-# deterministic fit lets the oracle inline identical centroid literals.
-# Guarded: if the oracle build could not read the grading data at import
-# time, the query degrades to rows-only instead of breaking the gate.
-if "ann_ivf" in ORACLES:
-    SUITES["ann_ivf"] = ["ann_ivf"]
-# IVF-PQ with ADC + refine joins the exact-ANN suite (round 9): coarse
-# cells + per-subspace codebooks refit from the shared stride sample,
-# literal-backed ADC fold and exact-L2 rescore replayed in DuckDB; same
-# data-dependent-oracle guard (no oracle -> member left out, operator
-# stays pytest-covered).
-if "ann_pq" in ORACLES:
-    SUITES["ann_exact_suite"].append("ann_pq")
-# cluster-balanced diversity subsampling joins the embedding suite
-# (round 9): literal-centroid cells + portable-md5 rank cap, admitted
-# set replayed exactly; same guard.
-if "diversity_sample" in ORACLES:
-    SUITES["embedding_suite"].append("diversity_sample")
-# SemDeDup folds into the embedding suite as a graded member (round 5);
-# same literal-centroid guard as ann_ivf — without an oracle the member
-# is left out (the operator stays pytest-covered) so the suite's grade
-# never degrades.
-if "semantic_dedup" in ORACLES:
-    SUITES["embedding_suite"].append("semantic_dedup")
-# CCNet-style perplexity screen folds into the document-metrics suite
-# (round 5); same data-dependent-oracle guard as ann_ivf/semantic_dedup.
-if "perplexity_filter" in ORACLES:
-    SUITES["doc_metrics_suite"].append("perplexity_filter")
-# stupid-backoff bigram LM screen joins the same suite (round 7): both
-# count tables recomputed in DuckDB, same Python log chain, fold seeded
-# at the first token's score; same data-dependent-oracle guard.
-if "bigram_perplexity" in ORACLES:
-    SUITES["doc_metrics_suite"].append("bigram_perplexity")
-# model-based language ID joins the same suite (round 8): md5-ranked
-# per-language curated-label sample recomputed in DuckDB, shared
-# pure-Python softmax fit, literal-weights K-fold scoring + first-wins
-# argmax replay; same data-dependent-oracle guard.
-if "lang_model" in ORACLES:
-    SUITES["doc_metrics_suite"].append("lang_model")
-# DSIR importance weights fold into the corpus-vocabulary suite (round
-# 5); same data-dependent-oracle guard — without an oracle the member is
-# left out (the operator stays pytest-covered).
-if "dsir_weights" in ORACLES:
-    SUITES["vocab_suite"].append("dsir_weights")
-# BM25 lexical retrieval scoring joins the same suite (round 5); same
-# data-dependent-oracle guard.
-if "bm25_retrieval" in ORACLES:
-    SUITES["vocab_suite"].append("bm25_retrieval")
-# hybrid retrieval (BM25 ⊕ cosine, reciprocal rank fusion) joins the
-# same suite (round 9): shared query-term selection, literal idf
-# branches, exact cosine ranks, integer-rank fusion; same guard.
-if "hybrid_retrieval" in ORACLES:
-    SUITES["vocab_suite"].append("hybrid_retrieval")
-# its inverted-index twin (round 10): the unbounded-query-batch tier —
-# explode tokens ⋈ broadcast term table, per-(doc,query) ordered fold —
-# graded against the same replay with the lex branch filtered to
-# matched pairs; same guard.
-if "hybrid_inverted" in ORACLES:
-    SUITES["vocab_suite"].append("hybrid_inverted")
-# the auto-dispatcher AT the crossover (round 11): a 24-query batch
-# through bm25_scores_auto grades the production dispatch path itself
-# (inverted branch + matched-pairs contract + top-k); same guard.
-if "bm25_auto" in ORACLES:
-    SUITES["vocab_suite"].append("bm25_auto")
-# CCNet-style curated-vs-crawl quality classifier joins the same suite
-# (round 7): the oracle recomputes the md5-ranked training sample in
-# DuckDB, shares the deterministic pure-Python LR fit, and replays
-# scoring with literal weights; same data-dependent-oracle guard.
-if "quality_model" in ORACLES:
-    SUITES["vocab_suite"].append("quality_model")
-# deterministic BPE subword tokenization joins the corpus-vocabulary
-# suite (round 6); same data-dependent-oracle guard — the oracle refits
-# the merge table from DuckDB-recomputed word counts at import.
-if "bpe_tokens" in ORACLES:
-    SUITES["vocab_suite"].append("bpe_tokens")
-# unigram-LM (SentencePiece-style) tokenizer joins the same suite
-# (round 8): word counts recomputed in DuckDB, shared deterministic
-# hard-EM fit, VALUES vocab replay; same data-dependent-oracle guard.
-if "unigram_tokens" in ORACLES:
-    SUITES["vocab_suite"].append("unigram_tokens")
-# the BPE → pack_documents composition joins the chunk/pack suite
-# (round 6): packs cut in fitted subword tokens, same oracle guard.
-if "bpe_pack" in ORACLES:
-    SUITES["chunk_pack_suite"].append("bpe_pack")
-# temperature-rebalanced source mixing joins the corpus-composition
-# suite (round 7): counts recomputed in DuckDB, shared pure-Python rate
-# fit, literal-rate percentile admission; same oracle guard.
-if "temperature_mix" in ORACLES:
-    SUITES["chunk_pack_suite"].append("temperature_mix")
-# the corpus-prep funnel composition (round 8): prepare_corpus graded
-# end-to-end — screens -> LR gate -> PII scrub -> exact/fingerprint/
-# MinHash dedup ladder — as ONE admitted-set replay. It joins the dedup
-# suite as a member (NOT a new singleton suite): the driver grades only
-# the first 50 declared queries, and a 47th suite would push the last
-# rows-only entry out of the window. Same data-dependent-oracle guard.
-if "corpus_funnel" in ORACLES:
-    SUITES["dedup_suite"].append("corpus_funnel")
+#: the data-dependent oracles as (member, suite, builder), in suite
+#: append order. Each builder fits on the grading data at import; the loop
+#: below is their one guard. A member whose builder raises (unreadable or
+#: empty grading data, or a fit that rejects it) is left out with a
+#: warning: out of its suite when it shares one, so the suite's grade
+#: never degrades (the operator stays pytest-covered), and graded
+#: rows-only when it is its own suite.
+_DATA_ORACLES: list[tuple[str, str, Callable[[], str]]] = [
+    ("ann_ivf", "ann_ivf", _ann_ivf_oracle_sql),
+    ("ann_pq", "ann_exact_suite", _ann_pq_oracle_sql),
+    ("diversity_sample", "embedding_suite", _diversity_sample_oracle_sql),
+    ("semantic_dedup", "embedding_suite", _semantic_dedup_oracle_sql),
+    ("perplexity_filter", "doc_metrics_suite", _perplexity_oracle_sql),
+    ("bigram_perplexity", "doc_metrics_suite", _bigram_perplexity_oracle_sql),
+    ("lang_model", "doc_metrics_suite", _lang_model_oracle_sql),
+    ("dsir_weights", "vocab_suite", _dsir_oracle_sql),
+    ("bm25_retrieval", "vocab_suite", _bm25_oracle_sql),
+    ("hybrid_retrieval", "vocab_suite", _hybrid_oracle_sql),
+    ("hybrid_inverted", "vocab_suite", lambda: _hybrid_oracle_sql(matched_only=True)),
+    ("bm25_auto", "vocab_suite", _bm25_auto_oracle_sql),
+    ("quality_model", "vocab_suite", _quality_oracle_sql),
+    ("bpe_tokens", "vocab_suite", _bpe_oracle_sql),
+    ("unigram_tokens", "vocab_suite", _unigram_oracle_sql),
+    ("bpe_pack", "chunk_pack_suite", _bpe_pack_oracle_sql),
+    ("temperature_mix", "chunk_pack_suite", _temperature_mix_oracle_sql),
+    # a member of the dedup suite, NOT a singleton suite: the driver
+    # grades only the first 50 declared queries, and a 47th suite would
+    # push the last rows-only entry out of the window
+    ("corpus_funnel", "dedup_suite", _corpus_funnel_oracle_sql),
+]
+_ungraded: list[str] = []
+for _member, _suite, _build in _DATA_ORACLES:
+    try:
+        ORACLES[_member] = _build()
+    except Exception as _exc:  # degrade the member; import never breaks
+        _fate = "graded rows-only" if _suite == _member else f"left out of {_suite}"
+        warnings.warn(f"no oracle for {_member} ({_fate}): {_exc!r}")
+        if _suite == _member:
+            _ungraded.append(_member)
+        continue
+    SUITES.setdefault(_suite, []).append(_member)
+# the shared fits are only needed while the table builds
+for _fit in (_fit_sample, _token_counts, _quality_fit, _bm25_stats,
+             _query_bm25, _word_freqs, _bpe_vocab):
+    _fit.cache_clear()
 
 # rows-only (no SQL oracle can exist): declared LAST, after every graded
 # suite — KMeans/seeded-rand/sketch/ML ops
 ROWS_ONLY: list[str] = [
-    *([] if "ann_ivf" in ORACLES else ["ann_ivf"]),
+    *_ungraded,
     "sampling_suite",
     "approx_sketches",
     "hll_rollup",
@@ -8060,15 +7551,13 @@ def _suite_query(names: list[str]) -> Callable[[SparkSession, str], DataFrame]:
         # (the checkpoint-and-release dedup joins) overlap their jobs on
         # the idle cores each leaves during its serial tail. Union order
         # stays the declared member order, so output is deterministic.
-        # The pool is capped (default 4, SPARK_SUITE_BUILD_WORKERS to
-        # override): unbounded concurrency would materialize every eager
-        # member at once and spike peak memory in sessions whose config
-        # this module doesn't control (e.g. the external grading gate).
-        import os
+        # The pool is capped at 4: unbounded concurrency would materialize
+        # every eager member at once and spike peak memory in sessions
+        # whose config this module doesn't control (e.g. the external
+        # grading gate).
         from concurrent.futures import ThreadPoolExecutor
 
-        cap = max(1, int(os.environ.get("SPARK_SUITE_BUILD_WORKERS", "4")))
-        with ThreadPoolExecutor(max_workers=min(len(names), cap)) as ex:
+        with ThreadPoolExecutor(max_workers=min(len(names), 4)) as ex:
             parts = list(
                 ex.map(lambda n: BRANCH_QUERIES[n](spark, sf_dir), names)
             )

@@ -56,8 +56,9 @@ reproduces minutes later.
 - tools/bench_compare.py flags a member whose median moved beyond tolerance
   with non-overlapping rep spreads. Offenders are timed again and any left
   exit 3 ($SPARK_GRAFT_BENCH_COMPARE=0 reports without failing).
-When the artifact was measured at another core count than this session the
-gate is report-only: members legitimately scale with cores.
+When the artifact was measured at another core count or scale factor than
+this session the gate is report-only (its line carries "cpus_mismatch" /
+"sf_mismatch"): members legitimately scale with both.
 
 Data dir from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1);
 parallelism from $SPARK_GRAFT_CPUS (default all cores).
@@ -334,12 +335,14 @@ def floor_probe(metric: str, unit: str, measure, floor=None, best=None):
     return value, violated
 
 
-def _gate_cpus_mismatch(prev: dict, cpus: int) -> bool:
-    """True when the committed artifact was measured at a different core
-    count than this session: the regression gate then only reports (no
+def _gate_mismatch(prev: dict, cpus: int, sf: float) -> list[str]:
+    """The artifact fields ("cpus", "sf") whose value differs from this
+    session's. When any does, the regression gate only reports (no
     re-measures, no nonzero exit), because member times legitimately
-    shift with the core count. Artifacts without "cpus" gate as usual."""
-    return prev.get("cpus") is not None and prev.get("cpus") != cpus
+    shift with the core count and the scale factor. A field the
+    artifact lacks gates as usual."""
+    here = {"cpus": cpus, "sf": sf}
+    return [k for k, v in here.items() if prev.get(k) is not None and prev[k] != v]
 
 
 def _remeasure_queries(prev_q: dict, timings, query_spread, time_query):
@@ -477,14 +480,14 @@ def main() -> None:
     # the artifact on disk is the last committed run when the tree is
     # clean, which is how the bench is meant to be invoked
     compare_report = None
-    cpus_mismatch = False
+    mismatch: list[str] = []
     if members and out_path and os.path.exists(out_path):
         try:
             bc = _load_bench_compare()
             with open(out_path) as f:
                 prev = json.load(f)
-            cpus_mismatch = _gate_cpus_mismatch(prev, cpus)
-            if cpus_mismatch:
+            mismatch = _gate_mismatch(prev, cpus, sf)
+            if mismatch:
                 compare_report = bc.compare(
                     prev, {"members": members, "member_spread": member_spread}
                 )
@@ -547,8 +550,8 @@ def main() -> None:
         line = dict(compare_report)
         if isinstance(line.get("offenders"), list):
             line["offenders"] = len(line["offenders"])
-        if cpus_mismatch:
-            line["cpus_mismatch"] = True
+        for k in mismatch:
+            line[f"{k}_mismatch"] = True
         print(json.dumps({"metric": "bench_regression_gate", **line}))
     print(
         json.dumps(
@@ -569,7 +572,7 @@ def main() -> None:
     if (
         compare_report is not None
         and compare_report.get("offenders")
-        and not cpus_mismatch
+        and not mismatch
         and os.environ.get("SPARK_GRAFT_BENCH_COMPARE", "1") != "0"
     ):
         sys.exit(3)

@@ -241,12 +241,22 @@ def _deterministic_kmeans(
     centroid (a coarse quantizer needs rough cells, not convergence) —
     this never sees more than ``fit_target`` vectors regardless of
     table size.
+
+    A NaN/inf fit vector raises ``ValueError`` naming its row index: it
+    would otherwise turn its cell's centroid into NaN and silently
+    poison every cell assignment downstream.
     """
     import numpy as np
 
     X = np.asarray(vectors, dtype=np.float64)
     if X.ndim != 2 or len(X) == 0:
         raise ValueError("fit sample must be a non-empty list of vectors")
+    bad = ~np.isfinite(X).all(axis=1)
+    if bad.any():
+        raise ValueError(
+            f"_deterministic_kmeans: fit vector {int(bad.argmax())} "
+            "has a NaN or infinite value"
+        )
     k = min(k, len(X))
     # evenly spaced over the ordered sample: deterministic and spread
     C = X[[(i * len(X)) // k for i in range(k)]].copy()

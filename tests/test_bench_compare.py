@@ -110,10 +110,14 @@ def _load_bench():
 
 def test_gate_is_report_only_across_core_counts():
     bench = _load_bench()
-    assert bench._gate_cpus_mismatch({"cpus": 32}, 8) is True
-    assert bench._gate_cpus_mismatch({"cpus": 32}, 32) is False
-    # artifacts predating the field keep the old always-gating behavior
-    assert bench._gate_cpus_mismatch({}, 8) is False
+    assert bench._gate_mismatch({"cpus": 32, "sf": 0.1}, 8, 0.1) == ["cpus"]
+    assert bench._gate_mismatch({"cpus": 32, "sf": 0.1}, 32, 0.1) == []
+    # a run at another scale factor only reports too
+    assert bench._gate_mismatch({"cpus": 8, "sf": 0.1}, 8, 0.01) == ["sf"]
+    assert bench._gate_mismatch({"cpus": 32, "sf": 0.1}, 8, 0.01) == ["cpus", "sf"]
+    # artifacts predating a field keep the old always-gating behavior
+    assert bench._gate_mismatch({}, 8, 0.01) == []
+    assert bench._gate_mismatch({"cpus": 8}, 8, 0.01) == []
 
 
 def test_headline_line_with_per_query_map_fits_tail_capture():

@@ -185,6 +185,11 @@ def test_deterministic_kmeans_properties():
 
     with _pt.raises(ValueError):
         _deterministic_kmeans([], 4)
+    # a NaN/inf fit vector is named by row, not fitted into a NaN centroid
+    with _pt.raises(ValueError, match="fit vector 0 has a NaN"):
+        _deterministic_kmeans([[float("nan"), 2.0], [1.0, 1.0]], 2, 5)
+    with _pt.raises(ValueError, match="fit vector 2 has a NaN or infinite"):
+        _deterministic_kmeans([[0.0, 0.0], [1.0, 1.0], [1.0, float("-inf")]], 2)
 
 
 def test_semantic_dedup_matches_naive_replay(spark, emb):
